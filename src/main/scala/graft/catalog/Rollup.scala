@@ -195,8 +195,8 @@ object Rollup {
   }
 
   /** Fold every batch partition into one `batch_id=_base` partition and
-    * record the folded ids in the ledger. Staged-then-swap like
-    * [[Tables.compact]]: a crash mid-swap leaves the data intact at
+    * record the folded ids in the ledger. Staged-then-swap: a crash
+    * mid-swap leaves the data intact at
     * `<path>.compact.old` (recovery = rename it back, or just call
     * compact again — it probes for and restores a stranded `.old` first);
     * concurrent READERS during the swap can hit a transient

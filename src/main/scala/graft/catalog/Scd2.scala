@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * such intervals; this operator is the write path that maintains them.
   *
   * [[applyChanges]] is a pure DataFrame transform (storage is
-  * orthogonal — persist the result via [[Mutate.upsert]] keyed by
-  * (key, valid_from), or snapshot it with [[Snapshots]]):
+  * orthogonal — persist the result via [[Snapshots.applyKeyed]] keyed
+  * by (key, valid_from)):
   *
   *   1. closed versions (`valid_to` set) pass through UNTOUCHED —
   *      history is immutable;

@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
 
 /** Manifest-based table snapshots: versioned reads, time travel, and
-  * copy-on-write commits over an immutable file pool — the metadata layer
-  * that removes the "no concurrent readers" constraint [[Tables.compact]]
-  * and [[Mutate]] carry. The reference pipeline rewrites whole LMDB
+  * copy-on-write commits over an immutable file pool. No commit renames
+  * or swaps a live directory (keyed upsert/delete and compaction
+  * included), so readers never wait for a writer. The reference
+  * pipeline rewrites whole LMDB
   * datasets per request (`/root/reference/serialize.py:434-492` — every
   * serialize is a fresh environment, no versioning, no readers-during-
   * write story); a 100 TB corpus needs the opposite: writers publish a
@@ -297,7 +298,7 @@ object Snapshots {
             throw new IllegalArgumentException(
               s"snapshots: partition column $c has a non-filesystem-plain " +
                 s"or null value (dir '$value'); partition values must be " +
-                "plain (Mutate.PlainPartition contract)")
+                "non-null and need no hive path escaping")
           moveFiles(pd.getPath, value)
         }
       case None => moveFiles(tmp, "")
@@ -456,40 +457,25 @@ object Snapshots {
     v
   }
 
-  /** Keyed upsert on a versioned table: [[Mutate.upsert]] semantics
-    * (same-key rows replaced in their own partition, new keys inserted)
-    * published as one snapshot commit. The batch must carry the partition
-    * column (that is what keeps a 100 TB upsert from scanning the table:
-    * only the NAMED partitions are read, via manifest pruning); a key
-    * that moves partitions must be delete + insert. Unlike Mutate's
-    * directory swap, readers are never constrained: old versions remain
-    * readable, and the pre-mutation state is one time-travel read away —
-    * the natural audit log for GDPR-style erasure. */
+  /** Keyed upsert on a versioned table: rows of `updates` replace
+    * same-key rows in their own partition, new keys insert, published as
+    * one snapshot commit. The batch must carry the full table schema,
+    * including the partition column (that is what keeps a 100 TB upsert
+    * from scanning the table: only the NAMED partitions are read, via
+    * manifest pruning); a key that moves partitions must be delete +
+    * insert. Readers are never constrained: old versions remain readable,
+    * and the pre-mutation state is one time-travel read away — the
+    * natural audit log for GDPR-style erasure. */
   def upsert(spark: SparkSession, dir: String, updates: DataFrame,
-             keyCols: Seq[String]): Int = {
-    require(keyCols.nonEmpty, "snapshots: keyCols must be non-empty")
-    val cur = readManifest(spark, dir, currentVersion(spark, dir)).get
-    val partCol = cur.partCol.getOrElse(
-      throw new IllegalArgumentException(s"snapshots: $dir is not partitioned"))
-    val values = updates.select(col(partCol).cast("string")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    require(values.nonEmpty, "snapshots: empty batch")
-    require(!values.contains(null), s"snapshots: null $partCol in upsert batch")
-    val sorted = values.sorted
-    // read-modify-write against the PINNED version: a concurrent commit
-    // between here and the manifest write raises CME instead of being
-    // silently overwritten
-    val base = readPartitions(spark, dir, sorted, Some(cur.version))
-    require(base.columns.toSet == updates.columns.toSet,
-      s"snapshots: updates schema ${updates.columns.sorted.mkString(",")} != " +
-        s"table schema ${base.columns.sorted.mkString(",")}")
-    val keep = base.join(broadcast(updates.select(keyCols.map(col): _*)),
-      keyCols, "left_anti")
-    replacePartitionsRaw(spark, dir,
-      clustered(keep.unionByName(updates.select(base.columns.map(col): _*)),
-        cur.partCol),
-      base = Some(cur))
-  }
+             keyCols: Seq[String]): Int =
+    requireNonEmpty(keyedCommit(spark, dir, None, Some(updates), keyCols))
+
+  /** Keyed delete on a versioned table: rows matching `deleteKeys` are
+    * removed; `deleteKeys` must carry the partition column. A partition
+    * left empty disappears from the new manifest. */
+  def delete(spark: SparkSession, dir: String, deleteKeys: DataFrame,
+             keyCols: Seq[String]): Int =
+    requireNonEmpty(keyedCommit(spark, dir, Some(deleteKeys), None, keyCols))
 
   /** Combined keyed delete + upsert published as ONE snapshot commit:
     * exactly `delete(deleteKeys)` followed by `upsert(updates)`, minus a
@@ -498,75 +484,60 @@ object Snapshots {
     * manifest replace the two of each the sequential calls pay. The CDC
     * consumers ([[graft.operators.InvertedIndex.maintainPairs]]) apply a
     * change feed's deletes and inserts together, so at any scale this
-    * halves the commit cost of following a mutating table. Both batches
-    * must carry the partition column; either may be empty (an empty side
-    * degrades to plain upsert/delete); when both are empty no commit is
-    * made and None is returned. Same optimistic-concurrency contract as
-    * [[upsert]]: the read-modify-write is pinned to the current version
-    * and a racing commit raises ConcurrentModificationException. */
+    * halves the commit cost of following a mutating table. Either batch
+    * may be empty (an empty side degrades to plain upsert/delete); when
+    * both are empty no commit is made and None is returned. */
   def applyKeyed(spark: SparkSession, dir: String, deleteKeys: DataFrame,
-                 updates: DataFrame, keyCols: Seq[String]): Option[Int] = {
+                 updates: DataFrame, keyCols: Seq[String]): Option[Int] =
+    keyedCommit(spark, dir, Some(deleteKeys), Some(updates), keyCols)
+
+  private def requireNonEmpty(committed: Option[Int]): Int =
+    committed.getOrElse(throw new IllegalArgumentException(
+      "requirement failed: snapshots: empty batch"))
+
+  /** The one keyed read-modify-write behind [[upsert]], [[delete]] and
+    * [[applyKeyed]]: read only the partitions either side names, drop
+    * every row whose key is in either side (broadcast anti-join), add the
+    * updates, and replace exactly those partitions. Every touched
+    * partition is in `dropValues`, so one left empty (pure deletes) leaves
+    * the manifest. The read is PINNED to the current version: a commit
+    * landing in between makes the manifest write raise
+    * ConcurrentModificationException instead of silently building on
+    * files this commit never read. None when both sides are empty. */
+  private def keyedCommit(spark: SparkSession, dir: String,
+                          deleteKeys: Option[DataFrame], updates: Option[DataFrame],
+                          keyCols: Seq[String]): Option[Int] = {
     require(keyCols.nonEmpty, "snapshots: keyCols must be non-empty")
     val cur = readManifest(spark, dir, currentVersion(spark, dir)).get
     val partCol = cur.partCol.getOrElse(
       throw new IllegalArgumentException(s"snapshots: $dir is not partitioned"))
-    require(deleteKeys.columns.contains(partCol),
-      s"snapshots: deleteKeys must carry $partCol")
-    // ONE job surfaces both sides' touched partitions (the sequential path
-    // paid two isEmpty probes plus two distinct-collect jobs)
-    val values = deleteKeys.select(col(partCol).cast("string"))
-      .unionAll(updates.select(col(partCol).cast("string")))
+    deleteKeys.foreach(d => require(d.columns.contains(partCol),
+      s"snapshots: deleteKeys must carry $partCol"))
+    val sides = deleteKeys.toSeq ++ updates
+    // ONE job surfaces both sides' touched partitions
+    val values = sides.map(_.select(col(partCol).cast("string"))).reduce(_ unionAll _)
       .distinct().collect().map(_.getString(0)).toSeq
     if (values.isEmpty) return None
-    require(!values.contains(null), s"snapshots: null $partCol in applyKeyed batch")
+    require(!values.contains(null), s"snapshots: null $partCol in keyed batch")
     val sorted = values.sorted
     val base = readPartitions(spark, dir, sorted, Some(cur.version))
-    require(base.columns.toSet == updates.columns.toSet,
-      s"snapshots: updates schema ${updates.columns.sorted.mkString(",")} != " +
-        s"table schema ${base.columns.sorted.mkString(",")}")
-    // delete-then-upsert net effect: base minus BOTH key sets, plus updates
-    val rmKeys = deleteKeys.select(keyCols.map(col): _*)
-      .unionAll(updates.select(keyCols.map(col): _*))
+    updates.foreach(u => require(base.columns.toSet == u.columns.toSet,
+      s"snapshots: updates schema ${u.columns.sorted.mkString(",")} != " +
+        s"table schema ${base.columns.sorted.mkString(",")}"))
+    val rmKeys = sides.map(_.select(keyCols.map(col): _*)).reduce(_ unionAll _)
     val keep = base.join(broadcast(rmKeys), keyCols, "left_anti")
-    // dropValues = every touched partition: one left empty (pure deletes)
-    // must leave the manifest; the rest are rewritten by the pool write
-    Some(replacePartitionsRaw(spark, dir,
-      clustered(keep.unionByName(updates.select(base.columns.map(col): _*)),
-        cur.partCol),
+    val merged = updates.fold(keep)(u => keep.unionByName(u.select(base.columns.map(col): _*)))
+    Some(replacePartitionsRaw(spark, dir, clustered(merged, cur.partCol),
       dropValues = sorted, base = Some(cur)))
-  }
-
-  /** Keyed delete on a versioned table: rows matching `deleteKeys` are
-    * removed; `deleteKeys` must carry the partition column. A partition
-    * left empty disappears from the new manifest. */
-  def delete(spark: SparkSession, dir: String, deleteKeys: DataFrame,
-             keyCols: Seq[String]): Int = {
-    require(keyCols.nonEmpty, "snapshots: keyCols must be non-empty")
-    val cur = readManifest(spark, dir, currentVersion(spark, dir)).get
-    val partCol = cur.partCol.getOrElse(
-      throw new IllegalArgumentException(s"snapshots: $dir is not partitioned"))
-    require(deleteKeys.columns.contains(partCol),
-      s"snapshots: deleteKeys must carry $partCol")
-    val values = deleteKeys.select(col(partCol).cast("string")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    require(values.nonEmpty, "snapshots: empty batch")
-    require(!values.contains(null), s"snapshots: null $partCol in delete batch")
-    val sorted = values.sorted
-    val base = readPartitions(spark, dir, sorted, Some(cur.version))
-    val keep = base.join(broadcast(deleteKeys.select(keyCols.map(col): _*)),
-      keyCols, "left_anti")
-    replacePartitionsRaw(spark, dir, clustered(keep, cur.partCol),
-      dropValues = sorted, base = Some(cur))
   }
 
   /** Small-file compaction as a normal snapshot commit (the OPTIMIZE
     * analogue): rewrite each of `values`' partitions into `filesPer`
     * files — sorted within files by `sortBy` when given, which tightens
     * the per-file min/max ranges [[readWhere]] prunes on — and publish as
-    * a new version. Built ON [[replacePartitions]], so unlike
-    * [[Tables.compact]]'s directory swap there is NO reader constraint:
-    * a reader holding the old manifest keeps its immutable files until
-    * [[vacuum]] retention. Data is byte-identical (same rows, new file
+    * a new version. Built ON [[replacePartitions]], so there is NO reader
+    * constraint: a reader holding the old manifest keeps its immutable
+    * files until [[vacuum]] retention. Data is byte-identical (same rows, new file
     * boundaries); time travel to the pre-compaction version still works. */
   def compactPartitions(spark: SparkSession, dir: String, values: Seq[String],
                         filesPer: Int = 1, sortBy: Option[String] = None): Int = {

@@ -1,6 +1,5 @@
 package graft.catalog
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.LongType
@@ -397,58 +396,5 @@ object Tables {
   private def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
     f.delete(); ()
-  }
-
-  /** Compact a parquet directory's small files into ~`targetBytes` ones.
-    * Streaming sinks and per-batch index appends accumulate files far
-    * below the HDFS-block/row-group sweet spot; at 100 TB the resulting
-    * open-cost and footer overhead dominate scan time, so compaction is a
-    * first-class maintenance operator, not a nicety.
-    *
-    * `coalesce` (not `repartition`): merging needs no shuffle — each
-    * output task concatenates whole input splits. Rewrite is
-    * staged-then-swap: write to `<dir>.compact.tmp`, move the original to
-    * `<dir>.compact.old`, move tmp in place, drop old — a crash leaves
-    * either the original or a complete compacted copy plus leftovers to
-    * sweep, never a partial directory under the live name. NOTE the swap
-    * is two renames, not atomic: between them the live path does not
-    * exist, so run compaction without concurrent readers (or make readers
-    * retry path-not-found); a crash in that window strands the data at
-    * `<dir>.compact.old` — recovery is renaming it back (compact probes
-    * for and restores a stranded `.old` on its next run). Returns the
-    * output file count. */
-  def compact(spark: SparkSession, dir: String,
-              targetBytes: Long = 128L * 1024 * 1024): Long = {
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stranded = new Path(dir + ".compact.old")
-    if (!fs.exists(path) && fs.exists(stranded)) {
-      // crashed between rename(live→old) and rename(tmp→live): restore
-      if (!fs.rename(stranded, path))
-        throw new java.io.IOException(s"compact: cannot restore stranded $stranded")
-    }
-    require(fs.exists(path), s"nothing to compact at $dir")
-    // partitioned layouts must compact per leaf: a whole-tree rewrite
-    // would fold the partition column into the data files and destroy
-    // pruning (and would conflict with writers targeting one partition)
-    val partChild = fs.listStatus(path)
-      .find(st => st.isDirectory && st.getPath.getName.contains("="))
-    require(partChild.isEmpty,
-      s"$dir is partitioned (${partChild.get.getPath.getName}); compact its leaf directories individually")
-    val totalBytes = fs.getContentSummary(path).getLength
-    val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes)
-    val tmp = new Path(dir + ".compact.tmp")
-    val old = new Path(dir + ".compact.old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    spark.read.parquet(dir).coalesce(nOut.toInt)
-      .write.mode("overwrite").parquet(tmp.toString)
-    if (!fs.rename(path, old))
-      throw new java.io.IOException(s"compact: cannot stage $dir aside")
-    if (!fs.rename(tmp, path)) {
-      fs.rename(old, path) // roll back to the original
-      throw new java.io.IOException(s"compact: cannot move compacted dir into $dir")
-    }
-    fs.delete(old, true)
-    nOut
   }
 }

@@ -1796,30 +1796,25 @@ object Relational {
         FROM z GROUP BY l_returnflag ORDER BY l_returnflag""")),
 
     // ---- copy-on-write mutation: CDC upsert + GDPR delete ---------------
-    // catalog.Mutate applied end-to-end: orders is materialized as an
-    // o_orderstatus-partitioned table, a CDC batch upserts (updates into
-    // F/O, inserts into a NEW partition 'N'), then an erasure batch
-    // deletes keyed rows from P — each rewrite reads ONLY the partitions
-    // the batch names (partition-pruned scan + broadcast anti-join,
-    // MutateSpec proves untouched partitions keep their exact files; the
-    // rewrite is staged-then-swapped per partition with crash recovery).
-    // The oracle computes the expected post-mutation state LOGICALLY
-    // (anti-join + unions over the same deterministic batches), so the
-    // physical merge machinery is hash-gated against declarative
-    // semantics. All-integer output; key/partition sets of the two
-    // batches are disjoint, so batch order cannot matter.
+    // catalog.Snapshots keyed mutation end-to-end: orders is committed as
+    // an o_orderstatus-partitioned snapshot table, then ONE applyKeyed
+    // commit applies an erasure batch (keyed deletes from P) and a CDC
+    // batch (updates into F/O, inserts into a NEW partition 'N'). The
+    // commit reads ONLY the partitions the batches name (manifest pruning
+    // + broadcast anti-join) and re-references every other partition's
+    // files by path. The oracle computes the expected post-mutation state
+    // LOGICALLY (anti-join + unions over the same deterministic batches),
+    // so the physical merge machinery is hash-gated against declarative
+    // semantics. All-integer output; the key sets of the two batches are
+    // disjoint, so delete-then-upsert equals any other order.
     "q121_merge_upsert" -> Q(
       (s, dir) => {
         val orders = t(s, dir, "orders")
           .select("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
-        val work = Tables.derivedDir("graft_mutate", s"$dir|orders_v1")
+        val work = Tables.derivedDir("graft_snap", s"$dir|orders_merge")
         Tables.derivedClear(work) // mutation is the thing under test: rebuild
-        val table = s"$work/orders.parquet"
-        // clustered before the partitioned write (q139 pattern): one file
-        // per status instead of scan-tasks × |statuses| confetti — both
-        // this write and every pruned re-read of the table get cheaper
-        orders.repartition(col("o_orderstatus"))
-          .write.partitionBy("o_orderstatus").parquet(table)
+        val table = s"$work/orders"
+        graft.catalog.Snapshots.init(s, table, orders, Some("o_orderstatus"))
         val updates = orders
           .filter(col("o_orderkey") % 97 === 0 &&
             col("o_orderstatus").isin("F", "O"))
@@ -1830,14 +1825,12 @@ object Relational {
           .withColumn("o_orderkey", col("o_orderkey") + lit(900000000L))
           .withColumn("o_orderstatus", lit("N"))
           .withColumn("o_orderpriority", lit("0-INSERTED"))
-        graft.catalog.Mutate.upsert(s, table, updates.unionByName(inserts),
-          Seq("o_orderkey"), "o_orderstatus")
-        graft.catalog.Mutate.delete(s, table,
-          orders.filter(col("o_orderkey") % 193 === 0 &&
-              col("o_orderstatus") === "P")
-            .select("o_orderkey", "o_orderstatus"),
-          Seq("o_orderkey"), "o_orderstatus")
-        s.read.parquet(table)
+        val deletes = orders
+          .filter(col("o_orderkey") % 193 === 0 && col("o_orderstatus") === "P")
+          .select("o_orderkey", "o_orderstatus")
+        graft.catalog.Snapshots.applyKeyed(s, table, deletes,
+          updates.unionByName(inserts), Seq("o_orderkey"))
+        graft.catalog.Snapshots.read(s, table)
           .groupBy("o_orderstatus")
           .agg(count(lit(1)).as("n"),
             sum(when(col("o_orderpriority").startsWith("0-"), 1L)

@@ -55,6 +55,7 @@ final class ControlPlane(spark: SparkSession, workDir: String, port: Int = 0) {
   @volatile private var lastShapes: Map[String, Seq[Int]] = Map.empty
   @volatile private var lastReport: Option[graft.ml.MimoTrainer.Report] = None
   private var server: HttpServer = _
+  private var handlers: java.util.concurrent.ExecutorService = _
 
   private val zipPath = s"$workDir/datasets/dataset.zip"
   private val dataDir = s"$workDir/datasets/dataset"
@@ -80,13 +81,21 @@ final class ControlPlane(spark: SparkSession, workDir: String, port: Int = 0) {
     if (state == Idle && sinkExists) state = Serialized
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/download", (ex: HttpExchange) => handle(ex))
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    handlers = java.util.concurrent.Executors.newFixedThreadPool(4)
+    server.setExecutor(handlers)
     server.start()
     server.getAddress.getPort
   }
 
+  /** Stop listening and release the handler pool: its threads are
+    * non-daemon, so a stopped instance must not leave them running. */
   def stop(): Unit = synchronized {
-    if (server != null) { server.stop(0); server = null }
+    if (server != null) {
+      server.stop(0); server = null
+      handlers.shutdown()
+      handlers.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS)
+      handlers = null
+    }
   }
 
   private def respond(ex: HttpExchange, text: String, code: Int = 200): Unit = {

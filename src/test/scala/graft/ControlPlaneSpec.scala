@@ -425,9 +425,15 @@ class ControlPlaneSpec extends SparkSpec {
     }
   }
 
+  private def nonDaemonThreads(): Int = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.count(t => t.isAlive && !t.isDaemon)
+  }
+
   test("failed download resets to Idle instead of wedging (reference bug fixed)") {
     val work = java.nio.file.Files.createTempDirectory("graft-cp2").toString
     val cp = new ControlPlane(spark, work)
+    val threadsBefore = nonDaemonThreads()
     val port = cp.start()
     try {
       val ep = s"http://127.0.0.1:$port/download"
@@ -438,5 +444,11 @@ class ControlPlaneSpec extends SparkSpec {
       // server is still usable: idle status, serialize accepted again
       assert(get(ep).startsWith("Send a POST request"))
     } finally cp.stop()
+    // a stopped control plane leaves no handler-pool threads behind (a
+    // pool worker may still be unwinding for a moment after termination)
+    val deadline = System.currentTimeMillis() + 5000
+    while (nonDaemonThreads() > threadsBefore && System.currentTimeMillis() < deadline)
+      Thread.sleep(10)
+    assert(nonDaemonThreads() == threadsBefore)
   }
 }

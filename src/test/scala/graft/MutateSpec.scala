@@ -1,45 +1,47 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.functions._
-import graft.catalog.Mutate
+import graft.catalog.Snapshots
 
+/** Keyed mutation (upsert / delete by key on a partitioned table) through
+  * the one copy-on-write engine, `Snapshots.upsert`/`delete`: which rows
+  * change, which partitions are read and rewritten, and which inputs are
+  * refused. Versioning and time travel are covered in SnapshotsSpec. */
 class MutateSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String = {
-    val dir = Files.createTempDirectory("graft_mutate").resolve("t.parquet").toString
-    Seq(
+    val dir = Files.createTempDirectory("graft_mutate").resolve("t").toString
+    Snapshots.init(spark, dir, Seq(
       (1L, "one", "a"), (2L, "two", "a"), (3L, "three", "a"),
       (4L, "four", "b"), (5L, "five", "b"),
       (6L, "six", "c"), (7L, "seven", "c"))
-      .toDF("id", "v", "p")
-      .write.partitionBy("p").parquet(dir)
+      .toDF("id", "v", "p"), Some("p"))
     dir
   }
 
   private def readAll(dir: String): Set[(Long, String, String)] =
-    spark.read.parquet(dir).select("id", "v", "p")
+    Snapshots.read(spark, dir).select("id", "v", "p")
       .as[(Long, String, String)].collect().toSet
 
-  private def partFiles(dir: String, part: String): Map[String, Long] = {
-    val p = Paths.get(dir, part)
-    import scala.jdk.CollectionConverters._
-    Files.list(p).iterator().asScala
-      .filter(f => !f.getFileName.toString.startsWith("_"))
-      .map(f => f.getFileName.toString -> Files.getLastModifiedTime(f).toMillis)
+  /** (path -> mtime) of the current version's files in partition `part`. */
+  private def partFiles(dir: String, part: String): Map[String, Long] =
+    Snapshots.fileList(spark, dir, Snapshots.currentVersion(spark, dir))
+      .collect { case (path, `part`) =>
+        path -> Files.getLastModifiedTime(Paths.get(dir, path)).toMillis }
       .toMap
-  }
 
   test("upsert replaces same-key rows, inserts new keys and new partitions") {
     val dir = freshTable()
+    val before = Snapshots.fileList(spark, dir, 1).toSet
     val updates = Seq(
       (2L, "TWO", "a"),      // update in place
       (8L, "eight", "b"),    // insert into existing partition
       (9L, "nine", "d"))     // insert creating a new partition
       .toDF("id", "v", "p")
-    val res = Mutate.upsert(spark, dir, updates, Seq("id"), "p")
-    assert(res.rewritten.toSet == Set("a", "b") && res.created == Seq("d"))
+    assert(Snapshots.upsert(spark, dir, updates, Seq("id")) == 2)
+    val rewritten = (Snapshots.fileList(spark, dir, 2).toSet -- before).map(_._2)
+    assert(rewritten == Set("a", "b", "d"))
     assert(readAll(dir) == Set(
       (1L, "one", "a"), (2L, "TWO", "a"), (3L, "three", "a"),
       (4L, "four", "b"), (5L, "five", "b"), (8L, "eight", "b"),
@@ -48,67 +50,64 @@ class MutateSpec extends SparkSpec {
 
   test("untouched partitions keep their exact files") {
     val dir = freshTable()
-    val before = partFiles(dir, "p=c")
-    Mutate.upsert(spark, dir, Seq((1L, "ONE", "a")).toDF("id", "v", "p"),
-      Seq("id"), "p")
-    assert(partFiles(dir, "p=c") == before) // same names, same mtimes
-    assert(partFiles(dir, "p=b") == partFiles(dir, "p=b"))
+    val (b, c) = (partFiles(dir, "b"), partFiles(dir, "c"))
+    assert(b.nonEmpty && c.nonEmpty)
+    Snapshots.upsert(spark, dir, Seq((1L, "ONE", "a")).toDF("id", "v", "p"), Seq("id"))
+    assert(partFiles(dir, "b") == b && partFiles(dir, "c") == c) // same paths, same mtimes
   }
 
   test("the base scan is partition-pruned to the affected values") {
     val dir = freshTable()
-    val pruned = Mutate.prunedBase(spark, dir, "p", Seq("a"))
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("a"))
-    // behavioral proof: only partition a's files are opened
-    val scanned = pruned.select(input_file_name()).distinct()
-      .as[String].collect()
-    assert(scanned.nonEmpty && scanned.forall(_.contains("p=a")))
+    // behavioral proof: with partition c's files gone, a mutation of
+    // partition a still succeeds, so the base scan never opened them
+    val cFiles = partFiles(dir, "c").keys.toSeq
+    assert(cFiles.nonEmpty)
+    cFiles.foreach(f => Files.delete(Paths.get(dir, f)))
+    Snapshots.upsert(spark, dir, Seq((1L, "ONE", "a")).toDF("id", "v", "p"), Seq("id"))
+    Snapshots.delete(spark, dir, Seq((4L, "b")).toDF("id", "p"), Seq("id"))
+    assert(Snapshots.readPartitions(spark, dir, Seq("a", "b")).select("id", "v", "p")
+      .as[(Long, String, String)].collect().toSet == Set(
+      (1L, "ONE", "a"), (2L, "two", "a"), (3L, "three", "a"), (5L, "five", "b")))
+    // c still listed, never rewritten
+    assert(Snapshots.fileList(spark, dir, Snapshots.currentVersion(spark, dir))
+      .collect { case (path, "c") => path }.toSet == cFiles.toSet)
   }
 
   test("delete removes matching keys; an emptied partition disappears") {
     val dir = freshTable()
-    val res = Mutate.delete(spark, dir,
-      Seq((6L, "c"), (7L, "c"), (4L, "b")).toDF("id", "p"), Seq("id"), "p")
-    assert(res.rewritten.toSet == Set("b", "c"))
+    val before = Snapshots.fileList(spark, dir, 1).toSet
+    Snapshots.delete(spark, dir,
+      Seq((6L, "c"), (7L, "c"), (4L, "b")).toDF("id", "p"), Seq("id"))
+    val after = Snapshots.fileList(spark, dir, 2).toSet
+    assert((before -- after).map(_._2) == Set("b", "c"))
     assert(readAll(dir) == Set(
       (1L, "one", "a"), (2L, "two", "a"), (3L, "three", "a"), (5L, "five", "b")))
-    assert(!Files.exists(Paths.get(dir, "p=c")))
+    assert(!after.exists(_._2 == "c"))
   }
 
   test("re-running the same upsert batch converges (idempotent retry)") {
     val dir = freshTable()
     val batch = Seq((2L, "TWO", "a"), (9L, "nine", "d")).toDF("id", "v", "p")
-    Mutate.upsert(spark, dir, batch, Seq("id"), "p")
+    Snapshots.upsert(spark, dir, batch, Seq("id"))
     val once = readAll(dir)
-    Mutate.upsert(spark, dir, batch, Seq("id"), "p")
+    Snapshots.upsert(spark, dir, batch, Seq("id"))
     assert(readAll(dir) == once)
-  }
-
-  test("a partition stranded mid-swap is restored before the next mutation") {
-    val dir = freshTable()
-    // simulate a crash between rename(live->old) and rename(staged->live)
-    val old = Paths.get(dir + ".mutate.old")
-    Files.createDirectories(old)
-    Files.move(Paths.get(dir, "p=b"), old.resolve("p=b"))
-    assert(!Files.exists(Paths.get(dir, "p=b")))
-    Mutate.upsert(spark, dir, Seq((1L, "ONE", "a")).toDF("id", "v", "p"),
-      Seq("id"), "p")
-    assert(readAll(dir).contains((4L, "four", "b"))) // restored, then mutated
-    assert(!Files.exists(old))
   }
 
   test("schema and partition-value contracts are enforced") {
     val dir = freshTable()
+    val before = readAll(dir)
     intercept[IllegalArgumentException] {
-      Mutate.upsert(spark, dir, Seq((1L, "a")).toDF("id", "p"), Seq("id"), "p")
+      Snapshots.upsert(spark, dir, Seq((1L, "a")).toDF("id", "p"), Seq("id"))
+    }
+    // ':' needs hive path escaping, so the stored value would not be raw
+    intercept[IllegalArgumentException] {
+      Snapshots.upsert(spark, dir,
+        Seq((1L, "x", "bad:value")).toDF("id", "v", "p"), Seq("id"))
     }
     intercept[IllegalArgumentException] {
-      Mutate.upsert(spark, dir,
-        Seq((1L, "x", "bad value")).toDF("id", "v", "p"), Seq("id"), "p")
+      Snapshots.delete(spark, dir, Seq(Tuple1(1L)).toDF("id"), Seq("id"))
     }
-    intercept[IllegalArgumentException] {
-      Mutate.delete(spark, dir, Seq(Tuple1(1L)).toDF("id"), Seq("id"), "p")
-    }
+    assert(Snapshots.currentVersion(spark, dir) == 1 && readAll(dir) == before)
   }
 }

@@ -232,18 +232,22 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.versions(spark, seqDir) == Seq(1, 2, 3))
     // emptied partition dropped from the manifest; untouched rewrites none
     assert(!Snapshots.fileList(spark, oneDir, 2).exists(_._2 == "c"))
+    // idempotent retry: re-submitting the same batch converges
+    val once = rows(oneDir)
+    assert(Snapshots.applyKeyed(spark, oneDir, dels, ups, Seq("id")) == Some(3))
+    assert(rows(oneDir) == once)
     // delete-only and upsert-only sides work through the same entry point
     val empty = spark.emptyDataset[(Long, String, String)].toDF("id", "v", "p")
     val emptyKeys = spark.emptyDataset[(Long, String)].toDF("id", "p")
     assert(Snapshots.applyKeyed(spark, oneDir, Seq((9L, "b")).toDF("id", "p"),
-      empty, Seq("id")) == Some(3))
+      empty, Seq("id")) == Some(4))
     assert(rows(oneDir) == Set((1L, "ONE", "a"), (3L, "three", "b"), (4L, "four", "b")))
     assert(Snapshots.applyKeyed(spark, oneDir, emptyKeys,
-      Seq((7L, "seven", "c")).toDF("id", "v", "p"), Seq("id")) == Some(4))
+      Seq((7L, "seven", "c")).toDF("id", "v", "p"), Seq("id")) == Some(5))
     assert(rows(oneDir).contains((7L, "seven", "c")))
     // both sides empty: no commit at all
     assert(Snapshots.applyKeyed(spark, oneDir, emptyKeys, empty, Seq("id")).isEmpty)
-    assert(Snapshots.currentVersion(spark, oneDir) == 4)
+    assert(Snapshots.currentVersion(spark, oneDir) == 5)
     // time travel still audits the pre-mutation state
     assert(rows(oneDir, Some(1)) == base.toSet)
   }
@@ -452,6 +456,16 @@ class SnapshotsSpec extends SparkSpec {
     val bad = Seq((6L, "six", "c")).toDF("id", "vv", "p")
     intercept[IllegalArgumentException](Snapshots.append(spark, dir, bad))
     intercept[IllegalArgumentException](Snapshots.commitEpoch(spark, dir, bad, 1L))
+    // keyed commits: updates must match the table's columns, and delete
+    // keys must carry the partition column
+    val noKeys = spark.emptyDataset[(Long, String)].toDF("id", "p")
+    intercept[IllegalArgumentException](Snapshots.upsert(spark, dir, bad, Seq("id")))
+    intercept[IllegalArgumentException](Snapshots.applyKeyed(spark, dir, noKeys, bad, Seq("id")))
+    val unpartitionedKeys = Seq(Tuple1(1L)).toDF("id")
+    intercept[IllegalArgumentException](
+      Snapshots.delete(spark, dir, unpartitionedKeys, Seq("id")))
+    intercept[IllegalArgumentException](Snapshots.applyKeyed(spark, dir, unpartitionedKeys,
+      Seq((1L, "ONE", "a")).toDF("id", "v", "p"), Seq("id")))
     assert(rows(dir) == base.toSet)
   }
 

@@ -119,44 +119,6 @@ class StorageSpec extends SparkSpec {
       s"projection not pruned at the ORC scan:\n$plan")
   }
 
-  test("compact folds small files into few, preserves rows, refuses partitioned roots") {
-    val dir = java.nio.file.Files.createTempDirectory("cmp").toString + "/t.parquet"
-    // 20 single-row appends — the streaming-sink small-file pathology
-    (1 to 20).foreach(i =>
-      Seq((i.toLong, s"v$i")).toDF("id", "v").write.mode("append").parquet(dir))
-    def files = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
-    val before = spark.read.parquet(dir).as[(Long, String)].collect().toSet
-    assert(files >= 20)
-    val nOut = graft.catalog.Tables.compact(spark, dir)
-    assert(nOut == 1L && files == 1, s"expected 1 compacted file, got $files")
-    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet == before)
-    assert(!new java.io.File(dir + ".compact.tmp").exists())
-    assert(!new java.io.File(dir + ".compact.old").exists())
-    // partitioned root: must refuse and leave everything intact
-    val pdir = java.nio.file.Files.createTempDirectory("cmpp").toString + "/p.parquet"
-    Seq((1L, "a"), (2L, "b")).toDF("id", "part").write.partitionBy("part").parquet(pdir)
-    val err = intercept[IllegalArgumentException](
-      graft.catalog.Tables.compact(spark, pdir))
-    assert(err.getMessage.contains("leaf"))
-    assert(spark.read.parquet(pdir).count() == 2)
-    // ... while a leaf partition itself compacts fine
-    graft.catalog.Tables.compact(spark, s"$pdir/part=a")
-    assert(spark.read.parquet(pdir).count() == 2)
-  }
-
-  test("compact recovers a stranded .compact.old from a mid-swap crash") {
-    val dir = java.nio.file.Files.createTempDirectory("cmpr").toString + "/t.parquet"
-    (1 to 5).foreach(i =>
-      Seq((i.toLong, s"v$i")).toDF("id", "v").write.mode("append").parquet(dir))
-    val before = spark.read.parquet(dir).as[(Long, String)].collect().toSet
-    // simulate the crash window: live renamed aside, tmp never installed
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(dir), java.nio.file.Paths.get(dir + ".compact.old"))
-    graft.catalog.Tables.compact(spark, dir)
-    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet == before)
-    assert(!new java.io.File(dir + ".compact.old").exists())
-  }
-
   test("schema evolution: mergeSchema unifies widened ingest batches") {
     // a 100 TB feed's schema drifts; old batches must stay readable next
     // to widened ones — new columns read as null for history, no rewrite
