@@ -209,6 +209,14 @@ object Snapshots {
       throw new IllegalArgumentException(s"requirement failed: snapshots: no committed version at $dir"))
   }
 
+  /** The manifest of `version` (default: the current one). */
+  private def manifest(spark: SparkSession, dir: String,
+                       version: Option[Int] = None): Manifest = {
+    val v = version.getOrElse(currentVersion(spark, dir))
+    readManifest(spark, dir, v).getOrElse(
+      throw new NoSuchElementException(s"snapshots: no committed version $v at $dir"))
+  }
+
   /** Cluster a partitioned commit's rows by the partition column before
     * the hive-style tmp write: without this, partitionBy fans out to
     * (input tasks × partition values) files — a 32-task batch touching 16
@@ -304,25 +312,11 @@ object Snapshots {
       case None => moveFiles(tmp, "")
     }
     fs.delete(tmp, true)
-    // footer stats in parallel: hundreds of serial driver round-trips at
-    // commit time otherwise dominate wide partitioned commits on remote
+    // footer stats through FanOut: hundreds of serial driver round-trips
+    // at commit time otherwise dominate wide partitioned commits on remote
     // storage (each is one footer read, independent of the others)
-    val statsByPath: Map[String, FileStats] =
-      if (moved.size <= 1) moved.map(m => m._2 -> footerStats(spark, m._1)).toMap
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, moved.size))
-        try {
-          import scala.jdk.CollectionConverters._
-          val tasks = moved.map { m =>
-            new java.util.concurrent.Callable[(String, FileStats)] {
-              def call() = m._2 -> footerStats(spark, m._1)
-            }: java.util.concurrent.Callable[(String, FileStats)]
-          }
-          pool.invokeAll(tasks.asJava).asScala.map(_.get()).toMap
-        } finally pool.shutdown()
-      }
-    moved.map(m => Entry(m._2, m._3, Some(statsByPath(m._2)))).toSeq
+    val stats = graft.FanOut.map(spark, moved.toSeq)(m => footerStats(spark, m._1))
+    moved.toSeq.zip(stats).map { case (m, st) => Entry(m._2, m._3, Some(st)) }
   }
 
   // ---- commits ----------------------------------------------------------
@@ -359,7 +353,7 @@ object Snapshots {
 
   /** Append-only commit: new files join the current file list. */
   def append(spark: SparkSession, dir: String, df: DataFrame): Int = {
-    val cur = readManifest(spark, dir, currentVersion(spark, dir)).get
+    val cur = manifest(spark, dir)
     requireSameColumns(cur, df, "append")
     val v = cur.version + 1
     val entries = poolWrite(spark, dir, clustered(df, cur.partCol), cur.partCol, v)
@@ -377,7 +371,7 @@ object Snapshots {
     * no-rewrite property. */
   def appendEvolve(spark: SparkSession, dir: String, df: DataFrame): Int = {
     import org.apache.spark.sql.types.StructType
-    val cur = readManifest(spark, dir, currentVersion(spark, dir)).get
+    val cur = manifest(spark, dir)
     val old = StructType.fromDDL(cur.schemaDdl)
     val oldByName = old.fields.map(f => f.name -> f).toMap
     df.schema.fields.foreach { f =>
@@ -414,7 +408,7 @@ object Snapshots {
     * Streaming guarantees. */
   def commitEpoch(spark: SparkSession, dir: String, df: DataFrame,
                   epochId: Long): Option[Int] = {
-    val cur = readManifest(spark, dir, currentVersion(spark, dir)).get
+    val cur = manifest(spark, dir)
     requireSameColumns(cur, df, "commitEpoch")
     if (cur.epoch.exists(_ >= epochId)) return None
     val v = cur.version + 1
@@ -430,7 +424,7 @@ object Snapshots {
     * partition value in `dropValues` is removed without replacement. */
   def replacePartitions(spark: SparkSession, dir: String, df: DataFrame,
                         dropValues: Seq[String] = Seq.empty): Int = {
-    val cur = readManifest(spark, dir, currentVersion(spark, dir)).get
+    val cur = manifest(spark, dir)
     replacePartitionsRaw(spark, dir, clustered(df, cur.partCol), dropValues, Some(cur))
   }
 
@@ -445,7 +439,7 @@ object Snapshots {
   private def replacePartitionsRaw(spark: SparkSession, dir: String, df: DataFrame,
                                    dropValues: Seq[String] = Seq.empty,
                                    base: Option[Manifest] = None): Int = {
-    val cur = base.getOrElse(readManifest(spark, dir, currentVersion(spark, dir)).get)
+    val cur = base.getOrElse(manifest(spark, dir))
     val partCol = cur.partCol.getOrElse(
       throw new IllegalArgumentException(s"snapshots: $dir is not partitioned"))
     val v = cur.version + 1
@@ -508,7 +502,7 @@ object Snapshots {
                           deleteKeys: Option[DataFrame], updates: Option[DataFrame],
                           keyCols: Seq[String]): Option[Int] = {
     require(keyCols.nonEmpty, "snapshots: keyCols must be non-empty")
-    val cur = readManifest(spark, dir, currentVersion(spark, dir)).get
+    val cur = manifest(spark, dir)
     val partCol = cur.partCol.getOrElse(
       throw new IllegalArgumentException(s"snapshots: $dir is not partitioned"))
     deleteKeys.foreach(d => require(d.columns.contains(partCol),
@@ -542,7 +536,7 @@ object Snapshots {
   def compactPartitions(spark: SparkSession, dir: String, values: Seq[String],
                         filesPer: Int = 1, sortBy: Option[String] = None): Int = {
     require(filesPer >= 1, "snapshots: filesPer must be >= 1")
-    val cur = readManifest(spark, dir, currentVersion(spark, dir)).get
+    val cur = manifest(spark, dir)
     val part = readPartitions(spark, dir, values, Some(cur.version))
     // range-partition + sort when a layout column is given: files get
     // DISJOINT [min,max] ranges, the best case for stats pruning
@@ -584,9 +578,7 @@ object Snapshots {
 
   /** The table at `version` (default: current). */
   def read(spark: SparkSession, dir: String, version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse(currentVersion(spark, dir))
-    val m = readManifest(spark, dir, v).getOrElse(
-      throw new NoSuchElementException(s"snapshots: no committed version $v at $dir"))
+    val m = manifest(spark, dir, version)
     readFiles(spark, dir, m, m.entries)
   }
 
@@ -595,9 +587,7 @@ object Snapshots {
     * directory listing of the pool. */
   def readPartitions(spark: SparkSession, dir: String, values: Seq[String],
                      version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse(currentVersion(spark, dir))
-    val m = readManifest(spark, dir, v).getOrElse(
-      throw new NoSuchElementException(s"snapshots: no committed version $v at $dir"))
+    val m = manifest(spark, dir, version)
     require(m.partCol.isDefined, s"snapshots: $dir is not partitioned")
     val want = values.toSet
     readFiles(spark, dir, m, m.entries.filter(e => want.contains(e.partValue)))
@@ -617,11 +607,9 @@ object Snapshots {
     * wrote; a hand-edited manifest without them falls back to an error
     * rather than a silent wrong count). */
   def rowCount(spark: SparkSession, dir: String, version: Option[Int] = None): Long = {
-    val v = version.getOrElse(currentVersion(spark, dir))
-    val m = readManifest(spark, dir, v).getOrElse(
-      throw new NoSuchElementException(s"snapshots: no committed version $v at $dir"))
+    val m = manifest(spark, dir, version)
     m.entries.map(_.stats.getOrElse(throw new IllegalStateException(
-      s"snapshots: entry without stats in v$v — cannot metadata-count")).rows).sum
+      s"snapshots: entry without stats in v${m.version} — cannot metadata-count")).rows).sum
   }
 
   /** Stats-pruned range read: only files whose footer [min,max] for
@@ -633,9 +621,7 @@ object Snapshots {
     * handful of files without listing or footer-probing the table. */
   def readWhere(spark: SparkSession, dir: String, column: String,
                 lo: Long, hi: Long, version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse(currentVersion(spark, dir))
-    val m = readManifest(spark, dir, v).getOrElse(
-      throw new NoSuchElementException(s"snapshots: no committed version $v at $dir"))
+    val m = manifest(spark, dir, version)
     val hit = m.entries.filter { e =>
       e.stats match {
         case Some(fs) => (fs.mins.get(column), fs.maxs.get(column)) match {
@@ -660,10 +646,8 @@ object Snapshots {
     * where a data diff pays (changed files read) + an exceptAll shuffle
     * before the first useful byte of work. */
   def changedPartitions(spark: SparkSession, dir: String, fromV: Int, toV: Int): Seq[String] = {
-    val m1 = readManifest(spark, dir, fromV).getOrElse(
-      throw new NoSuchElementException(s"snapshots: no committed version $fromV at $dir"))
-    val m2 = readManifest(spark, dir, toV).getOrElse(
-      throw new NoSuchElementException(s"snapshots: no committed version $toV at $dir"))
+    val m1 = manifest(spark, dir, Some(fromV))
+    val m2 = manifest(spark, dir, Some(toV))
     val common = m1.entries.map(_.path).toSet intersect m2.entries.map(_.path).toSet
     (m1.entries ++ m2.entries).filterNot(e => common(e.path))
       .map(_.partValue).distinct.sorted
@@ -679,10 +663,8 @@ object Snapshots {
     * downstream consumer (index maintainer, replica, audit) follow a
     * 100 TB table by reading deltas instead of re-scanning. */
   def diff(spark: SparkSession, dir: String, fromV: Int, toV: Int): DataFrame = {
-    val m1 = readManifest(spark, dir, fromV).getOrElse(
-      throw new NoSuchElementException(s"snapshots: no committed version $fromV at $dir"))
-    val m2 = readManifest(spark, dir, toV).getOrElse(
-      throw new NoSuchElementException(s"snapshots: no committed version $toV at $dir"))
+    val m1 = manifest(spark, dir, Some(fromV))
+    val m2 = manifest(spark, dir, Some(toV))
     val common = m1.entries.map(_.path).toSet intersect m2.entries.map(_.path).toSet
     val removed0 = readFiles(spark, dir, m1, m1.entries.filterNot(e => common(e.path)))
     val added = readFiles(spark, dir, m2, m2.entries.filterNot(e => common(e.path)))

@@ -54,17 +54,17 @@ object Sketches {
   /** Distinct word n-grams of a token array — identical values (content
     * AND first-occurrence order) to the declarative
     * `array_distinct(transform(sequence(...), i -> concat_ws(" ", ...)))`
-    * in [[graft.functions.TextAnalysis.wordNgrams]], in one primitive
-    * pass (spec-gated equality in TextAnalysisSpec). */
+    * reference formulation in TextAnalysisSpec, in one primitive pass
+    * (spec-gated equality). */
   def wordNgrams(toks: Column, n: Int): Column =
     GraftBridge.column(WordNgramsExpr(GraftBridge.expression(toks), n))
 
   /** Mod-p k-gram fingerprints of a string — identical values (content AND
     * first-occurrence order) to the declarative
     * `array_distinct(filter(transform(sequence(1, greatest(len-k+1, 1)),
-    * i -> h60(substr(text, i, k))), h -> pmod(h, p) = 0))` in
-    * [[graft.functions.TextAnalysis.fingerprintsDeclarative]], in one
-    * primitive pass (spec-gated equality in TextAnalysisSpec). */
+    * i -> h60(substr(text, i, k))), h -> pmod(h, p) = 0))` reference
+    * formulation in TextAnalysisSpec, in one primitive pass
+    * (spec-gated equality). */
   def fingerprints(text: Column, k: Int, modP: Int): Column =
     GraftBridge.column(FingerprintsExpr(GraftBridge.expression(text), k, modP))
 

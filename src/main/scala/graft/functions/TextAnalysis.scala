@@ -36,27 +36,14 @@ object TextAnalysis {
   /** Distinct word n-gram shingles ("w1 w2 ... wn"), from an ordered
     * token array. TOTAL: a sub-n (or null) document yields the empty set.
     * Fused single-pass expression ([[graft.expressions.WordNgramsExpr]]):
-    * the declarative transform/sequence/concat_ws chain below allocated a
+    * the declarative transform/sequence/concat_ws chain allocated a
     * sequence array plus per-gram closure dispatches per row and ran
     * array_distinct as a second pass — the shingle pass is the front of
     * every dedup/set-join query, so it pays to be one loop. Values are
     * IDENTICAL (content and first-occurrence order; equality spec-gated
-    * against [[wordNgramsDeclarative]] in TextAnalysisSpec). */
+    * against the declarative chain in TextAnalysisSpec). */
   def wordNgrams(toks: Column, n: Int): Column =
     graft.expressions.Sketches.wordNgrams(toks, n)
-
-  /** The declarative reference formulation of [[wordNgrams]], kept for
-    * cross-checking the fused expression (the [[graft.operators.Dedup
-    * .simhashDeclarative]] precedent). A sub-n document yields the empty
-    * set — without the guard, sequence(1, size-(n-1)) DESCENDS through 0
-    * and element_at(toks, 0) throws INVALID_INDEX_OF_ZERO, killing the
-    * whole query on one short document (the DuckDB twins' `len(toks) >= n`
-    * guards produce the same empty set). */
-  def wordNgramsDeclarative(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      array_distinct(transform(sequence(lit(1), size(toks) - (n - 1)), i =>
-        concat_ws(" ", (0 until n).map(off => element_at(toks, i + off)): _*))))
-      .otherwise(typedLit(Seq.empty[String]))
 
   /** BPE-ish subword count estimate: sum over tokens of ceil(len/4),
     * as exact integer arithmetic ((len+3) div 4). */
@@ -245,24 +232,16 @@ object TextAnalysis {
     * Two documents share fingerprints iff they share 8-char substrings —
     * the standard copy-detection sketch, as one per-row expression.
     * Fused single-pass expression ([[graft.expressions.FingerprintsExpr]]):
-    * the declarative chain below is a higher-order-function tree, which
+    * the declarative chain is a higher-order-function tree, which
     * Spark evaluates INTERPRETED (CodegenFallback) — per gram it allocated
     * a substring, a 32-char md5 hex string and a conv parse; the
     * fingerprint pass fronts five declared queries (q30/q64/q76/q283/q296),
     * so it pays to be one digest loop over the text's bytes. Values are
     * IDENTICAL (content and first-occurrence order; equality spec-gated
-    * against [[fingerprintsDeclarative]] in TextAnalysisSpec). */
+    * against the declarative chain in TextAnalysisSpec, which the DuckDB
+    * oracle twins mirror). */
   def fingerprints(text: Column, k: Int = 8, modP: Int = 16): Column =
     graft.expressions.Sketches.fingerprints(text, k, modP)
-
-  /** The declarative reference formulation of [[fingerprints]], kept for
-    * cross-checking the fused expression (the [[wordNgramsDeclarative]]
-    * precedent; the DuckDB oracle twins mirror THIS form). */
-  def fingerprintsDeclarative(text: Column, k: Int = 8, modP: Int = 16): Column =
-    array_distinct(filter(
-      transform(sequence(lit(1), greatest(length(text) - (k - 1), lit(1))),
-        i => Hashing.h60(substring(text, lit(i), lit(k)))),
-      h => pmod(h, lit(modP)) === 0))
 
   private def substring(c: Column, pos: Column, len: Column): Column =
     c.substr(pos, len)

@@ -132,22 +132,15 @@ object Advisor {
     * (one driver job per profile, back to back), but the fused plan in
     * turn serialized the shared stages inside its single job and never
     * beat the naive formulation on wall clock — concurrent submission
-    * keeps the scan-once property AND the overlap. The pool is bounded
-    * by the profile count (≤ a few dozen in any schema-discovery sweep;
-    * each job is a tiny two-long-column aggregate), and each returned
-    * profile is a materialized local-checkpoint scanned — never
+    * keeps the scan-once property AND the overlap. The jobs go through
+    * [[graft.FanOut]] (≤ a few dozen profiles in any schema-discovery
+    * sweep; each job is a tiny two-long-column aggregate), and each
+    * returned profile is a materialized local-checkpoint scanned — never
     * recomputed — by however many downstream edges consume it. */
-  def keyCountsAll(profiles: Seq[(DataFrame, Column)]): Seq[DataFrame] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(profiles.size, 16)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(
-      Future.sequence(profiles.map { case (df, key) => Future(keyCounts(df, key)) }),
-      Duration.Inf)
-    finally pool.shutdown()
-  }
+  def keyCountsAll(profiles: Seq[(DataFrame, Column)]): Seq[DataFrame] =
+    profiles.headOption.fold(Seq.empty[DataFrame]) { case (df0, _) =>
+      graft.FanOut.map(df0.sparkSession, profiles) { case (df, key) => keyCounts(df, key) }
+    }
 
   /** [[fkScore]] over pre-built [[keyCounts]] profiles: both sides'
     * distinct sets, the containment semi join, and parent uniqueness all

@@ -358,8 +358,8 @@ object Dedup {
 
   /** 60-bit SimHash fingerprint per document over its word-bigram set —
     * MAP-ONLY: one custom-expression pass per row, no explode, no shuffle.
-    * Values are identical to [[simhashDeclarative]] (spec-checked) and to
-    * the DuckDB oracle. */
+    * Values are identical to the declarative explode-and-re-aggregate
+    * formulation (DedupSpec) and to the DuckDB oracle. */
   def simhash(docs: DataFrame, idCol: String, textCol: String, ngram: Int = 2): DataFrame =
     shingled(docs, idCol, textCol, ngram)
       .select(col("id"),
@@ -376,26 +376,6 @@ object Dedup {
         graft.expressions.Sketches.simhash60(
           transform(col("shingles"), s => graft.functions.FastHashing.h60Fast(s)))
           .as("simhash"))
-
-  /** Declarative SimHash (explode shingle×bit, re-aggregate): the
-    * oracle-shaped reference formulation, kept for cross-checking the
-    * fast expression; 60× row blowup + two shuffles — do not use at
-    * scale. */
-  def simhashDeclarative(docs: DataFrame, idCol: String, textCol: String, ngram: Int = 2): DataFrame = {
-    val toks = TextAnalysis.tokens(col(textCol))
-    val grams = docs
-      .filter(size(toks) >= ngram)
-      .select(col(idCol).as("id"),
-        explode(TextAnalysis.wordNgrams(toks, ngram)).as("g"))
-      .withColumn("h", Hashing.h60(col("g")))
-    grams
-      .withColumn("j", explode(sequence(lit(0), lit(59))))
-      .withColumn("w", when(expr("shiftright(h, j) & 1") === 1, 1L).otherwise(-1L))
-      .groupBy("id", "j").agg(sum("w").as("sw"))
-      .groupBy("id")
-      .agg(sum(when(col("sw") >= 0, expr("shiftleft(CAST(1 AS BIGINT), j)"))
-        .otherwise(0L)).as("simhash"))
-  }
 
   /** Duplicate CLUSTERS from near-dup pairs: connected components —
     * every doc in a component gets the component's smallest id as

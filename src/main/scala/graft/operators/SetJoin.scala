@@ -74,9 +74,9 @@ object SetJoin {
     val gate: DataFrame => DataFrame = if (useBroadcast) broadcast else identity
     // ARRAY-VERIFICATION TIER: when the candidate set broadcasts AND the
     // element table is itself broadcast-sized (`preToks` materialized by
-    // [[prefixTables]] CONCURRENTLY with the prefix build — both read only
-    // the el checkpoint, so the count + array-build jobs back-fill the
-    // prefix stage's tail instead of adding serial latency, guide §2.6),
+    // [[prefixTables]] CONCURRENTLY with the prefix build through FanOut —
+    // both read only the el checkpoint, so the count + array-build jobs
+    // back-fill the prefix stage's tail instead of adding serial latency),
     // verify by joining the candidate pairs to the per-id token ARRAYS
     // and counting the intersection per pair —
     // size(array_intersect) over distinct-element arrays equals the
@@ -172,31 +172,17 @@ object SetJoin {
     * prefix math cannot silently miss one of the two joins.
     *
     * The array-tier precompute (one count + the groupBy(id) array build)
-    * runs on a SECOND thread while the caller thread builds the prefix
-    * checkpoint: both depend only on the already-materialized el
-    * checkpoint, so the serial chain el → prefix → pre-flight → cand →
-    * verify loses one link (guide §2.6 — actions are only sequential
-    * because the driver calls them sequentially). At 100 TB the count
-    * exceeds the broadcast budget and the thread contributes nothing but
-    * that cheap count — the exploded path stays the scale path. */
+    * and the prefix checkpoint run concurrently through [[graft.FanOut]]:
+    * both depend only on the already-materialized el checkpoint, so the
+    * serial chain el → prefix → pre-flight → cand → verify loses one
+    * link. At 100 TB the count exceeds the broadcast budget and the
+    * array side contributes nothing but that cheap count — the exploded
+    * path stays the scale path. */
   private def prefixTables(elRaw: DataFrame, tNum: Int, tDen: Int)
       : (DataFrame, DataFrame, DataFrame, Option[DataFrame]) = {
     require(tNum > 0 && tDen > 0 && tNum <= tDen)
     val el = elRaw.select(col("id"), col("tok"), xxhash64(col("tok")).as("tokh"))
       .localCheckpoint(true)
-    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-    val toksF = pool.submit(new java.util.concurrent.Callable[Option[DataFrame]] {
-      def call(): Option[DataFrame] =
-        if (el.count() > BroadcastMaxToks) None
-        // one materialization feeds both broadcast builds (aliased
-        // Projects canonicalize differently, so the exchange would not
-        // be reused without it). Arrays are SORTED here, once per id,
-        // so verification can count intersections by sorted-merge
-        // instead of a per-pair hash set (SortedIntersectCountExpr)
-        else Some(el.groupBy("id").agg(
-          sort_array(collect_list(col("tok"))).as("ts"),
-          count(lit(1)).as("tsz")).localCheckpoint(true))
-    })
     val sz = el.groupBy("id").agg(count(lit(1)).as("sz"))
     val dfc = el.groupBy("tokh").agg(count(lit(1)).as("df"))
     val wDoc = Window.partitionBy("id").orderBy("df", "tokh", "tok")
@@ -205,13 +191,22 @@ object SetJoin {
     // and it is small by construction (≤ the element table, usually a
     // fraction); leaving it lazy re-runs the df-join + window per
     // consumer or leans on AQE subtree reuse
-    val prefix = el.join(dfc, "tokh").join(sz, "id")
-      .withColumn("pos", row_number().over(wDoc))
-      .filter(col("pos") <=
-        col("sz") - expr(s"($tNum * sz + ${tDen - 1}) div $tDen") + 1)
-      .select(col("id"), col("tokh"))
-      .localCheckpoint(true)
-    val toks = try toksF.get() finally pool.shutdown()
+    val (toks, prefix) = graft.FanOut.both(el.sparkSession)(
+      if (el.count() > BroadcastMaxToks) None
+      // one materialization feeds both broadcast builds (aliased
+      // Projects canonicalize differently, so the exchange would not
+      // be reused without it). Arrays are SORTED here, once per id,
+      // so verification can count intersections by sorted-merge
+      // instead of a per-pair hash set (SortedIntersectCountExpr)
+      else Some(el.groupBy("id").agg(
+        sort_array(collect_list(col("tok"))).as("ts"),
+        count(lit(1)).as("tsz")).localCheckpoint(true)),
+      el.join(dfc, "tokh").join(sz, "id")
+        .withColumn("pos", row_number().over(wDoc))
+        .filter(col("pos") <=
+          col("sz") - expr(s"($tNum * sz + ${tDen - 1}) div $tDen") + 1)
+        .select(col("id"), col("tokh"))
+        .localCheckpoint(true))
     (el, sz, prefix, toks)
   }
 

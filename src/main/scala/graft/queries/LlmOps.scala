@@ -2002,22 +2002,14 @@ object LlmOps {
         val corpus = s"$work/corpus"
         val index = s"$work/pairs"
         // the two ingest-time inits are INDEPENDENT tables (corpus snapshot
-        // vs pairs index) built from the same base: submit concurrently so
-        // one's commit machinery (footer stats, manifest IO) overlaps the
-        // other's jobs instead of serializing (guide §2.6, the
-        // keyCountsAll/q139 precedent). The mutation chain below stays
-        // serial — that ordering is the protocol under test.
-        locally {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-          try Await.result(Future.sequence(Seq(
-            Future(graft.catalog.Snapshots.init(s, corpus, base, Some("source"))),
-            Future(graft.operators.InvertedIndex.initPairsTable(
-              s, index, base, "doc_id", "text")))), Duration.Inf)
-          finally pool.shutdown()
-        }
+        // vs pairs index) built from the same base: run them through
+        // FanOut so one's commit machinery (footer stats, manifest IO)
+        // overlaps the other's jobs instead of serializing. The mutation
+        // chain below stays serial — that ordering is the protocol under
+        // test.
+        graft.FanOut.both(s)(
+          graft.catalog.Snapshots.init(s, corpus, base, Some("source")),
+          graft.operators.InvertedIndex.initPairsTable(s, index, base, "doc_id", "text"))
         val updates = base.filter(col("doc_id") % 50 === 0)
           .withColumn("text",
             concat(lit("replaced text "), col("doc_id").cast("string")))

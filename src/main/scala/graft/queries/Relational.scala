@@ -2415,12 +2415,11 @@ object Relational {
           .filter(st => st.isDirectory && st.getPath.getName.startsWith("wk="))
           .map(_.getPath.getName.stripPrefix("wk=")).sorted
         // protocol order preserved: w0, w1, mid-stream compact of exactly
-        // those two — then the REMAINING weeks append CONCURRENTLY (the
-        // q237/Advisor.keyCountsAll precedent): each batch owns its own
-        // batch_id partition and dynamic partition overwrite stages per
-        // job, so disjoint appends commute; concurrent submission lets
-        // the small per-batch aggregate jobs overlap instead of paying
-        // one serial job latency per week.
+        // those two — then the REMAINING weeks append CONCURRENTLY through
+        // FanOut: each batch owns its own batch_id partition and dynamic
+        // partition overwrite stages per job, so disjoint appends commute;
+        // concurrent submission lets the small per-batch aggregate jobs
+        // overlap instead of paying one serial job latency per week.
         weeks.take(2).zipWithIndex.foreach { case (w, i) =>
           graft.catalog.Rollup.appendBatch(s,
             s.read.parquet(s"$staging/wk=$w"), path, s"w$i", groupCols, counters)
@@ -2428,19 +2427,10 @@ object Relational {
             graft.catalog.Rollup.compactAgg(s, path, groupCols,
               Seq("n" -> "sum", "users" -> "hll_union"))
         }
-        val rest = weeks.drop(2).zipWithIndex
-        if (rest.nonEmpty) {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(rest.size, 8))
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-          try Await.result(Future.sequence(rest.toSeq.map { case (w, i) => Future {
-            graft.catalog.Rollup.appendBatch(s,
-              s.read.parquet(s"$staging/wk=$w"), path, s"w${i + 2}",
-              groupCols, counters)
-          }}), Duration.Inf)
-          finally pool.shutdown()
+        graft.FanOut.map(s, weeks.drop(2).zipWithIndex.toSeq) { case (w, i) =>
+          graft.catalog.Rollup.appendBatch(s,
+            s.read.parquet(s"$staging/wk=$w"), path, s"w${i + 2}",
+            groupCols, counters)
         }
         graft.catalog.Rollup.readAgg(s, path, groupCols,
             Seq("n" -> "sum", "users" -> "hll_estimate"))

@@ -154,7 +154,7 @@ class DedupSpec extends SparkSpec {
 
     val fastFp = Dedup.simhash(corpus, "doc_id", "text")
       .as[(Long, Long)].collect().toMap
-    val slowFp = Dedup.simhashDeclarative(corpus, "doc_id", "text")
+    val slowFp = DeclarativeTwins.simhash(corpus, "doc_id", "text")
       .as[(Long, Long)].collect().toMap
     assert(fastFp == slowFp)
   }

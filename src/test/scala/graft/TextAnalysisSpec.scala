@@ -36,7 +36,7 @@ class TextAnalysisSpec extends SparkSpec {
         TextAnalysis.wordNgrams(col("toks"), n).as("g")).orderBy("id")
         .as[(Long, Seq[String])].collect()
       val want = df.select(col("id"),
-        TextAnalysis.wordNgramsDeclarative(col("toks"), n).as("g")).orderBy("id")
+        DeclarativeTwins.wordNgrams(col("toks"), n).as("g")).orderBy("id")
         .as[(Long, Seq[String])].collect()
       assert(got.toSeq == want.toSeq, s"n=$n")
     }
@@ -44,7 +44,7 @@ class TextAnalysisSpec extends SparkSpec {
     val nullDf = Seq((1L, null.asInstanceOf[Seq[String]])).toDF("id", "toks")
     val g = nullDf.select(TextAnalysis.wordNgrams(col("toks"), 2))
       .as[Seq[String]].collect().head
-    val w = nullDf.select(TextAnalysis.wordNgramsDeclarative(col("toks"), 2))
+    val w = nullDf.select(DeclarativeTwins.wordNgrams(col("toks"), 2))
       .as[Seq[String]].collect().head
     assert(g == Seq.empty && w == Seq.empty)
   }
@@ -67,7 +67,7 @@ class TextAnalysisSpec extends SparkSpec {
         TextAnalysis.fingerprints(col("text"), k, p).as("f")).orderBy("id")
         .as[(Long, Seq[Long])].collect()
       val want = df.select(col("id"),
-        TextAnalysis.fingerprintsDeclarative(col("text"), k, p).as("f")).orderBy("id")
+        DeclarativeTwins.fingerprints(col("text"), k, p).as("f")).orderBy("id")
         .as[(Long, Seq[Long])].collect()
       assert(got.toSeq == want.toSeq, s"k=$k p=$p")
     }
@@ -76,7 +76,7 @@ class TextAnalysisSpec extends SparkSpec {
     val nullDf = Seq((1L, null.asInstanceOf[String])).toDF("id", "text")
     val g = nullDf.select(TextAnalysis.fingerprints(col("text")))
       .as[Seq[Long]].collect().head
-    val w = nullDf.select(TextAnalysis.fingerprintsDeclarative(col("text")))
+    val w = nullDf.select(DeclarativeTwins.fingerprints(col("text")))
       .as[Seq[Long]].collect().head
     assert(g == Seq.empty && w == Seq.empty)
   }
