@@ -110,20 +110,6 @@ object Advisor {
     df.filter(key.isNotNull).groupBy(key.as("k"))
       .agg(count(lit(1)).as("cnt")).localCheckpoint()
 
-  /** The lazy twin of [[keyCounts]] for MANY-consumer plans: no
-    * materialization — instead every consumer embeds the IDENTICAL
-    * aggregate subtree, and AQE's exchange/stage reuse computes the
-    * scan+shuffle once per profile inside the single final job. Reuse
-    * requires consumers to share THIS DataFrame reference (canonically
-    * equal plans) — re-deriving the profile per edge is what breaks
-    * dedup. NOTE: for a multi-profile discovery sweep, [[keyCountsAll]]
-    * measured faster — the single fused AQE job saves scans but
-    * serializes the profile stages it shares, losing the overlap that
-    * independent jobs get for free. */
-  def keyCountsLazy(df: DataFrame, key: Column): DataFrame =
-    df.filter(key.isNotNull).groupBy(key.as("k"))
-      .agg(count(lit(1)).as("cnt"))
-
   /** Materialize MANY key profiles CONCURRENTLY: one eager
     * localCheckpoint job per (table, column) profile, all submitted at
     * once, so the profile scans+shuffles OVERLAP across executors

@@ -242,6 +242,49 @@ class ControlPlaneSpec extends SparkSpec {
     }
   }
 
+  test("S5 with directory omitted: images at the archive root beside the side files") {
+    // no `directory` → the stream reads the extraction root itself, so
+    // the listing walks the whole archive: bindings.csv and labels.csv
+    // sit beside the images and must neither become records nor fail
+    val bos = new ByteArrayOutputStream()
+    val z = new ZipOutputStream(bos)
+    z.putNextEntry(new ZipEntry("bindings.csv"))
+    z.write("in0\nx1\nx2\nx3\n".getBytes("UTF-8"))
+    z.closeEntry()
+    z.putNextEntry(new ZipEntry("labels.csv"))
+    z.write("v1,v2\n0.5,1.5\n2.5,3.5\n4.5,5.5\n".getBytes("UTF-8"))
+    z.closeEntry()
+    for (stem <- Seq("x1", "x2", "x3")) {
+      z.putNextEntry(new ZipEntry(s"$stem.png"))
+      z.write(pngBytes(0x123456))
+      z.closeEntry()
+    }
+    z.close()
+    withFixtureServer(bos.toByteArray) { zipUrl =>
+      val work = java.nio.file.Files.createTempDirectory("graft-cp-s5root").toString
+      val cp = new ControlPlane(spark, work)
+      val port = cp.start()
+      try {
+        val ep = s"http://127.0.0.1:$port/download"
+        val req = s"""{"command":"serialize","id":"s5root","url":"$zipUrl",
+          "image_binding":{"file":"bindings.csv"},
+          "input":[{"dataType":"image","binding_field":"in0","extension":".png"}],
+          "output":[{"dataType":"numeric","file":"labels.csv"}]}"""
+        assert(post(ep, req) == "Dataset downloaded.")
+        pollUntil(cp, ControlPlane.Serialized)
+        val sunk = spark.read.parquet(s"${cp.sinkDir}/datumdb.parquet")
+        assert(sunk.count() == 3, "one row per binding record")
+        assert(post(ep, """{"command":"deserialize","batch_size":1}""") ==
+          "Started training. Sit back.")
+        pollUntil(cp, ControlPlane.Trained)
+        assert(cp.shapes.keySet == Set("in0_content", "labels_content"))
+        assert(cp.shapes("labels_content") == Seq(2))
+        val report = cp.trainReport.get
+        assert(report.inDim == 3 * 2 * 3 && report.outDims == Seq(2))
+      } finally cp.stop()
+    }
+  }
+
   test("S5 rejects an unknown stream dataType (reference sys.exit parity)") {
     val bos = new ByteArrayOutputStream()
     val z = new ZipOutputStream(bos)

@@ -139,6 +139,142 @@ class IngestSpec extends SparkSpec {
     assert(msgs(e).exists(_.contains("binding stem has no file")))
   }
 
+  private def writePng(path: java.nio.file.Path, rgb: Int = 0): Unit = {
+    Files.createDirectories(path.getParent)
+    val img = new BufferedImage(2, 2, BufferedImage.TYPE_INT_RGB)
+    img.setRGB(0, 0, rgb)
+    ImageIO.write(img, "png", path.toFile)
+  }
+
+  test("binary readers list each source dir once: no 'Listing leaf files' job (S3, S4, S5)") {
+    // > 32 files per source: a per-file glob passes one root path per
+    // file, and above Spark's parallel-discovery threshold (32) that
+    // starts an N-task listing job on every load
+    val s3 = tmpDir("guard-s3")
+    for (label <- Seq("cat", "dog"); i <- 1 to 20) writePng(Paths.get(s3, label, s"i$i.png"))
+    val s4 = tmpDir("guard-s4")
+    for (stream <- Seq("rgb", "depth"); label <- Seq("a", "b"); i <- 1 to 10)
+      writePng(Paths.get(s4, stream, label, s"f$i.png"))
+    val s5 = tmpDir("guard-s5")
+    val stems = (1 to 40).map(i => f"r$i%02d")
+    stems.foreach(st => writePng(Paths.get(s5, s"$st.png")))
+    Files.writeString(Paths.get(s5, "bindings.csv"), ("in0\n" +: stems).mkString("\n") + "\n")
+
+    val sc = spark.sparkContext
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(descriptions.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(Ingest.readImageDir(spark, s3).count() == 40)
+      assert(Ingest.readImageStreams(spark, s4).count() == 20)
+      val binding = Ingest.readCsv(spark, s"$s5/bindings.csv")
+      assert(Ingest.readWithBinding(spark, binding, Seq("in0"), s5, ".png").count() == 40)
+      // listener delivery is asynchronous but ordered: once a marker job
+      // started after the readers is seen, every earlier job start is too
+      sc.setJobDescription("ingest-listing-guard-marker")
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 10000
+      while (!descriptions.contains("ingest-listing-guard-marker") &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(descriptions.contains("ingest-listing-guard-marker"))
+    } finally sc.removeSparkListener(listener)
+    val listing = descriptions.toArray.map(_.toString).filter(_.startsWith("Listing leaf files"))
+    assert(listing.isEmpty, s"listing jobs started: ${listing.mkString(" | ")}")
+  }
+
+  test("binding-driven scan ignores stray files beside and below the images (S5)") {
+    // none of these can be `<dir>/<stem>.png` for a binding stem: the
+    // rows are exactly those of the per-file glob the scan replaced
+    val dir = tmpDir("binding-stray")
+    for ((stem, rgb) <- Seq("x1" -> 0x110000, "x2" -> 0x002200, "y1" -> 0x000033))
+      writePng(Paths.get(dir, s"$stem.png"), rgb)
+    Files.writeString(Paths.get(dir, "notes.txt"), "not an image")
+    for (stray <- Seq("_h.png", ".h.png", "sub/y.png", "k=v/w.png"))
+      writePng(Paths.get(dir, stray), 0x444444)
+    Files.createDirectories(Paths.get(dir, "d.png"))
+    Files.write(Paths.get(dir, "d.png", "z.bin"), Array[Byte](1, 2, 3))
+    Files.writeString(Paths.get(dir, "bindings.csv"), "in0,out0\nx1,x2\ny1,x1\n")
+    val binding = Ingest.readCsv(spark, s"$dir/bindings.csv")
+    val out = Ingest.readWithBinding(spark, binding, Seq("in0", "out0"), dir, ".png")
+    val rows = out.selectExpr("key", "struct(in0_path, sha2(in0_content, 256))",
+        "struct(out0_path, sha2(out0_content, 256))")
+      .as[(Long, (String, String), (String, String))].collect().sortBy(_._1).toSeq
+    val abs = new java.io.File(dir).getAbsolutePath
+    def file(stem: String) = (s"$abs/$stem.png", java.security.MessageDigest.getInstance("SHA-256")
+      .digest(Files.readAllBytes(Paths.get(dir, s"$stem.png"))).map("%02x".format(_)).mkString)
+    assert(rows == Seq((1L, file("x1"), file("x2")), (2L, file("y1"), file("x1"))))
+  }
+
+  test("image dir scans skip stray files and keep the parent dir as label (S3, S4)") {
+    val s3 = tmpDir("imgs-stray")
+    // dog/sub/deep/e.png is two levels below a label: `dir/*/*` never
+    // reached it, and the directory listing must not either
+    for (f <- Seq("cat/a.png", "cat/b.png", "dog/c.png", "dog/sub/d.png", "dog/sub/deep/e.png"))
+      writePng(Paths.get(s3, f))
+    Files.writeString(Paths.get(s3, "README.txt"), "not a record")
+    val recs = Ingest.readImageDir(spark, s3).select("key", "slabel", "path")
+      .as[(Long, String, String)].collect().sortBy(_._1)
+    assert(recs.map(r => (r._1, r._2, r._3.split("/").last)).toSeq ==
+      Seq((1L, "cat", "a.png"), (2L, "cat", "b.png"), (3L, "dog", "c.png"), (4L, "sub", "d.png")))
+
+    val s4 = tmpDir("mimo-stray")
+    for (stream <- Seq("rgb", "depth")) writePng(Paths.get(s4, stream, "a", "f1.png"))
+    writePng(Paths.get(s4, "rgb", "x.png"))
+    writePng(Paths.get(s4, "rgb", "a", "sub", "deep", "f2.png"))
+    Files.writeString(Paths.get(s4, "README.txt"), "not a record")
+    val wide = Ingest.readImageStreams(spark, s4)
+    assert(wide.columns.toSet == Set("key", "slabel", "rgb", "depth"))
+    assert(wide.selectExpr("slabel", "rgb.path", "depth.path").as[(String, String, String)]
+      .collect().map(r => (r._1, r._2.split("/").last, r._3.split("/").last)).toSeq ==
+      Seq(("a", "f1.png", "f1.png")))
+
+    // nothing at the record depth: a loud failure, not an empty dataset
+    val empty = tmpDir("imgs-none")
+    Files.writeString(Paths.get(empty, "README.txt"), "no labels here")
+    intercept[Exception](Ingest.readImageDir(spark, empty))
+  }
+
+  test("image dir scans skip label and stream dirs named _x or .x (Spark's hidden-path rule)") {
+    // the per-file glob applied the rule to file names only; the directory
+    // listing applies it at every level, so these trees yield no record
+    val s3 = tmpDir("imgs-hidden")
+    for (f <- Seq("cat/a.png", "_tmp/b.png", ".cache/c.png")) writePng(Paths.get(s3, f))
+    assert(Ingest.readImageDir(spark, s3).select("slabel").as[String].collect().toSeq ==
+      Seq("cat"))
+    val s4 = tmpDir("mimo-hidden")
+    for (f <- Seq("rgb/a/f1.png", "depth/a/f1.png", "_old/a/f1.png",
+        "rgb/_b/f1.png", "depth/_b/f1.png", "rgb/.c/f1.png", "depth/.c/f1.png"))
+      writePng(Paths.get(s4, f))
+    val wide = Ingest.readImageStreams(spark, s4)
+    assert(wide.columns.toSet == Set("key", "slabel", "rgb", "depth"))
+    assert(wide.select("slabel").as[String].collect().toSeq == Seq("a"))
+  }
+
+  test("format(\"binaryFile\") appears in main sources only inside Ingest.binaryFiles") {
+    // one place decides how a binary source is listed (see Ingest's doc)
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root))
+    val needle = "format(\"binaryFile\")"
+    val sources = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala"))
+    val hits = sources.flatMap { f =>
+      val text = new String(Files.readAllBytes(f), "UTF-8")
+      Iterator.iterate(text.indexOf(needle))(i => text.indexOf(needle, i + 1))
+        .takeWhile(_ >= 0).map(i => (root.relativize(f).toString.replace('\\', '/'), text, i))
+    }.toSeq
+    val outside = hits.filterNot { case (rel, text, i) =>
+      val start = text.indexOf("private def binaryFiles(")
+      rel == "graft/ingest/Ingest.scala" && start >= 0 && i > start &&
+        i < text.indexOf("\n  }\n", start)
+    }
+    assert(hits.nonEmpty && outside.isEmpty,
+      s"load binary files through Ingest.binaryFiles: ${outside.map(_._1).mkString(", ")}")
+  }
+
   test("bag-of-words: distributed vocab table + sparse per-doc counts (P4)") {
     val df = Seq((1L, "spark makes big data small"), (2L, "big data big plans"),
         (3L, "")).toDF("key", "text")
