@@ -1,5 +1,6 @@
 package graft.ingest
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -17,27 +18,59 @@ import org.apache.spark.sql.types._
   * Intentional fix: batches follow NUMERIC key order, not the reference's
   * lexicographic string-key accident (SURVEY §1.1).
   *
+  * One layout per fit, as the reference opens its sorted LMDB once and
+  * reads it sequentially (`serialize.py:637-795`): the key-sorted sink is
+  * pinned by one local checkpoint, and the count that materializes it is
+  * `nSamples`; `shapes` is its first row and every epoch is its
+  * `toLocalIterator`, trimmed on the driver to `nBatches * batchSize`
+  * rows. The pin is a full range-partitioned sort, not a top-K
+  * `orderBy.limit`: that plans as `TakeOrderedAndProject` on ONE
+  * partition, which at scale sends the whole epoch through a single
+  * task's in-memory heap.
+  *
   * Scale note: executors scan/sort; only one batch at a time crosses to
   * the driver via `toLocalIterator` — the driver never holds the dataset.
   */
 final case class BatchExport(df: DataFrame, keyCol: String,
                              inputCols: Seq[String], outputCols: Seq[String],
-                             batchSize: Int,
-                             spillDir: Option[String] = None) {
+                             batchSize: Int) {
 
   // reject at construction: batchSize 0 surfaced later as an opaque
-  // ArithmeticException from nBatches, negatives as an AnalysisException
-  // from limit() mid-epoch
+  // ArithmeticException from nBatches
   require(batchSize > 0, s"BatchExport: batchSize must be positive, got $batchSize")
 
-  lazy val nSamples: Long = df.count()
+  /** The pinned layout, its backing RDD and its row count. Pinning once
+    * also snapshots the sink and fixes ONE sort layout, so ties broken
+    * differently by a re-executed range sample cannot reshuffle batch
+    * membership between epochs, and no epoch re-sorts the corpus (the
+    * q139 repeated-scan pattern). A local checkpoint is not reliable
+    * storage: a lost block fails the next epoch loudly (the reference's
+    * restart posture); a reliable pin is ROADMAP item 3's general `Pin`.
+    * Call [[release]] when the consumer is done. */
+  private var pin: Option[(DataFrame, RDD[_], Long)] = None
+  private def pinned: (DataFrame, RDD[_], Long) = synchronized {
+    pin.getOrElse {
+      val layout = df.orderBy(col(keyCol)).localCheckpoint(eager = false)
+      // the LogicalRDD the checkpoint scans: a local checkpoint persists
+      // OUTSIDE the SQL cache manager, so Dataset.unpersist() would be a
+      // no-op and release() must unpersist this RDD itself
+      val rdd = layout.queryExecution.analyzed.collectFirst {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      }.get
+      val p = (layout, rdd, rdd.count()) // materializes the checkpoint
+      pin = Some(p)
+      p
+    }
+  }
+
+  lazy val nSamples: Long = pinned._3
   lazy val nBatches: Long = nSamples / batchSize
 
   /** Shapes from schema metadata — no data probe needed for fixed-width
-    * types; array lengths are probed from the first row (the reference's
+    * types; array lengths come from the pin's first row (the reference's
     * shape probe, D2, minus its early-return bug `serialize.py:728`). */
   lazy val shapes: Map[String, Seq[Int]] = {
-    val probe = df.orderBy(col(keyCol)).limit(1).collect().headOption
+    val probe = pinned._1.head(1).headOption
     (inputCols ++ outputCols).map { c =>
       val shape = df.schema(c).dataType match {
         case ArrayType(_, _) =>
@@ -53,112 +86,32 @@ final case class BatchExport(df: DataFrame, keyCol: String,
     }.toMap
   }
 
-  /** The key-sorted, remainder-trimmed epoch layout, pinned ONCE with an
-    * eager local checkpoint on first use. Every epoch after the first is
-    * a linear scan of the materialized blocks — NOT a repeated global
-    * sort: the reference's per-epoch cost is a sequential read of the
-    * already-sorted LMDB (`serialize.py:731-795`), and a multi-epoch fit
-    * that re-shuffles 100 TB per epoch would be the q139 repeated-scan
-    * pattern. The checkpoint also snapshots the dataset at first-epoch
-    * time (the sink is immutable post-serialize, so this is the
-    * reference contract) and pins ONE sort layout, so ties broken
-    * differently by a re-executed range sample cannot reshuffle batch
-    * membership between epochs. Call [[release]] when the consumer is
-    * done (the repo's caller-release convention for pinned layouts). */
-  private var sortedViewRef: Option[DataFrame] = None
-  private var pinnedRdd: Option[org.apache.spark.rdd.RDD[_]] = None
-  private var spillFiles: Option[Seq[String]] = None
-  private def sortedView: DataFrame = synchronized {
-    sortedViewRef.getOrElse {
-      val takeN = nBatches * batchSize
-      require(takeN <= Int.MaxValue,
-        s"epoch of $takeN rows exceeds a single driver-side iteration; " +
-          "export epochs this large should be written to storage per-batch instead")
-      // Recovery trade-off (caller's choice via `spillDir`):
-      //  - default (None): localCheckpoint — fastest pin, but it
-      //    truncates lineage WITHOUT reliable storage; if an executor
-      //    dies mid-fit, later epochs cannot recompute the lost blocks
-      //    and the train run fails and restarts (ControlPlane lands it
-      //    in Failed; the reference's posture, which re-reads its whole
-      //    LMDB per restart). Right for short fits on stable executors.
-      //  - Some(dir): the sorted view is written ONCE to reliable
-      //    storage and every epoch scans the written range-ordered part
-      //    files SEQUENTIALLY (see [[epoch]]) — one extra full write
-      //    buys executor-loss survival, the right trade on preemptible
-      //    clusters × many epochs. Pinning semantics are identical:
-      //    one sort total, frozen batch membership.
-      val sorted = df.orderBy(col(keyCol)).limit(takeN.toInt)
-      val v = spillDir match {
-        case Some(dir) =>
-          val path = s"$dir/epoch-layout.parquet"
-          sorted.write.mode("overwrite").parquet(path)
-          // a global sort writes one part file per range partition, in
-          // partition order — lexicographic part-file order IS key order
-          // (part-00000 < part-00001 < ...), and parquet preserves row
-          // order within a file; record the ordered file list once
-          val parts = Option(new java.io.File(path).listFiles()).toSeq.flatten
-            .filter(f => f.isFile && f.getName.startsWith("part-"))
-            .map(_.getAbsolutePath).sorted
-          spillFiles = Some(parts)
-          df.sparkSession.read.parquet(path)
-        case None =>
-          val ckpt = sorted.localCheckpoint()
-          // capture the checkpoint's backing RDD (the LogicalRDD the
-          // checkpointed Dataset scans): localCheckpoint persists
-          // OUTSIDE the SQL cache manager, so Dataset.unpersist() would
-          // be a no-op and release() would leave the MEMORY_AND_DISK
-          // blocks pinned until a driver GC let ContextCleaner find them
-          pinnedRdd = ckpt.queryExecution.analyzed.collectFirst {
-            case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-          }
-          ckpt
-      }
-      sortedViewRef = Some(v)
-      v
-    }
-  }
-
-  /** Drop the pinned epoch layout (no-op before the first epoch):
-    * unpersists the checkpointed RDD's blocks directly — promptly, not
-    * GC-eventually (see pin-time comment). A spilled layout stays on
-    * disk (the spill dir is caller-owned storage). */
+  /** Drop the pinned epoch layout (no-op before the first pin):
+    * unpersists the checkpointed RDD's blocks promptly, not when a driver
+    * GC lets ContextCleaner find them. The next use pins again. */
   def release(): Unit = synchronized {
-    pinnedRdd.foreach(_.unpersist(blocking = false))
-    pinnedRdd = None
-    sortedViewRef = None
-    spillFiles = None
+    pin.foreach(_._2.unpersist(blocking = false))
+    pin = None
   }
-
-  /** Distributed row count of the pinned epoch view (pins it if needed)
-    * — the cheap integrity guard; counting by draining an epoch through
-    * the driver would ship every row once for nothing. */
-  def epochRows: Long = sortedView.count()
 
   /** One epoch: `nBatches` batches of `(inputs, outputs)` column-major
-    * row groups, in numeric key order.
-    *
-    * Spill mode reads the range-ordered part files ONE AT A TIME in
-    * file order — the reference's sequential LMDB read re-expressed:
-    * linear scans, no shuffle, and crucially NO re-sort per epoch (a
-    * whole-directory read would need an `orderBy` to guarantee global
-    * order, re-shuffling the corpus every epoch — the exact pattern the
-    * pin exists to avoid). Each file is a separate tiny job; batches
-    * span file boundaries through the flat iterator. */
+    * row groups, in numeric key order. Throws IllegalStateException if
+    * the layout runs out before `nBatches` full batches. Rows are pulled
+    * only by library iterators, so the epoch's Spark jobs carry the
+    * consumer's call site. */
   def epoch(): Iterator[(Map[String, IndexedSeq[Any]], Map[String, IndexedSeq[Any]])] = {
     import scala.jdk.CollectionConverters._
-    val view = sortedView // pin first (also populates spillFiles in spill mode)
-    val rowIter: Iterator[Row] = spillFiles match {
-      case Some(parts) =>
-        parts.iterator.flatMap(p =>
-          df.sparkSession.read.schema(view.schema).parquet(p)
-            .toLocalIterator().asScala)
-      case None => view.toLocalIterator().asScala
-    }
-    rowIter.grouped(batchSize).map { rows =>
-        val batch = rows.toIndexedSeq
-        def cols(cs: Seq[String]) = cs.map(c => c -> batch.map(_.getAs[Any](c))).toMap
-        (cols(inputCols), cols(outputCols))
-      }
+    val groups = pinned._1.toLocalIterator().asScala.grouped(batchSize)
+    var served = 0L
+    def short() = throw new IllegalStateException(
+      s"BatchExport: epoch layout ran out after $served of $nBatches batches of $batchSize")
+    Iterator.iterate(1L)(_ + 1).takeWhile(_ <= nBatches).zip(groups).map { case (_, rows) =>
+      if (rows.size < batchSize) short()
+      served += 1
+      val batch = rows.toIndexedSeq
+      def cols(cs: Seq[String]) = cs.map(c => c -> batch.map(_.getAs[Any](c))).toMap
+      (cols(inputCols), cols(outputCols))
+    } ++ { if (served < nBatches) short(); Iterator.empty }
   }
 
   /** Infinite generator over epochs (reference `batch_generator`). */

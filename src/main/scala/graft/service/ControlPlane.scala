@@ -76,8 +76,8 @@ final class ControlPlane(spark: SparkSession, workDir: String, port: Int = 0) {
   def start(): Int = synchronized {
     require(server == null, "already started")
     // restart recovery: a sink persisted by a previous process IS the
-    // Serialized state — without this, the on-disk sink (and the S5
-    // streams.json written beside it) could never be deserialized again
+    // Serialized state — without this, the on-disk sink (which carries
+    // the S5 stream roles in its own schema) could never be deserialized
     if (state == Idle && sinkExists) state = Serialized
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/download", (ex: HttpExchange) => handle(ex))
@@ -198,9 +198,6 @@ final class ControlPlane(spark: SparkSession, workDir: String, port: Int = 0) {
   private def runSerialize(req: JValue): Unit =
     try {
       Archive.extractZip(zipPath, dataDir)
-      // stale stream metadata from an earlier S5 run must not describe
-      // whatever this request is about to sink (or fail to sink)
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(streamsMetaPath))
       req \ "image_binding" match {
         case spec: JObject =>
           val (scanned, ins, outs) = readBindingLayout(req, spec)
@@ -208,11 +205,9 @@ final class ControlPlane(spark: SparkSession, workDir: String, port: Int = 0) {
           // 438-442, du×100); the parquet successor asks the same
           // question as a loud pre-flight instead of a reservation —
           // from the INPUT footprint, so no extra scan of the source
-          preflightSinkOrRefuse(req, scanned)
-          Tables.save(scanned, sinkDir, sinkName)
-          // roles AFTER the sink: a failed save must not leave a
-          // streams.json describing a parquet that was never written
-          writeStreamsMeta(ins, outs)
+          preflightSinkOrRefuse(scanned)
+          // the roles travel in the sink's own schema, committed with it
+          Tables.save(withRoles(scanned, ins, outs), sinkDir, sinkName)
         case _ =>
           val nInputPerRecord = req \ "input" match {
             case JArray(specs) if specs.length > 1 => specs.length
@@ -223,7 +218,7 @@ final class ControlPlane(spark: SparkSession, workDir: String, port: Int = 0) {
           val scanned =
             if (nInputPerRecord > 1) Ingest.readImageStreams(spark, dataDir)
             else Ingest.readImageDir(spark, dataDir)
-          preflightSinkOrRefuse(req, scanned) // W2 pre-flight (see above)
+          preflightSinkOrRefuse(scanned) // W2 pre-flight (see above)
           Tables.save(scanned, sinkDir, sinkName)
       }
       state = Serialized
@@ -231,27 +226,19 @@ final class ControlPlane(spark: SparkSession, workDir: String, port: Int = 0) {
       case e: Exception => state = Failed(s"serialize: ${e.getMessage}")
     }
 
-  /** W2 sink pre-flight with a request knob and a precision fallback.
-    * The input-footprint check is scan-free but OVER-states compressible
-    * sinks (numeric/text streams compress several-fold in parquet), so a
-    * volume with 1.0–1.5× the input's free space would refuse a
-    * serialize that succeeds. Two escape hatches: the request may set
-    * `sink_safety_factor` (default 1.5, must be ≥ 1), and when the
-    * cheap input-footprint check refuses, we re-judge with the sampled
-    * REAL-codec estimate ([[Tables.requireSinkFits]]) before refusing —
-    * the count + sample write is paid only in the borderline case. */
-  private def preflightSinkOrRefuse(req: JValue,
-                                    scanned: org.apache.spark.sql.DataFrame): Unit = {
-    val sf = req \ "sink_safety_factor" match {
-      case JDouble(v) => v
-      case JDecimal(v) => v.toDouble
-      case JInt(v) => v.toDouble
-      case _ => 1.5
-    }
-    try { Tables.requireSinkFitsFromInput(dataDir, sinkDir, safetyFactor = sf); () }
+  /** W2 sink pre-flight at a safety factor of 1.5, with a precision
+    * fallback. The input-footprint check is scan-free but OVER-states
+    * compressible sinks (numeric/text streams compress several-fold in
+    * parquet), so a volume with 1.0–1.5× the input's free space would
+    * refuse a serialize that succeeds. So when the cheap input-footprint
+    * check refuses, we re-judge with the sampled REAL-codec estimate
+    * ([[Tables.requireSinkFits]]) before refusing — the count + sample
+    * write is paid only in the borderline case. */
+  private def preflightSinkOrRefuse(scanned: org.apache.spark.sql.DataFrame): Unit = {
+    try { Tables.requireSinkFitsFromInput(dataDir, sinkDir, safetyFactor = 1.5); () }
     catch {
       case footprint: IllegalStateException =>
-        try { Tables.requireSinkFits(scanned, sinkDir, safetyFactor = sf); () }
+        try { Tables.requireSinkFits(scanned, sinkDir, safetyFactor = 1.5); () }
         catch {
           case _: IllegalStateException =>
             // both estimates refuse: report the footprint one — it names
@@ -269,10 +256,9 @@ final class ControlPlane(spark: SparkSession, workDir: String, port: Int = 0) {
     * (`serialize.py:570-580`), numeric/text streams from their own files
     * (`serialize.py:583-612`); an unknown dataType is a hard error, the
     * reference's `sys.exit(-1)` (`serialize.py:592-594`). Returns the
-    * scanned records plus the request's input/output content-column
-    * names, recorded next to the sink so the training hand-off feeds the
-    * streams the request declared, not the slabel convention of the dir
-    * layouts. */
+    * scanned records plus the request's input/output content columns,
+    * in declared order, so the training hand-off feeds the streams the
+    * request declared, not the slabel convention of the dir layouts. */
   private def readBindingLayout(req: JValue, spec: JObject)
       : (org.apache.spark.sql.DataFrame, Seq[String], Seq[String]) = {
     val file = spec \ "file" match {
@@ -328,7 +314,7 @@ final class ControlPlane(spark: SparkSession, workDir: String, port: Int = 0) {
     val widened = attachSideStreams(binding, sides)
     val images = (ins ++ outs).collect { case Left(b) => b }
     def contentNames(xs: Seq[Either[Ingest.BindingStream, SideStream]]) =
-      xs.map { case Left(b) => b.field; case Right(s) => s.name }
+      xs.map { case Left(b) => s"${b.field}_content"; case Right(s) => s"${s.name}_content" }
     (Ingest.readWithBinding(spark, widened, images),
       contentNames(ins), contentNames(outs))
   }
@@ -368,29 +354,25 @@ final class ControlPlane(spark: SparkSession, workDir: String, port: Int = 0) {
     widened.drop("_row")
   }
 
-  /** Sink-side record of the S5 request's stream roles (survives a server
-    * restart between serialize and deserialize, like the sink itself). */
-  private def streamsMetaPath = s"$sinkDir/$sinkName.streams.json"
-
-  private def writeStreamsMeta(ins: Seq[String], outs: Seq[String]): Unit = {
-    val json = JObject("input" -> JArray(ins.map(JString(_)).toList),
-      "output" -> JArray(outs.map(JString(_)).toList))
-    new java.io.File(sinkDir).mkdirs()
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(streamsMetaPath),
-      JsonMethods.compact(JsonMethods.render(json)))
-  }
-
-  private def readStreamsMeta(): Option[(Seq[String], Seq[String])] = {
-    val p = java.nio.file.Paths.get(streamsMetaPath)
-    if (!java.nio.file.Files.exists(p)) None
-    else JsonMethods.parseOpt(java.nio.file.Files.readString(p)).map { j =>
-      def names(f: String) = j \ f match {
-        case JArray(xs) => xs.collect { case JString(s) => s }
-        case _          => Nil
+  /** Tag each declared stream column with its role and declared position
+    * (`graft.input` / `graft.output` → index) in its `StructField`
+    * metadata. Parquet keeps field metadata, so the roles are committed
+    * with the sink itself and survive a server restart between serialize
+    * and deserialize. A column declared in both roles carries both tags. */
+  private def withRoles(df: org.apache.spark.sql.DataFrame, ins: Seq[String],
+                        outs: Seq[String]): org.apache.spark.sql.DataFrame =
+    Seq(InputRole -> ins, OutputRole -> outs)
+      .flatMap { case (role, cs) => cs.zipWithIndex.map { case (c, i) => (c, role, i) } }
+      .groupBy(_._1).foldLeft(df) { case (acc, (c, tags)) =>
+        val md = new org.apache.spark.sql.types.MetadataBuilder()
+        tags.foreach { case (_, role, i) => md.putLong(role, i) }
+        acc.withMetadata(c, md.build())
       }
-      (names("input"), names("output"))
-    }
-  }
+
+  /** The columns tagged with `role`, in declared order. */
+  private def tagged(df: org.apache.spark.sql.DataFrame, role: String): Seq[String] =
+    df.schema.fields.toSeq.filter(_.metadata.contains(role))
+      .sortBy(_.metadata.getLong(role)).map(_.name)
 
   /** The deserialize job: D1 open + stats, D2 shapes, D3 batch stream,
     * then the M1 fit — the reference trains its Keras MIMO model here
@@ -398,30 +380,21 @@ final class ControlPlane(spark: SparkSession, workDir: String, port: Int = 0) {
     * deterministic JVM twin ([[graft.ml.MimoTrainer]]): same topology
     * (flatten → concat → sigmoid Dense per output), same MSE/Adam loss,
     * driven by the same `steps_per_epoch = n_samples // batch_size`
-    * generator contract. The epoch-drain count check runs first so a
-    * short stream fails loudly before any weight update. */
+    * generator contract. A layout short of `nBatches` batches fails the
+    * epoch loudly ([[BatchExport.epoch]]). */
   private def runTrainingHandOff(batchSize: Int, epochs: Int): Unit =
     try {
       val df = spark.read.parquet(s"$sinkDir/$sinkName.parquet")
       // S5 datasets carry their request-declared stream roles in the
-      // sink metadata; dir-layout datasets use the slabel convention.
-      val (inputCols, outputCols) = readStreamsMeta() match {
-        case Some((ins, outs)) =>
-          (ins.map(_ + "_content"), outs.map(_ + "_content"))
-        case None =>
-          (df.columns.filter(c => c != "key" && c != "slabel").toSeq, Seq("slabel"))
+      // sink's schema; dir-layout datasets use the slabel convention.
+      val (inputCols, outputCols) = tagged(df, InputRole) match {
+        case Nil => (df.columns.filter(c => c != "key" && c != "slabel").toSeq, Seq("slabel"))
+        case ins => (ins, tagged(df, OutputRole))
       }
       val export = BatchExport(df, "key", inputCols, outputCols, batchSize)
       try {
         lastReport = None // a stale curve must not describe this run
         lastShapes = export.shapes
-        // distributed row-count guard on the pinned epoch view — NOT a
-        // driver drain: shipping every row through toLocalIterator just
-        // to count it doubled time-to-first-weight-update
-        val n = export.epochRows
-        if (n != export.nBatches * batchSize)
-          throw new IllegalStateException(
-            s"epoch view holds $n of ${export.nBatches * batchSize} rows")
         val trainer = new graft.ml.MimoTrainer(inputCols, outputCols, epochs)
         lastReport = Some(trainer.fit(export.batches(), export.nBatches))
         state = Trained
@@ -432,6 +405,10 @@ final class ControlPlane(spark: SparkSession, workDir: String, port: Int = 0) {
 }
 
 object ControlPlane {
+  /** `StructField` metadata keys that carry the S5 stream roles in the sink's schema. */
+  private val InputRole = "graft.input"
+  private val OutputRole = "graft.output"
+
   /** A non-image S5 stream: `numeric` (csv of per-record vectors, the
     * reference `readNumeric`) or `text`, read from its own `file` and
     * aligned with binding rows POSITIONALLY — the reference's queue

@@ -382,57 +382,70 @@ class IngestSpec extends SparkSpec {
     // release is idempotent and the export remains usable (re-pins)
     be.release()
     assert(be.epoch().size == 4)
-    // distributed integrity count of the pinned view (no driver drain)
-    assert(be.epochRows == 20)
+    // one epoch's batches hold nBatches * batchSize rows
+    assert(be.epoch().map(_._1("features").size).sum == 20)
     be.release()
   }
 
-  test("batch export spill mode: reliable layout, same batches, no per-epoch sort") {
-    // spillDir writes the sorted layout ONCE to parquet and epochs read
-    // the range-ordered part files sequentially — executor-loss-safe
-    // (preemptible-cluster trade) with IDENTICAL batch semantics to the
-    // localCheckpoint pin, and still one sort total
-    val df = (1L to 23L).map(k => (k, Array.fill(4)(k.toFloat), k % 2))
-      .toDF("key", "features", "label")
-    val spill = java.nio.file.Files.createTempDirectory("graft-spill").toString
-    val local = BatchExport(df, "key", Seq("features"), Seq("label"), batchSize = 5)
-    val spilled = BatchExport(df, "key", Seq("features"), Seq("label"), batchSize = 5,
-      spillDir = Some(spill))
-    def labels(be: BatchExport) =
-      be.epoch().map(_._2("label").map(String.valueOf).toList).toList
-    assert(labels(spilled) == labels(local))
-    assert(spilled.epochRows == 20)
-    // the layout is real reliable storage: the parquet dir exists and a
-    // second epoch replays the same membership from disk
-    assert(new java.io.File(s"$spill/epoch-layout.parquet").exists())
-    assert(labels(spilled) == labels(local))
-    // one sort total: epochs in spill mode never re-sort — gate by
-    // counting sort-bearing executions across two further epochs
-    val sortQEs = new java.util.concurrent.atomic.AtomicInteger(0)
+  test("batch export pins one full sort: no top-K plan, many partitions, keys in order") {
+    // a pin built as orderBy.limit plans as TakeOrderedAndProject on ONE
+    // partition: at scale the whole epoch would pass through one task's
+    // heap. The pin must be a range-partitioned sort, trimmed on the driver.
+    import org.apache.spark.sql.execution.QueryExecution
+    import scala.jdk.CollectionConverters._
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.getOption(coalesce)
+    val pinPlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val l = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             ns: Long): Unit = {
-        val p = qe.executedPlan.toString
-        if (p.contains("Sort ") || p.contains("TakeOrderedAndProject"))
-          sortQEs.incrementAndGet()
-        ()
-      }
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             e: Exception): Unit = ()
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") pinPlans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    spark.conf.set(coalesce, "false")
     spark.listenerManager.register(l)
     try {
-      spilled.epoch().size; spilled.epoch().size
-      // listener dispatch is async; settle before asserting
-      var last = -1; var stable = 0
-      while (stable < 3) {
-        val now = sortQEs.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-        Thread.sleep(100)
-      }
-      assert(sortQEs.get() == 0,
-        s"spill-mode epochs must read part files linearly, saw ${sortQEs.get()} sorts")
-    } finally spark.listenerManager.unregister(l)
-    local.release(); spilled.release()
+      // keys 1..1000 in a scrambled order (7919 is coprime with 1000)
+      val df = spark.range(0, 1000, 1, 8).select((col("id") * 7919 % 1000 + 1).as("key"))
+        .withColumn("x", col("key") * 2)
+      val be = BatchExport(df, "key", Seq("x"), Seq("key"), batchSize = 7)
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val keys = be.batches(epochs = 2).map(_._2("key").map(_.asInstanceOf[Long])).toList
+      assert(be.nBatches == 142 && keys.size == 284)
+      assert(keys.flatten == ((1L to 994L) ++ (1L to 994L)),
+        "two epochs must yield keys 1..nBatches*batchSize in order, twice")
+      val pinned = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
+      assert(pinned.size == 1 && pinned.head._2.getNumPartitions > 1,
+        s"the pin must keep the sort's partitions, got ${pinned.values.map(_.getNumPartitions)}")
+      val deadline = System.currentTimeMillis() + 10000
+      while (pinPlans.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      val plans = pinPlans.asScala.toList
+      assert(plans.size == 1, s"one pin per layout, saw ${plans.size}")
+      assert(!plans.head.contains("TakeOrderedAndProject") && !plans.head.contains("GlobalLimit"),
+        plans.head)
+      be.release()
+    } finally {
+      spark.listenerManager.unregister(l)
+      prev.fold(spark.conf.unset(coalesce))(spark.conf.set(coalesce, _))
+    }
+  }
+
+  test("batch export: a lost pinned block fails the next epoch loudly, naming the block") {
+    // local checkpoints are not reliable storage: when an executor loses
+    // the pinned blocks, the next epoch must fail and say which block,
+    // never yield a batch from a partial layout
+    val df = (1L to 23L).map(k => (k, k % 2)).toDF("key", "label")
+    val be = BatchExport(df, "key", Seq("key"), Seq("label"), batchSize = 5)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    assert(be.epoch().size == 4)
+    val pinned = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(pinned.size == 1)
+    val (id, rdd) = pinned.head
+    rdd.unpersist(blocking = true) // drop the blocks behind the export's back
+    var yielded = 0
+    val e = intercept[Exception](be.epoch().foreach(_ => yielded += 1))
+    assert(yielded == 0, "no batch may come from a layout with lost blocks")
+    assert(e.getMessage.contains("Checkpoint block") && e.getMessage.contains(s"rdd_${id}_"),
+      e.getMessage)
+    be.release()
   }
 }
