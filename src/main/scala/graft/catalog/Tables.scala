@@ -37,12 +37,13 @@ object Tables {
 
   /** Sanitized dir + a short digest of the RAW dir string: sanitization
     * alone is not injective (`/data/sf0.1` and `/data/sf0_1` collide), and
-    * a collision would silently serve one dir's rows for the other. */
+    * a collision would silently serve one dir's rows for the other. Lower
+    * case, as the catalog names the table's warehouse directory. */
   private def bucketTableName(dir: String, name: String): String = {
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    "graft_bkt_" + dir.replaceAll("[^A-Za-z0-9]", "_").dropWhile(_ == '_') +
-      "_" + digest + "_" + name
+    ("graft_bkt_" + dir.replaceAll("[^A-Za-z0-9]", "_").dropWhile(_ == '_') +
+      "_" + digest + "_" + name).toLowerCase(java.util.Locale.ROOT)
   }
 
   /** Cheap content fingerprint of a source parquet path: sorted

@@ -51,12 +51,7 @@ final case class BatchExport(df: DataFrame, keyCol: String,
   private def pinned: (DataFrame, RDD[_], Long) = synchronized {
     pin.getOrElse {
       val layout = df.orderBy(col(keyCol)).localCheckpoint(eager = false)
-      // the LogicalRDD the checkpoint scans: a local checkpoint persists
-      // OUTSIDE the SQL cache manager, so Dataset.unpersist() would be a
-      // no-op and release() must unpersist this RDD itself
-      val rdd = layout.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.get
+      val rdd = graft.Rounds.checkpointRdd(layout)
       val p = (layout, rdd, rdd.count()) // materializes the checkpoint
       pin = Some(p)
       p

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Rounds
 
 /** Multi-source breadth-first search: exact hop distances from a seed
   * set over an undirected graph — the reachability/radius primitive
@@ -17,48 +18,37 @@ import org.apache.spark.sql.functions._
   * Scale design (100 TB): each round is one edge⋈frontier hash join
   * (the frontier, not the graph, is the build side) + one anti join
   * against the reached set — O(R) edge-list shuffles, the same bound
-  * as LPA/k-core; no per-node adjacency lists are ever collected.
-  * Lineage is cut per round (eager localCheckpoint) exactly as in
-  * [[KCore.peels]]: round i references round i-1 twice, so an uncut
-  * plan re-expands exponentially. A multi-node deployment with
-  * executor loss would use reliable checkpoint(dir); the rounds are
-  * identical.
+  * as LPA/k-core, on [[graft.Rounds]]; no per-node adjacency lists are
+  * ever collected.
   */
 object Bfs {
 
-  /** BFS layers: element i is the set of nodes at hop distance exactly
-    * i (element 0 = the seeds), as single-column `u` DataFrames.
+  /** One row per hop distance 0..rounds: dist, n_nodes, xor_nodes.
     * `edges` is an undirected simple graph (a < b, deduplicated);
-    * `seeds` is a single-column `u` node set. */
-  def layers(edges: DataFrame, seeds: DataFrame, rounds: Int): Seq[DataFrame] = {
+    * `seeds` is a single-column `u` node set. Exhausted layers report
+    * (0, 0) rather than vanishing, so the row count itself is pinned. */
+  def distances(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0)
     // both directions once, up front: neighbor expansion becomes a
     // single equi join per round
-    val dir = edges.select(col("a").cast("long").as("s"), col("b").cast("long").as("d"))
-      .union(edges.select(col("b").cast("long").as("s"), col("a").cast("long").as("d")))
-      .localCheckpoint(true)
-    var frontier = seeds.select(col("u").cast("long").as("u")).distinct()
-      .localCheckpoint(true)
-    var reached = frontier
-    frontier +: (1 to rounds).map { _ =>
-      val nbrs = dir.join(frontier, dir("s") === frontier("u"))
-        .select(col("d").as("u")).distinct()
-      frontier = nbrs.join(reached, Seq("u"), "left_anti").localCheckpoint(true)
-      reached = reached.union(frontier).localCheckpoint(true)
-      frontier
+    val dir = edges.select(col("a").cast("long").as("u"), col("b").cast("long").as("v"))
+      .union(edges.select(col("b").cast("long").as("u"), col("a").cast("long").as("v")))
+    // the state is reached(u, d); round i's frontier is its d = i-1 slice
+    val init = seeds.select(col("u").cast("long").as("u")).distinct()
+      .withColumn("d", lit(0L))
+    val reached = Rounds.iterate("Bfs", init, rounds, dir) { (r, i) =>
+      val frontier = r.filter(col("d") === i - 1).select("u")
+      dir.join(frontier, "u").select(col("v").as("u")).distinct()
+        .join(r, Seq("u"), "left_anti")
+        .withColumn("d", lit(i.toLong))
+        .union(r)
     }
+    reached.sparkSession.range(rounds + 1L).select(col("id").as("dist"))
+      .join(reached, col("dist") === col("d"), "left")
+      .groupBy("dist").agg(count(col("u")).as("n_nodes"),
+        coalesce(expr("bit_xor(u)"), lit(0L)).as("xor_nodes"))
+      .orderBy("dist")
   }
-
-  /** One row per hop distance 0..rounds: dist, n_nodes, xor_nodes.
-    * Exhausted layers report (0, 0) rather than vanishing, so the row
-    * count itself is pinned. */
-  def distances(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame =
-    layers(edges, seeds, rounds).zipWithIndex.map { case (l, i) =>
-      l.agg(
-          count(lit(1)).as("n_nodes"),
-          coalesce(expr("bit_xor(u)"), lit(0L)).as("xor_nodes"))
-        .select(lit(i.toLong).as("dist"), col("n_nodes"), col("xor_nodes"))
-    }.reduce(_.union(_)).orderBy("dist")
 
   /** The matching DuckDB SQL, generated from the same round count over
     * caller-supplied `edges(a, b)` / `seeds(u)` CTEs — the chain cannot

@@ -78,30 +78,26 @@ object Communities {
     labelsDistributed(edges, srcCol, dstCol, iters)
   }
 
-  /** The windowed-join tier of [[labels]], for graphs whose edge matrix
-    * exceeds the driver budget. */
+  /** The windowed-join tier of [[labels]] on the [[graft.Rounds]] driver,
+    * for graphs whose edge matrix exceeds the driver budget. */
   def labelsDistributed(edges: DataFrame, srcCol: String, dstCol: String,
                         iters: Int = 4): DataFrame = {
     require(iters >= 1)
     val g = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
     val e = g.union(g.select(col("dst").as("src"), col("src").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    var labels = e.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
     val byVotes = Window.partitionBy("node")
       .orderBy(col("c").desc, col("label").asc)
-    for (_ <- 1 to iters) {
-      labels = e
-        .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
+    val init = e.select(col("src").as("node")).distinct()
+      .withColumn("label", col("node"))
+    graft.Rounds.iterate("Communities", init, iters, e) { (labels, _) =>
+      e.join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
         .groupBy(col("src").as("node"), col("label"))
         .agg(count(lit(1)).as("c"))
         .withColumn("rn", row_number().over(byVotes))
         .filter(col("rn") === 1)
         .select("node", "label")
-    }
-    labels.orderBy("node")
+    }.orderBy("node")
   }
 
   /** The matching DuckDB SQL, generated from the same rules: a chain of

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Rounds
 
 /** k-core decomposition by iterative peeling (Seidman 1983): repeatedly
   * delete nodes of degree < k until none remain; the survivors form the
@@ -23,55 +24,45 @@ import org.apache.spark.sql.functions._
   * real graphs is fast (the degeneracy peel removes whole shells per
   * round); R is a snapshot bound, not an accuracy knob, and the
   * trajectory output makes an unconverged R visible (last two rounds
-  * differ).
+  * differ). The rounds run on [[graft.Rounds]].
   */
 object KCore {
 
-  /** Edge lists after each of `rounds` peels of the UNDIRECTED simple
-    * graph `edges` (a < b, deduplicated by the caller). Element i is the
-    * edge list after i+1 peels. */
-  def peels(edges: DataFrame, k: Int, rounds: Int): Seq[DataFrame] = {
-    require(k >= 1 && rounds >= 1)
-    // Lineage is CUT each round (eager localCheckpoint): round i's plan
-    // references e_{i-1} three times (twice in the degree union, once as
-    // the semi-join source), so an uncut plan re-expands 3^i-fold — and
-    // persist() alone does not save it, because AQE-era cache lookup by
-    // canonicalized plan misses on these nested shapes and silently
-    // recomputes. Checkpointing materializes each round once and makes
-    // every later action O(cached edge list). A multi-node deployment
-    // with executor loss would use reliable checkpoint(dir) instead;
-    // the round structure is identical.
-    var e = edges.select(col("a").cast("long").as("a"),
-      col("b").cast("long").as("b"))
-      .localCheckpoint(true)
-    (1 to rounds).map { _ =>
-      val deg = e.select(col("a").as("u")).union(e.select(col("b").as("u")))
-        .groupBy("u").agg(count(lit(1)).as("d"))
-      val keep = deg.filter(col("d") >= k).select("u")
-      e = e
-        .join(keep.withColumnRenamed("u", "a"), Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("u", "b"), Seq("b"), "left_semi")
-        .select("a", "b")
-        .localCheckpoint(true)
-      e
-    }
-  }
-
-  /** Peeling trajectory: one row per round with surviving node/edge
-    * counts and an xor pin over surviving nodes. Columns: round,
-    * n_nodes, n_edges, xor_nodes. */
+  /** Peeling trajectory of the UNDIRECTED simple graph `edges` (a < b,
+    * deduplicated by the caller): one row per round with surviving
+    * node/edge counts and an xor pin over surviving nodes. Columns:
+    * round, n_nodes, n_edges, xor_nodes. */
   def trajectory(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val reports = peels(edges, k, rounds).zipWithIndex.map { case (e, i) =>
-      val nodes = e.select(col("a").as("u")).union(e.select(col("b").as("u")))
-        .distinct()
-      nodes.agg(
-          count(lit(1)).as("n_nodes"),
-          coalesce(expr("bit_xor(u)"), lit(0L)).as("xor_nodes"))
-        .crossJoin(e.agg(count(lit(1)).as("n_edges")))
-        .select(lit(i + 1L).as("round"), col("n_nodes"), col("n_edges"),
-          col("xor_nodes"))
+    require(k >= 1 && rounds >= 1)
+    // the state is every edge with the last round it survived; round i
+    // peels the survivors of round i-1, and dead edges ride along unshuffled
+    val init = edges.select(col("a").cast("long").as("a"),
+      col("b").cast("long").as("b"), lit(0L).as("last"))
+    val fin = Rounds.iterate("KCore", init, rounds) { (e, i) =>
+      val alive = e.filter(col("last") === i - 1)
+      val keep = alive.select(col("a").as("u")).union(alive.select(col("b").as("u")))
+        .groupBy("u").agg(count(lit(1)).as("d")).filter(col("d") >= k)
+      def ok(c: String) = keep.select(col("u").as(c), lit(true).as(c + "ok"))
+      alive.join(ok("a"), Seq("a"), "left").join(ok("b"), Seq("b"), "left")
+        .select(col("a"), col("b"),
+          when(col("aok") && col("bok"), i.toLong).otherwise(i - 1L).as("last"))
+        .union(e.filter(col("last") < i - 1))
     }
-    reports.reduce(_.union(_)).orderBy("round")
+    // a node survives round r iff its max `last` is >= r; per-`last`
+    // partials fold to per-round totals over the (rounds+1)-row domain
+    val nodes = fin.select(col("a").as("u"), col("last"))
+      .union(fin.select(col("b").as("u"), col("last")))
+      .groupBy("u").agg(max(col("last")).as("last"))
+      .groupBy("last").agg(count(lit(1)).as("n"), expr("bit_xor(u)").as("x"))
+    val byLast = fin.groupBy("last").agg(count(lit(1)).as("m"))
+      .join(nodes, Seq("last"), "left")
+    fin.sparkSession.range(1, rounds + 1L).select(col("id").as("round"))
+      .join(byLast, col("last") >= col("round"), "left")
+      .groupBy("round")
+      .agg(coalesce(sum(col("n")), lit(0L)).as("n_nodes"),
+        coalesce(sum(col("m")), lit(0L)).as("n_edges"),
+        coalesce(expr("bit_xor(x)"), lit(0L)).as("xor_nodes"))
+      .orderBy("round")
   }
 
   /** The matching DuckDB SQL, generated from the same constants: a chain

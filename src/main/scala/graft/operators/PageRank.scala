@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** PageRank (Brin & Page 1998) in exact integer arithmetic.
   *
@@ -14,11 +15,11 @@ import org.apache.spark.sql.functions._
   * THIS arithmetic rather than the real-valued one — exactly what a
   * cross-engine gate needs.
   *
-  * Scale design (100 TB): the classic distributed formulation — the edge
-  * list is persisted once and reused across iterations; each iteration is
-  * one src-keyed join (edges ⋈ ranks) and one dst-keyed aggregation, both
-  * plain keyed shuffles. K iterations = 2K shuffles of the EDGE list,
-  * never anything quadratic. Parallel edges are legal and act as weights
+  * Scale design (100 TB): the classic distributed formulation — each
+  * iteration is one src-keyed join (edges ⋈ ranks) and one dst-keyed
+  * aggregation, both plain keyed shuffles, on the [[graft.Rounds]]
+  * driver. K iterations = 2K shuffles of the EDGE list, never anything
+  * quadratic. Parallel edges are legal and act as weights
   * (each edge row contributes rank/outdeg once).
   */
 object PageRank {
@@ -60,13 +61,10 @@ object PageRank {
     if (head.length <= driverMax) {
       val w = head.map(r => (r.get(0), r.get(1), r.getLong(2)))
       val nodes = (w.map(_._1) ++ w.map(_._2)).distinct.sortBy(_.toString)
-      if (nodes.isEmpty) {
-        val nodeField = eAgg.schema("src").copy(name = "node")
-        return spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(nodeField,
-            org.apache.spark.sql.types.StructField("rank_units",
-              org.apache.spark.sql.types.LongType, nullable = false))))
-      }
+      val schema = StructType(Seq(eAgg.schema("src").copy(name = "node"),
+        StructField("rank_units", LongType, nullable = false)))
+      if (nodes.isEmpty)
+        return spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
       val od = w.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._3).sum }
       val inEdges = w.groupBy(_._2).withDefaultValue(Array.empty[(Any, Any, Long)])
       val n = nodes.length.toLong
@@ -80,11 +78,7 @@ object PageRank {
           d -> (base + dampNum * s / dampDen)
         }.toMap
       }
-      val nodeField = eAgg.schema("src").copy(name = "node")
-      val schema = org.apache.spark.sql.types.StructType(Seq(nodeField,
-        org.apache.spark.sql.types.StructField("rank_units",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      val rows = nodes.map(nd => org.apache.spark.sql.Row(nd, rank(nd)))
+      val rows = nodes.map(nd => Row(nd, rank(nd)))
       return spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
         .orderBy("node")
     }
@@ -107,11 +101,8 @@ object PageRank {
                                 unit: Long): DataFrame = {
     require(iters >= 1 && dampNum > 0 && dampDen > dampNum)
     val e = matrix.select(col("src"), col("dst"), col("n").cast("long").as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // weighted out-degree counts every parallel edge, as the raw edge
     // list would
     val outdeg = e.groupBy("src").agg(sum(col("n")).as("od"))
@@ -129,20 +120,18 @@ object PageRank {
     // exact integer operator, matching DuckDB's `//` on positive longs.
     // Parallel edges contribute n·(rank div od) — identical to n
     // separate edge rows each contributing rank div od.
-    var ranks = nodes.withColumn("rank", lit(init))
-    for (_ <- 1 to iters) {
-      val contribs = e
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .join(outdeg, Seq("src"))
-        .select(col("dst").as("node"), expr("n * (rank div od)").as("contrib"))
-        .groupBy("node").agg(sum(col("contrib")).as("s"))
-      ranks = nodes
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          expr(s"$base + ($dampNum * coalesce(s, 0L)) div $dampDen").as("rank"))
-    }
-    ranks.select(col("node"), col("rank").cast("long").as("rank_units"))
-      .orderBy("node")
+    graft.Rounds.iterate("PageRank", nodes.withColumn("rank", lit(init)), iters, e, nodes) {
+      (ranks, _) =>
+        val contribs = e
+          .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
+          .join(outdeg, Seq("src"))
+          .select(col("dst").as("node"), expr("n * (rank div od)").as("contrib"))
+          .groupBy("node").agg(sum(col("contrib")).as("s"))
+        nodes
+          .join(contribs, Seq("node"), "left")
+          .select(col("node"),
+            expr(s"$base + ($dampNum * coalesce(s, 0L)) div $dampDen").as("rank"))
+    }.select(col("node"), col("rank").cast("long").as("rank_units")).orderBy("node")
   }
 
   /** The matching DuckDB SQL, generated from the same constants so the

@@ -92,13 +92,12 @@ object Preference {
   }
 
   /** The keyed-join tier of [[ratings]] — identical floor-division
-    * arithmetic, executed as K tiny shuffles over the item-pair domain.
-    * For item domains too large to collect (user-level ratings). */
+    * arithmetic, as K tiny shuffles over the item-pair domain on [[graft.Rounds]],
+    * for item domains too large to collect (user-level ratings). */
   def ratingsDistributed(duels: DataFrame, iters: Int = 3,
                          unit: Long = 1000000L, prec: Long = 100000L): DataFrame = {
     require(iters >= 1 && unit > 0 && prec > 0)
     val d = duels.select(col("winner"), col("loser"), col("w").cast("long").as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val items = d.select(col("winner").as("item"))
       .union(d.select(col("loser").as("item"))).distinct()
     val wins = d.groupBy(col("winner").as("item")).agg(sum("w").as("wins"))
@@ -106,33 +105,26 @@ object Preference {
     val games = d.select(col("winner").as("i"), col("loser").as("j"), col("w"))
       .union(d.select(col("loser").as("i"), col("winner").as("j"), col("w")))
       .groupBy("i", "j").agg(sum("w").as("nij"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    var r = items.withColumn("p", lit(unit))
-    for (_ <- 1 to iters) {
+    val gamesTot = games.groupBy(col("i").as("item")).agg(sum("nij").as("games"))
+    // each item's wins and games ride in the state, so the result reads
+    // only the last round
+    val init = items.join(wins, Seq("item"), "left").join(gamesTot, Seq("item"), "left")
+      .select(col("item"), coalesce(col("wins"), lit(0L)).as("wins"),
+        coalesce(col("games"), lit(0L)).as("games"), lit(unit).as("p"))
+    graft.Rounds.iterate("Preference", init, iters, games) { (r, _) =>
       val s = games
         .join(r.select(col("item").as("i"), col("p").as("pi")), Seq("i"))
         .join(r.select(col("item").as("j"), col("p").as("pj")), Seq("j"))
         .select(col("i").as("item"),
           expr(s"(nij * $unit * $prec) div (pi + pj)").as("term"))
         .groupBy("item").agg(sum("term").as("s"))
-      r = r.join(s, Seq("item"), "left")
-        .join(wins, Seq("item"), "left")
-        .select(col("item"),
+      r.join(s, Seq("item"), "left")
+        .select(col("item"), col("wins"), col("games"),
           when(coalesce(col("s"), lit(0L)) === 0L, col("p"))
             .otherwise(greatest(
-              expr(s"(coalesce(wins, 0L) * $unit * $prec) div s"), lit(1L)))
+              expr(s"(wins * $unit * $prec) div s"), lit(1L)))
             .as("p"))
-    }
-    val gamesTot = games.groupBy(col("i").as("item")).agg(sum("nij").as("games"))
-    items
-      .join(wins, Seq("item"), "left")
-      .join(gamesTot, Seq("item"), "left")
-      .join(r, Seq("item"))
-      .select(col("item"), coalesce(col("wins"), lit(0L)).as("wins"),
-        coalesce(col("games"), lit(0L)).as("games"),
-        col("p").as("rating_units"))
-      .orderBy("item")
+    }.withColumnRenamed("p", "rating_units").orderBy("item")
   }
 
   /** The matching DuckDB SQL, generated from the same constants (the

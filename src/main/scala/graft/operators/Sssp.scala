@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Rounds
 
 /** Single-source shortest paths over positive integer edge weights —
   * Bellman-Ford relaxation rounds, the WEIGHTED completion of the graph
@@ -18,8 +19,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale design (100 TB): one edge⋈dist hash join + one per-node min
   * aggregation per round — O(R) edge-list shuffles, the [[Bfs]]/[[KCore]]
-  * bound, with lineage cut per round (eager localCheckpoint; a reliable
-  * checkpoint dir on a multi-node deployment). No adjacency is ever
+  * bound, on the [[graft.Rounds]] driver. No adjacency is ever
   * collected; negative weights are rejected (Bellman-Ford would need
   * |V|−1 rounds and a cycle check — out of contract).
   */
@@ -30,40 +30,29 @@ object Sssp {
     * integer weights; unreached nodes are absent. */
   def distances(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0)
-    // Positive-weight validation rides INSIDE the first dir
-    // materialization (the eager checkpoint below) instead of a separate
-    // up-front scan — a 100 TB edge list is read once, not twice. The
-    // raise_error surfaces synchronously here because the checkpoint is
-    // eager; unwrap it to the documented IllegalArgumentException.
+    // Positive-weight validation rides INSIDE the first round's read of
+    // the edges, not a separate scan of a 100 TB edge list. It surfaces
+    // here because rounds are pinned eagerly; unwrap it to the documented
+    // IllegalArgumentException. With no rounds the edges are never read.
     val validationMsg = "Sssp: edge weights must be positive integers"
     val checkedW = when(col("w").cast("long") > 0L, col("w").cast("long"))
       .otherwise(raise_error(lit(validationMsg)))
-    val dirPlan = edges.select(col("a").cast("long").as("s"),
+    val dir = edges.select(col("a").cast("long").as("s"),
         col("b").cast("long").as("d"), checkedW.as("w"))
       .union(edges.select(col("b").cast("long").as("s"),
         col("a").cast("long").as("d"), checkedW.as("w")))
-    val dir =
-      try dirPlan.localCheckpoint(true)
-      catch {
-        case e: Throwable if {
-          var c: Throwable = e; var hit = false
-          while (c != null && !hit) {
-            hit = c.getMessage != null && c.getMessage.contains(validationMsg)
-            c = c.getCause
-          }
-          hit
-        } => throw new IllegalArgumentException(validationMsg)
-      }
-    var dist = seeds.select(col("u").cast("long").as("u")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
-    for (_ <- 1 to rounds) {
+    val init = seeds.select(col("u").cast("long").as("u")).distinct()
+      .withColumn("dist", lit(0L))
+    try Rounds.iterate("Sssp", init, rounds, dir) { (dist, _) =>
       val relaxed = dir.join(dist, dir("s") === dist("u"))
         .select(col("d").as("u"), (col("dist") + col("w")).as("dist"))
-      dist = dist.union(relaxed)
+      dist.union(relaxed)
         .groupBy("u").agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
+    } catch {
+      case e: RuntimeException if Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).exists(c => String.valueOf(c.getMessage).contains(validationMsg)) =>
+        throw new IllegalArgumentException(validationMsg)
     }
-    dist
   }
 
   /** One summary row pinning the whole distance table: reached count,

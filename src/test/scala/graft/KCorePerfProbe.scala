@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Dev probe (not a correctness gate): phase timings for q157 at an
-  * arbitrary SF dir. Run manually:
+/** Dev probe (not a correctness gate): edge build and trajectory timings
+  * for q157 at an arbitrary SF dir. Run manually:
   *   sbt "testOnly graft.KCorePerfProbe" -DSPARK_GRAFT_PROBE=/root/testdata/sf0.1
   */
 class KCorePerfProbe extends SparkSpec {
@@ -25,21 +25,8 @@ class KCorePerfProbe extends SparkSpec {
       .select(col("user_id").as("a"), col("user_b").as("b"))
       .distinct()
     time("edges.count")(println(edges.count()))
-    val ps = graft.operators.KCore.peels(edges, 3, 4)
-    ps.zipWithIndex.foreach { case (e, i) =>
-      time(s"round ${i + 1} count")(println(e.count()))
-    }
-    time("round 4 recount a")(println(ps.last.count()))
-    time("round 4 recount b")(println(ps.last.count()))
-    println("cached: " + ps.map(_.storageLevel.useMemory).mkString(","))
-    ps.zipWithIndex.foreach { case (e, i) =>
-      time(s"round ${i + 1} stats") {
-        val nodes = e.select(col("a").as("u")).union(e.select(col("b").as("u"))).distinct()
-        println(nodes.agg(count(lit(1)), coalesce(expr("bit_xor(u)"), lit(0L))).collect().toSeq)
-        println(e.agg(count(lit(1))).collect().toSeq)
-      }
-    }
-    time("trajectory")(
-      graft.operators.KCore.trajectory(edges, 3, 4).collect().foreach(println))
+    for (rep <- 1 to 2)
+      time(s"trajectory rep $rep")(
+        graft.operators.KCore.trajectory(edges, 3, 4).collect().foreach(println))
   }
 }
