@@ -47,23 +47,9 @@ object Bench {
           false
       }
       val elapsed = (System.nanoTime() - t0) / 1e9
-      // drop caches persisted inside operators (minhash/curation/
-      // clustering) so reps and later queries aren't taxed by or
-      // benefiting from earlier leftover blocks
-      spark.catalog.clearCache()
-      // clearCache only covers the SQL cache manager. localCheckpoint()
-      // blocks (set-similarity el/prefix/cand tables, advisor profiles)
-      // live in the block manager OUTSIDE it and are reclaimed only when
-      // a driver GC lets ContextCleaner notice the RDD is unreferenced —
-      // on a 32g heap that takes minutes, so MEMORY_AND_DISK blocks from
-      // earlier queries squeeze the unified memory pool of later ones
-      // (measured: q111 0.54s isolated vs 2.90s mid-run behind the
-      // set-joins; q173 reps growing 5.3→17.7s within one run). Releasing
-      // every persistent RDD between reps restores the independence the
-      // clearCache line was already promising. Measurement hygiene, not a
-      // result cache: nothing is reused ACROSS reps either way.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // reps and later queries are neither taxed by nor benefit from
+      // blocks an earlier query left behind
+      Pin.releaseAll(spark)
       if (ok) elapsed else -1.0
     }
     // Noise sentinel: a fixed-cost probe (sum over a 50M range — pure

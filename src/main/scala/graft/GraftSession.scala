@@ -58,7 +58,7 @@ object GraftSession {
       // zstd on a 20× corpus shingle-gram shuffle (local[32], 8 reps per
       // codec, separate JVMs) cut shuffle bytes 32 → 14 MB (2.3×) at
       // wall parity — but spark.io.compression.codec also compresses
-      // MEMORY_AND_DISK/localCheckpoint blocks and broadcasts, and the
+      // MEMORY_AND_DISK and pinned (graft.Pin) blocks and broadcasts, and the
       // checkpoint-chain set-joins collapsed under it (q173 3.0 → 27-54 s,
       // q218 4 → 44 s, same-session A/B via this env knob) while plain
       // aggregate queries were unaffected. On a real cluster the 2.3×

@@ -23,9 +23,9 @@ object OracleDump {
     case c => c.toString
   } + "\""
 
-  def write(outDir: String): Unit = {
+  def write(outDir: String, keep: String => Boolean = _ => true): Unit = {
     new java.io.File(outDir).mkdirs()
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => keep(k) }
       .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }

@@ -35,8 +35,7 @@ object PlanDump {
             java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
             full.getBytes("UTF-8"))
           System.err.println(s"[plandump] wrote $name")
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+          Pin.releaseAll(spark)
         } catch {
           case e: Throwable =>
             System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")

@@ -54,10 +54,7 @@ object Probe {
           println(f"stage $id%4d  $ms%6d ms  $n%4d tasks  run=${a(0)}%5d cpu=${a(1)}%5d deser=${a(2)}%4d gc=${a(3)}%4d  $name")
         }
         println(f"sum of stage times: ${snap.map(_._3).sum} ms")
-        spark.catalog.clearCache()
-        if (!sys.env.contains("SPARK_GRAFT_PROBE_NOCLEAN"))
-          spark.sparkContext.getPersistentRDDs.values.foreach(
-            _.unpersist(blocking = sys.env.contains("SPARK_GRAFT_PROBE_BLOCKING")))
+        if (!sys.env.contains("SPARK_GRAFT_PROBE_NOCLEAN")) Pin.releaseAll(spark)
       }
     }
     spark.stop()

@@ -69,7 +69,7 @@ object Materialized {
     // pinned feed + ONE combined commit (the maintainPairs pattern): the
     // diff's exceptAll subtree would otherwise re-execute per consumer,
     // and delete-then-upsert paid two read-modify-write cycles where
-    // Snapshots.applyKeyed pays one. persist, not localCheckpoint: lazy,
+    // Snapshots.applyKeyed pays one. persist, not a graft.Pin: lazy,
     // recomputable on executor loss, released on completion.
     val feed = Snapshots.diff(spark, corpusDir, from, cur)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -1,6 +1,5 @@
 package graft.ingest
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -20,7 +19,7 @@ import org.apache.spark.sql.types._
   *
   * One layout per fit, as the reference opens its sorted LMDB once and
   * reads it sequentially (`serialize.py:637-795`): the key-sorted sink is
-  * pinned by one local checkpoint, and the count that materializes it is
+  * pinned once ([[graft.Pin]]), and the count that materializes it is
   * `nSamples`; `shapes` is its first row and every epoch is its
   * `toLocalIterator`, trimmed on the driver to `nBatches * batchSize`
   * rows. The pin is a full range-partitioned sort, not a top-K
@@ -39,33 +38,30 @@ final case class BatchExport(df: DataFrame, keyCol: String,
   // ArithmeticException from nBatches
   require(batchSize > 0, s"BatchExport: batchSize must be positive, got $batchSize")
 
-  /** The pinned layout, its backing RDD and its row count. Pinning once
-    * also snapshots the sink and fixes ONE sort layout, so ties broken
+  /** The pinned layout; its row count is `nSamples`. Pinning once also
+    * snapshots the sink and fixes ONE sort layout, so ties broken
     * differently by a re-executed range sample cannot reshuffle batch
     * membership between epochs, and no epoch re-sorts the corpus (the
-    * q139 repeated-scan pattern). A local checkpoint is not reliable
-    * storage: a lost block fails the next epoch loudly (the reference's
-    * restart posture); a reliable pin is ROADMAP item 3's general `Pin`.
-    * Call [[release]] when the consumer is done. */
-  private var pin: Option[(DataFrame, RDD[_], Long)] = None
-  private def pinned: (DataFrame, RDD[_], Long) = synchronized {
+    * q139 repeated-scan pattern). A lost block fails the next epoch
+    * loudly (the reference's restart posture). Call [[release]] when the
+    * consumer is done. */
+  private var pin: Option[graft.Pin] = None
+  private def pinned: graft.Pin = synchronized {
     pin.getOrElse {
-      val layout = df.orderBy(col(keyCol)).localCheckpoint(eager = false)
-      val rdd = graft.Rounds.checkpointRdd(layout)
-      val p = (layout, rdd, rdd.count()) // materializes the checkpoint
+      val p = graft.Pin(df.orderBy(col(keyCol)))
       pin = Some(p)
       p
     }
   }
 
-  lazy val nSamples: Long = pinned._3
+  lazy val nSamples: Long = pinned.rows
   lazy val nBatches: Long = nSamples / batchSize
 
   /** Shapes from schema metadata — no data probe needed for fixed-width
     * types; array lengths come from the pin's first row (the reference's
     * shape probe, D2, minus its early-return bug `serialize.py:728`). */
   lazy val shapes: Map[String, Seq[Int]] = {
-    val probe = pinned._1.head(1).headOption
+    val probe = pinned.df.head(1).headOption
     (inputCols ++ outputCols).map { c =>
       val shape = df.schema(c).dataType match {
         case ArrayType(_, _) =>
@@ -81,11 +77,10 @@ final case class BatchExport(df: DataFrame, keyCol: String,
     }.toMap
   }
 
-  /** Drop the pinned epoch layout (no-op before the first pin):
-    * unpersists the checkpointed RDD's blocks promptly, not when a driver
-    * GC lets ContextCleaner find them. The next use pins again. */
+  /** Drop the pinned epoch layout now (no-op before the first pin). The
+    * next use pins again. */
   def release(): Unit = synchronized {
-    pin.foreach(_._2.unpersist(blocking = false))
+    pin.foreach(_.release())
     pin = None
   }
 
@@ -96,7 +91,7 @@ final case class BatchExport(df: DataFrame, keyCol: String,
     * consumer's call site. */
   def epoch(): Iterator[(Map[String, IndexedSeq[Any]], Map[String, IndexedSeq[Any]])] = {
     import scala.jdk.CollectionConverters._
-    val groups = pinned._1.toLocalIterator().asScala.grouped(batchSize)
+    val groups = pinned.df.toLocalIterator().asScala.grouped(batchSize)
     var served = 0L
     def short() = throw new IllegalStateException(
       s"BatchExport: epoch layout ran out after $served of $nBatches batches of $batchSize")

@@ -272,12 +272,12 @@ object Ingest {
     *   pass 1  distinct tokens, range-sort-partitioned lexicographically
     *           (sklearn order), 0-based ids by the columnar two-pass key
     *           ([[withScalableKey]]) — no single-partition window, no
-    *           collect; the sorted layout is pinned with an eager
-    *           LOCAL CHECKPOINT (lineage cut), not a cache: range
+    *           collect; the sorted layout is pinned ([[graft.Pin]],
+    *           a lineage cut), not a cache: range
     *           boundaries are re-sampled per execution (the q66 lesson),
     *           and a cache entry evicted while the returned frames are
     *           still live would silently recompute a DIFFERENT layout
-    *           against the already-collected offsets — the checkpoint
+    *           against the already-collected offsets — the pin
     *           makes every downstream action read the one materialized
     *           layout, fails LOUDLY if its blocks are lost, and holds no
     *           session-lifetime CacheManager pin;
@@ -294,24 +294,22 @@ object Ingest {
                  out: String = "bow"): (DataFrame, DataFrame) = {
     val spark = df.sparkSession
     val toks = graft.functions.TextAnalysis.tokens(lower(col(textCol)))
-    // ONE tokenization pass: the per-(key, term) counts are checkpointed
-    // eagerly, then BOTH the vocab (distinct terms) and the sparse rows
-    // derive from them — without this the corpus-wide regexp tokenize
-    // (the operator's dominant CPU cost) ran twice
-    val counts = df.select(col(keyCol), explode(toks).as("term"))
-      .groupBy(keyCol, "term").count()
-      .localCheckpoint(true)
+    // ONE tokenization pass: the per-(key, term) counts are pinned, then
+    // BOTH the vocab (distinct terms) and the sparse rows derive from
+    // them — without this the corpus-wide regexp tokenize (the
+    // operator's dominant CPU cost) ran twice
+    val counts = graft.Pin(df.select(col(keyCol), explode(toks).as("term"))
+      .groupBy(keyCol, "term").count()).df
     // ids follow the global sort: explicit range partitioning + local
     // sort (NOT orderBy — EliminateSorts drops a sort under the key
     // pass's count aggregate), partition count pinned so AQE cannot
-    // coalesce the two passes differently, layout checkpoint-pinned so
+    // coalesce the two passes differently, layout pinned so
     // EVERY pass and every later caller action reads ONE boundary sample
-    // (see the scaladoc for why checkpoint, not cache)
+    // (see the scaladoc for why a pin, not a cache)
     val nPart = spark.sessionState.conf.numShufflePartitions
-    val sorted = counts.select("term").distinct()
+    val sorted = graft.Pin(counts.select("term").distinct()
       .repartitionByRange(nPart, col("term"))
-      .sortWithinPartitions("term")
-      .localCheckpoint(true)
+      .sortWithinPartitions("term")).df
     val vocab = withScalableKey(sorted, "id")
       .select(col("term"), (col("id") - 1L).as("id"))
     val sparse = counts.join(vocab, "term")

@@ -102,26 +102,24 @@ object Advisor {
       keyCounts(parent, parentCol))
 
   /** One (table, column) key profile — `(k, cnt)` per distinct non-null
-    * key — eagerly materialized (localCheckpoint) so however many FK
-    * edges consume it as child or parent, the base table is scanned
-    * ONCE. The profile is |distinct keys| rows of two longs — small by
-    * construction (it exists precisely because distinct keys ≪ rows). */
+    * key — pinned ([[graft.Pin]]) so however many FK edges consume it as
+    * child or parent, the base table is scanned ONCE. |distinct keys| rows
+    * of two longs: small by construction (distinct keys ≪ rows). */
   def keyCounts(df: DataFrame, key: Column): DataFrame =
-    df.filter(key.isNotNull).groupBy(key.as("k"))
-      .agg(count(lit(1)).as("cnt")).localCheckpoint()
+    graft.Pin(df.filter(key.isNotNull).groupBy(key.as("k"))
+      .agg(count(lit(1)).as("cnt"))).df
 
-  /** Materialize MANY key profiles CONCURRENTLY: one eager
-    * localCheckpoint job per (table, column) profile, all submitted at
-    * once, so the profile scans+shuffles OVERLAP across executors
-    * instead of running serially. The A/B history behind this shape:
-    * serial per-profile checkpoints lost to a fused lazy AQE-reuse plan
-    * (one driver job per profile, back to back), but the fused plan in
-    * turn serialized the shared stages inside its single job and never
-    * beat the naive formulation on wall clock — concurrent submission
-    * keeps the scan-once property AND the overlap. The jobs go through
-    * [[graft.FanOut]] (≤ a few dozen profiles in any schema-discovery
-    * sweep; each job is a tiny two-long-column aggregate), and each
-    * returned profile is a materialized local-checkpoint scanned — never
+  /** Materialize MANY key profiles CONCURRENTLY: one pin job per (table,
+    * column) profile, all submitted at once, so the profile scans+shuffles
+    * OVERLAP across executors instead of running serially. The A/B
+    * history behind this shape: serial per-profile pins lost to a fused
+    * lazy AQE-reuse plan (one driver job per profile, back to back), but
+    * the fused plan in turn serialized the shared stages inside its
+    * single job and never beat the naive formulation on wall clock —
+    * concurrent submission keeps the scan-once property AND the overlap.
+    * The jobs go through [[graft.FanOut]] (≤ a few dozen profiles in any
+    * schema-discovery sweep; each job is a tiny two-long-column
+    * aggregate), and each returned profile is a pin scanned — never
     * recomputed — by however many downstream edges consume it. */
   def keyCountsAll(profiles: Seq[(DataFrame, Column)]): Seq[DataFrame] =
     profiles.headOption.fold(Seq.empty[DataFrame]) { case (df0, _) =>

@@ -110,24 +110,17 @@ object Behavior {
     * `minDf`, ranked by the exact-IEEE chi-squared score. Columns:
     * segment, rk, term, n_in_segment, chi2.
     *
-    * Note: building the returned DataFrame EAGERLY runs Spark jobs (the
-    * segment×term count table is localCheckpointed to stop Catalyst
-    * re-executing it per consumer). The pinned blocks live until the
-    * caller's session clears persistent RDDs, and localCheckpointed data
-    * is not recomputable on executor loss — long-lived cluster callers
-    * that cannot tolerate either should persist+unpersist around the
-    * call instead. */
+    * Note: building the returned DataFrame runs one Spark job, which pins
+    * the segment×term count table the result reads; see [[graft.Pin]]
+    * for what an eager, non-recomputable pin costs the caller. */
   def chi2Keywords(occurrences: DataFrame, k: Int, minDf: Long,
       segCol: String = "segment", termCol: String = "term"): DataFrame = {
-    // pinned: st feeds FOUR subplans (term totals, segment totals, the
-    // grand total, and the scored join) and Catalyst plans each from its
-    // own subtree copy — unpinned, the occurrence explode + count ran
-    // four times per execution (measured: 4 × ~1.5 s 32-task stages at
-    // sf0.1 → 1). |segments × vocabulary| rows, the reduced table.
-    val st = occurrences
+    // pinned: st feeds term totals, segment totals, the grand total and
+    // the scored join (measured unpinned: 4 × ~1.5 s 32-task stages at
+    // sf0.1, one pinned). |segments × vocabulary| rows.
+    val st = graft.Pin(occurrences
       .select(col(segCol).as("segment"), col(termCol).as("term"))
-      .groupBy("segment", "term").agg(count(lit(1)).as("a"))
-      .localCheckpoint(true)
+      .groupBy("segment", "term").agg(count(lit(1)).as("a"))).df
     val termTot = st.groupBy("term").agg(sum(col("a")).as("tt"))
     val segTot = st.groupBy("segment").agg(sum(col("a")).as("stot"))
     val total = st.agg(sum(col("a")).as("n"))

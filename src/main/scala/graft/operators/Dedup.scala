@@ -397,14 +397,13 @@ object Dedup {
                   driverThreshold: Long = 1000000L): DataFrame = {
     // drop self-pairs BEFORE tiering: they carry no clustering
     // information, and filtering only in the distributed path would make
-    // the two tiers disagree on which nodes appear in the label table
-    val edges = pairs.select(col("a"), col("b"))
-      .filter(col("a") =!= col("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nEdges = edges.count()
-    if (nEdges <= driverThreshold) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      edges.unpersist() // collected — the cache has served its purpose
+    // the two tiers disagree on which nodes appear in the label table.
+    // Pinned: its row count picks the tier, then the driver tier collects
+    // it or round 0 reads it, and either releases it
+    val edges = graft.Pin(pairs.select(col("a"), col("b")).filter(col("a") =!= col("b")))
+    if (edges.rows <= driverThreshold) {
+      val es = edges.df.collect().map(r => (r.getLong(0), r.getLong(1)))
+      edges.release()
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {
         var r = x
@@ -446,36 +445,34 @@ object Dedup {
         .union(mins.select(col("u"), col("m").as("v")))
         .distinct()
     }
-    // localCheckpoint, not persist: persist caches DATA but the LOGICAL
-    // plan keeps compounding (union+distinct+except double it per round),
-    // so analysis/AQE time grows exponentially with rounds — the classic
-    // iterative-DataFrame trap. Checkpointing truncates the plan to the
-    // materialized RDD each round (on a cluster, use reliable
-    // checkpointing if executor loss during the loop must be survivable).
-    var e = edges.select(col("a").as("u"), col("b").as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint(true)
+    // Each round is a Pin (union+distinct+except double the plan per
+    // round otherwise), released once the next round has been compared
+    // with it, so one round is left: the one the labels read.
+    var e = graft.Pin(edges.df.select(col("a").as("u"), col("b").as("v")).distinct())
+    edges.release()
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val next = smallStar(largeStar(e)).localCheckpoint(true)
-      // fixpoint = identical edge set (both stars are deterministic maps)
-      val grew = next.exceptAll(e).limit(1).count() > 0
-      val shrank = !grew && e.exceptAll(next).limit(1).count() > 0
+      val next = graft.Pin(smallStar(largeStar(e.df)))
+      // fixpoint = identical edge set (both stars are deterministic maps).
+      // Both rounds are distinct sets, so equal row counts plus next ⊆ e
+      // prove equality; unequal counts prove change with no extra job
+      converged = next.rows == e.rows && next.df.exceptAll(e.df).limit(1).count() == 0
+      e.release()
       e = next
-      converged = !grew && !shrank
       i += 1
     }
     // wrong labels are worse than no labels: never return a half-
     // contracted edge set as if it were the label table
-    if (!converged)
+    if (!converged) {
+      e.release()
       throw new IllegalStateException(
         s"dupClusters star-contraction did not converge in $maxIter rounds — raise maxIter")
-    edges.unpersist()
+    }
     // fixpoint edges are (non-root node → component min); roots map to
     // themselves
-    e.select(col("u").as("id"), col("v").as("cluster"))
-      .union(e.select(col("v").as("id"), col("v").as("cluster")).distinct())
+    e.df.select(col("u").as("id"), col("v").as("cluster"))
+      .union(e.df.select(col("v").as("id"), col("v").as("cluster")).distinct())
       .distinct() // label order unspecified (see nearDupsFromSketch)
   }
 

@@ -197,7 +197,7 @@ object InvertedIndex {
     // Pin the feed: a Snapshots.diff feed is an exceptAll subtree that
     // would otherwise re-execute per consumer (partition-value job,
     // anti-join build, pool write). persist + unpersist-on-completion,
-    // NOT an eager localCheckpoint: building the frame stays lazy and the
+    // NOT an eager graft.Pin: building the frame stays lazy and the
     // blocks survive executor loss by recompute — the library-facing
     // pattern (operators must not leak pinned blocks to callers).
     val feed = changes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

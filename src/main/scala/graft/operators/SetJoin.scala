@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Pin
 
 /** Exact set-similarity join by prefix filtering (the AllPairs/PPJoin
   * family — Bayardo et al. 2007, Xiao et al. 2008): find every pair of
@@ -40,8 +41,8 @@ import org.apache.spark.sql.functions._
   *    while it stays under `broadcastMaxPairs` (bound- or count-gated;
   *    it is data-dependent, so an adversarial corpus must degrade to
   *    shuffle joins, not fail the driver's broadcast limit).
-  *  - The element list feeds five consumers; it is materialized once
-  *    (eager localCheckpoint), not re-tokenized per consumer.
+  *  - The element list feeds five consumers; it is pinned once
+  *    ([[graft.Pin]]), not re-tokenized per consumer.
   *  - Why TWO materializations (el + cand) and not one: el is consumed
   *    both BEFORE candidate generation (df counts, sizes, prefix) and
   *    AFTER it (verification), so fusing it into cand would re-tokenize
@@ -49,10 +50,14 @@ import org.apache.spark.sql.functions._
   *    gate + a-ids + b-ids + the pair join) and sits downstream of the
   *    prefix self-join, so leaving it lazy re-runs that join per
   *    consumer. Measured (sf0.1): each materialization is ~1s while the
-  *    irreducible verification exchange is ~2.5s — the checkpoints are
+  *    irreducible verification exchange is ~2.5s — the pins are
   *    not the bottleneck, the one string-keyed shuffle is, and the
   *    B-token semi-prune below is the lever that shrinks it when the
   *    candidate vocabularies are narrow.
+  *  - Each pin is released once nothing the join returns reads it:
+  *    prefix as soon as cand is pinned, el when the array tier verifies,
+  *    the token arrays when the exploded tier does. Every count the join
+  *    gates on is the row count its pin already paid for.
   */
 object SetJoin {
 
@@ -62,21 +67,20 @@ object SetJoin {
     * The candidate set is DATA-DEPENDENT: an adversarial corpus (heavy
     * template overlap) can produce a pair set too large to broadcast,
     * which would fail at the driver's broadcast limit. So the broadcast
-    * is COUNT-GATED — `cand` is already checkpoint-materialized, so the
-    * count is a cheap scan, and above `broadcastMaxPairs` every
-    * broadcast degrades to a plain shuffle join (same output, bounded
-    * memory; the [[Dedup.dupClusters]] driverThreshold precedent). */
-  private def verifiedPairs(el: DataFrame, sz: DataFrame, cand: DataFrame,
+    * is COUNT-GATED — the count is the one that pinned `cand`, and above
+    * `broadcastMaxPairs` every broadcast degrades to a plain shuffle join
+    * (same output, bounded memory; the [[Dedup.dupClusters]]
+    * driverThreshold precedent). */
+  private def verifiedPairs(el: Pin, sz: DataFrame, cand: DataFrame,
                             useBroadcast: Boolean,
-                            preToks: Option[DataFrame],
-                            pruneBTokens: Boolean = false,
-                            broadcastMaxToks: Long = BroadcastMaxToks): DataFrame = {
+                            preToks: Option[Pin],
+                            pruneBTokens: Boolean = false): DataFrame = {
     val gate: DataFrame => DataFrame = if (useBroadcast) broadcast else identity
     // ARRAY-VERIFICATION TIER: when the candidate set broadcasts AND the
     // element table is itself broadcast-sized (`preToks` materialized by
     // [[prefixTables]] CONCURRENTLY with the prefix build through FanOut —
-    // both read only the el checkpoint, so the count + array-build jobs
-    // back-fill the prefix stage's tail instead of adding serial latency),
+    // both read only the el pin, so the array-build job back-fills the
+    // prefix stage's tail instead of adding serial latency),
     // verify by joining the candidate pairs to the per-id token ARRAYS
     // and counting the intersection per pair —
     // size(array_intersect) over distinct-element arrays equals the
@@ -93,7 +97,8 @@ object SetJoin {
     // path below remains THE scale path — at 100 TB the corpus never
     // rides a broadcast, exactly as before.
     if (useBroadcast && preToks.isDefined) {
-      val toks = preToks.get
+      val toks = preToks.get.df
+      el.release() // this tier reads only cand and the arrays
       // STREAM the pairs, BROADCAST the arrays — and spread the pairs
       // over every core first: the per-pair array_intersect is the dense
       // compute here, and AQE coalesces by BYTES (a 16-byte-per-row pair
@@ -101,7 +106,7 @@ object SetJoin {
       // whole verification onto a handful of tasks (measured: q173 3.7 →
       // 5.2 s with the bytes-coalesced layout). Same bytes-are-the-wrong-
       // proxy reasoning as Tables.widened.
-      val probe = cand.repartition(el.sparkSession.sparkContext.defaultParallelism)
+      val probe = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
       // per-pair intersection via one sorted-merge walk ([[graft
       // .expressions.SortedIntersectCountExpr]]): the `ts` arrays are
       // built SORTED in prefixTables, so the count equals
@@ -126,8 +131,9 @@ object SetJoin {
     // on the same key the inner join shuffles it on anyway) — two
     // exchanges and one broadcast build removed from the verification
     // plan, output provably identical.
-    val elA = el.select(col("id").as("a"), col("tok"))
-    val elBAll = el.join(gate(cand.select(col("b").as("id")).distinct()),
+    preToks.foreach(_.release())
+    val elA = el.df.select(col("id").as("a"), col("tok"))
+    val elBAll = el.df.join(gate(cand.select(col("b").as("id")).distinct()),
         Seq("id"), "left_semi")
       .select(col("id").as("b"), col("tok"))
     // Containment-shape prune: the heaviest stage of verification is the
@@ -144,14 +150,14 @@ object SetJoin {
     // prune removes nothing.)
     val elB = if (pruneBTokens) {
       // candidate-A vocabulary only (the semi-join lives HERE, off the
-      // hot fan-out path, computed once into the checkpoint): tokens of
+      // hot fan-out path, computed once into the pin): tokens of
       // docs that appear as a candidate's A side
-      val aToks = el.join(gate(cand.select(col("a").as("id")).distinct()),
+      val aToks = Pin(el.df.join(gate(cand.select(col("a").as("id")).distinct()),
           Seq("id"), "left_semi")
-        .select("tok").distinct().localCheckpoint(true)
-      if (aToks.count() <= broadcastMaxToks)
-        elBAll.join(broadcast(aToks), Seq("tok"), "left_semi")
-      else elBAll
+        .select("tok").distinct())
+      if (aToks.rows <= BroadcastMaxToks)
+        elBAll.join(broadcast(aToks.df), Seq("tok"), "left_semi")
+      else { aToks.release(); elBAll }
     } else elBAll
     val inter = elA.join(gate(cand), "a")
       .join(elB, Seq("b", "tok"))
@@ -171,42 +177,39 @@ object SetJoin {
     * verification tier consumes. One definition so a fix to the
     * prefix math cannot silently miss one of the two joins.
     *
-    * The array-tier precompute (one count + the groupBy(id) array build)
-    * and the prefix checkpoint run concurrently through [[graft.FanOut]]:
-    * both depend only on the already-materialized el checkpoint, so the
-    * serial chain el → prefix → pre-flight → cand → verify loses one
-    * link. At 100 TB the count exceeds the broadcast budget and the
-    * array side contributes nothing but that cheap count — the exploded
-    * path stays the scale path. */
+    * The array-tier precompute (the groupBy(id) array build) and the
+    * prefix pin run concurrently through [[graft.FanOut]]: both depend
+    * only on the already-pinned el, so the serial chain el → prefix →
+    * pre-flight → cand → verify loses one link. At 100 TB el's row count
+    * exceeds the broadcast budget and the array side contributes nothing
+    * — the exploded path stays the scale path. */
   private def prefixTables(elRaw: DataFrame, tNum: Int, tDen: Int)
-      : (DataFrame, DataFrame, DataFrame, Option[DataFrame]) = {
+      : (Pin, DataFrame, Pin, Option[Pin]) = {
     require(tNum > 0 && tDen > 0 && tNum <= tDen)
-    val el = elRaw.select(col("id"), col("tok"), xxhash64(col("tok")).as("tokh"))
-      .localCheckpoint(true)
-    val sz = el.groupBy("id").agg(count(lit(1)).as("sz"))
-    val dfc = el.groupBy("tokh").agg(count(lit(1)).as("df"))
+    val el = Pin(elRaw.select(col("id"), col("tok"), xxhash64(col("tok")).as("tokh")))
+    val sz = el.df.groupBy("id").agg(count(lit(1)).as("sz"))
+    val dfc = el.df.groupBy("tokh").agg(count(lit(1)).as("df"))
     val wDoc = Window.partitionBy("id").orderBy("df", "tokh", "tok")
-    // prefix is materialized (third checkpoint): it feeds the candidate
-    // join TWICE (self-join sides) plus the candidate-volume pre-flight,
-    // and it is small by construction (≤ the element table, usually a
-    // fraction); leaving it lazy re-runs the df-join + window per
-    // consumer or leans on AQE subtree reuse
-    val (toks, prefix) = graft.FanOut.both(el.sparkSession)(
-      if (el.count() > BroadcastMaxToks) None
+    // prefix is pinned: it feeds the candidate join TWICE (self-join
+    // sides) plus the candidate-volume pre-flight, and it is small by
+    // construction (≤ the element table, usually a fraction); leaving it
+    // lazy re-runs the df-join + window per consumer or leans on AQE
+    // subtree reuse
+    val (toks, prefix) = graft.FanOut.both(el.df.sparkSession)(
+      if (el.rows > BroadcastMaxToks) None
       // one materialization feeds both broadcast builds (aliased
       // Projects canonicalize differently, so the exchange would not
       // be reused without it). Arrays are SORTED here, once per id,
       // so verification can count intersections by sorted-merge
       // instead of a per-pair hash set (SortedIntersectCountExpr)
-      else Some(el.groupBy("id").agg(
+      else Some(Pin(el.df.groupBy("id").agg(
         sort_array(collect_list(col("tok"))).as("ts"),
-        count(lit(1)).as("tsz")).localCheckpoint(true)),
-      el.join(dfc, "tokh").join(sz, "id")
+        count(lit(1)).as("tsz")))),
+      Pin(el.df.join(dfc, "tokh").join(sz, "id")
         .withColumn("pos", row_number().over(wDoc))
         .filter(col("pos") <=
           col("sz") - expr(s"($tNum * sz + ${tDen - 1}) div $tDen") + 1)
-        .select(col("id"), col("tokh"))
-        .localCheckpoint(true))
+        .select(col("id"), col("tokh"))))
     (el, sz, prefix, toks)
   }
 
@@ -221,17 +224,21 @@ object SetJoin {
     * volume grows ~quadratically with corpus size (measured: 10× docs →
     * ~150× candidates on the bounded-vocab fixture family, SCALE.md
     * round 8) — so the guard REFUSES loudly instead of launching a job
-    * that cannot finish, and names the bounded alternatives. */
+    * that cannot finish, and names the bounded alternatives, after
+    * releasing the pins `held` so far. */
   private def requireCandidateBudget(joinName: String, estPairs: Long,
-                                     maxCandidatePairs: Long): Unit =
-    if (estPairs > maxCandidatePairs) throw new IllegalStateException(
-      f"$joinName: prefix filtering bounds candidate volume at ~$estPairs%,d pairs, " +
-        f"over the $maxCandidatePairs%,d budget. This corpus's token space is too " +
-        "collision-heavy for an EXACT set-similarity join (bounded/templated " +
-        "vocabulary). Use the banded MinHash tier (Dedup.nearDupPairs — per-band " +
-        "bucket caps bound work) or serve the build side from the capped posting " +
-        "index (InvertedIndex) and verify exactly on its candidates; or raise " +
-        "maxCandidatePairs deliberately.")
+                                     maxCandidatePairs: Long, held: Seq[Pin]): Unit =
+    if (estPairs > maxCandidatePairs) {
+      held.foreach(_.release())
+      throw new IllegalStateException(
+        f"$joinName: prefix filtering bounds candidate volume at ~$estPairs%,d pairs, " +
+          f"over the $maxCandidatePairs%,d budget. This corpus's token space is too " +
+          "collision-heavy for an EXACT set-similarity join (bounded/templated " +
+          "vocabulary). Use the banded MinHash tier (Dedup.nearDupPairs — per-band " +
+          "bucket caps bound work) or serve the build side from the capped posting " +
+          "index (InvertedIndex) and verify exactly on its candidates; or raise " +
+          "maxCandidatePairs deliberately.")
+    }
 
   /** All pairs (a < b) of `elRaw` (columns `id`, `tok` — distinct set
     * elements per id) with Jaccard ≥ tNum/tDen. Output: a, b, inter,
@@ -240,24 +247,24 @@ object SetJoin {
                   broadcastMaxPairs: Long = 4000000L,
                   maxCandidatePairs: Long = 500000000L): DataFrame = {
     val (el, sz, prefix, toks) = prefixTables(elRaw, tNum, tDen)
-    val est = prefix.groupBy("tokh").agg(count(lit(1)).as("c"))
+    val est = prefix.df.groupBy("tokh").agg(count(lit(1)).as("c"))
       .agg(sum(col("c") * (col("c") - 1) / 2).cast("long").as("est"))
       .collect().headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
       .getOrElse(0L)
-    requireCandidateBudget("jaccardJoin", est, maxCandidatePairs)
-    val cand = prefix.select(col("id").as("a"), col("tokh"))
-      .join(prefix.select(col("id").as("b"), col("tokh")), "tokh")
+    requireCandidateBudget("jaccardJoin", est, maxCandidatePairs, Seq(el, prefix) ++ toks)
+    val cand = Pin(prefix.df.select(col("id").as("a"), col("tokh"))
+      .join(prefix.df.select(col("id").as("b"), col("tokh")), "tokh")
       .filter(col("a") < col("b"))
-      .select("a", "b").distinct()
-      .localCheckpoint(true)
+      .select("a", "b").distinct())
+    prefix.release()
     // broadcast gate: est upper-bounds |cand| (the distinct can only
     // shrink the per-token pair expansion est sums), so est within the
-    // budget proves broadcastability without a separate count job; only
-    // an est OVER the budget pays the exact count to get a second chance
-    val useBroadcast = est <= broadcastMaxPairs || cand.count() <= broadcastMaxPairs
+    // budget proves broadcastability; over it, the pin's exact count
+    // gets a second chance
+    val useBroadcast = est <= broadcastMaxPairs || cand.rows <= broadcastMaxPairs
     // verification: exact string-level intersection counts, over the
     // candidate ids only (count-gated broadcast — no corpus reshuffle)
-    verifiedPairs(el, sz, cand, useBroadcast, toks)
+    verifiedPairs(el, sz, cand.df, useBroadcast, toks)
       .filter(col("inter") * tDen >=
         lit(tNum) * (col("sz_a") + col("sz_b") - col("inter")))
       .select("a", "b", "inter", "sz_a", "sz_b")
@@ -282,21 +289,20 @@ object SetJoin {
     val (el, sz, prefix, toks) = prefixTables(elRaw, tNum, tDen)
     // candidate bound: prefix-side df × full-side df per token (the
     // probe-prefix ⋈ full-postings shape has no B-side pruning)
-    val est = prefix.groupBy("tokh").agg(count(lit(1)).as("cp"))
-      .join(el.groupBy("tokh").agg(count(lit(1)).as("cf")), "tokh")
+    val est = prefix.df.groupBy("tokh").agg(count(lit(1)).as("cp"))
+      .join(el.df.groupBy("tokh").agg(count(lit(1)).as("cf")), "tokh")
       .agg(sum(col("cp") * col("cf")).cast("long").as("est"))
       .collect().headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
       .getOrElse(0L)
-    requireCandidateBudget("containmentJoin", est, maxCandidatePairs)
-    val cand = prefix.select(col("id").as("a"), col("tokh"))
-      .join(el.select(col("id").as("b"), col("tokh")), "tokh")
+    requireCandidateBudget("containmentJoin", est, maxCandidatePairs, Seq(el, prefix) ++ toks)
+    val cand = Pin(prefix.df.select(col("id").as("a"), col("tokh"))
+      .join(el.df.select(col("id").as("b"), col("tokh")), "tokh")
       .filter(col("a") =!= col("b"))
-      .select("a", "b").distinct()
-      .localCheckpoint(true)
-    // est >= |cand| (same argument as jaccardJoin): skip the count job
-    // when the pre-flight bound already fits the broadcast budget
-    val useBroadcast = est <= broadcastMaxPairs || cand.count() <= broadcastMaxPairs
-    verifiedPairs(el, sz, cand, useBroadcast, toks, pruneBTokens = true)
+      .select("a", "b").distinct())
+    prefix.release()
+    // est >= |cand| (same argument as jaccardJoin)
+    val useBroadcast = est <= broadcastMaxPairs || cand.rows <= broadcastMaxPairs
+    verifiedPairs(el, sz, cand.df, useBroadcast, toks, pruneBTokens = true)
       .filter(col("inter") * tDen >= lit(tNum) * col("sz_a"))
       .select("a", "b", "inter", "sz_a", "sz_b")
   }

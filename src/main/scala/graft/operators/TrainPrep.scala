@@ -299,21 +299,20 @@ object TrainPrep {
       // unit a trainer maps", and confetti files break that economy
       assigned.repartition(col("shard"))
         .write.mode("overwrite").partitionBy("shard").parquet(s"$dir/data")
-      val manifest = assigned.withColumn("digest", docDigest(idCol, textCol))
+      // |shards| rows: pin them so the returned frame and the json write
+      // never re-derive from the (about to be unpersisted) plan
+      val manifest = graft.Pin(assigned.withColumn("digest", docDigest(idCol, textCol))
         .groupBy("shard").agg(
         count(lit(1)).as("n_docs"),
         sum(size(TextAnalysis.tokens(col(textCol))).cast("long")).as("n_tokens"),
         min(col("pos")).as("pos_min"),
         max(col("pos")).as("pos_max"),
-        expr("bit_xor(digest)").as("checksum"))
-        // |shards| rows: pin them so the returned frame and the json
-        // write never re-derive from the (about to be unpersisted) plan
-        .localCheckpoint(true)
+        expr("bit_xor(digest)").as("checksum"))).df
       manifest.coalesce(1).write.mode("overwrite").json(s"$dir/manifest")
       manifest
     } finally {
       assigned.unpersist()
-      // the manifest is checkpointed and the data written: the (id, hkey)
+      // the manifest is pinned and the data written: the (id, hkey)
       // layout cache inside shuffled() has no further consumer
       layoutCache.unpersist()
     }

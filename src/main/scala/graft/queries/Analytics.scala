@@ -2173,22 +2173,18 @@ object Analytics {
         val toks = t(s, dir, "documents")
           .select(col("doc_id"), col("source"),
             graft.functions.TextAnalysis.tokens(col("text")).as("toks"))
-        // pinned: the positional gram table feeds THREE subplans (boiler,
-        // covered, gstats) and boiler feeds two — each planned from its
-        // own subtree copy, so without the checkpoints the tokenize +
-        // posexplode pass ran three times per execution. |positions| rows
-        // of small strings.
-        val grams = toks.filter(size(col("toks")) >= 3)
+        // pinned (graft.Pin): the positional gram table feeds boiler,
+        // covered and gstats, and boiler feeds two; unpinned, the tokenize
+        // + posexplode pass ran three times. |positions| rows of small strings.
+        val grams = graft.Pin(toks.filter(size(col("toks")) >= 3)
           .select(col("doc_id"), col("source"),
             posexplode(expr(
               "transform(sequence(1, size(toks) - 2), " +
                 "i -> concat_ws(' ', toks[i-1], toks[i], toks[i+1]))")))
-          .withColumnRenamed("col", "gram")
-          .localCheckpoint(true)
-        val boiler = grams.groupBy("source", "gram")
+          .withColumnRenamed("col", "gram")).df
+        val boiler = graft.Pin(grams.groupBy("source", "gram")
           .agg(countDistinct(col("doc_id")).as("df"))
-          .filter(col("df") >= 2)
-          .localCheckpoint(true)
+          .filter(col("df") >= 2)).df
         val covered = grams.join(boiler.select("source", "gram"), Seq("source", "gram"))
           .select(col("source"), col("doc_id"),
             explode(sequence(col("pos"), col("pos") + 2)).as("j"))

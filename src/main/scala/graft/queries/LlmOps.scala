@@ -652,15 +652,13 @@ object LlmOps {
         // a broadcast single-row crossJoin, NOT an unpartitioned window:
         // the window shape funnels the whole per-doc output through one
         // partition, which grows with sf.
-        // localCheckpoint: `stats` feeds both the per-doc rows and the
-        // summary aggregate — without pinning, the crossJoin's self-
-        // reference relies on optimizer exchange reuse matching across
-        // the deduplicated subtree copies (which contain an object
-        // mapPartitions operator), and a miss re-runs the whole encode
-        val stats = graft.operators.Bpe
+        // pinned (graft.Pin): `stats` feeds the per-doc rows and the
+        // summary aggregate; unpinned, the self-crossJoin relies on
+        // exchange reuse across subtree copies holding an object
+        // mapPartitions, and a miss re-runs the whole encode
+        val stats = graft.Pin(graft.operators.Bpe
           .encodeStats(s, docs(s, dir), "doc_id", "text", m)
-          .withColumnRenamed("id", "doc_id")
-          .localCheckpoint(true)
+          .withColumnRenamed("id", "doc_id")).df
         stats.crossJoin(broadcast(stats.agg(
             count(lit(1)).as("smry_docs"),
             sum(col("n_bpe_tokens")).as("smry_bpe_tokens"),

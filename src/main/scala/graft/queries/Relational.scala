@@ -3263,18 +3263,15 @@ object Relational {
     "q174_rfm_segments" -> Q(
       (s, dir) => {
         val anchor = to_timestamp(lit("2001-09-01 00:00:00"))
-        // pinned: the per-customer RFM table feeds FOUR consumers (three
-        // quantile-fence subplans + the scored join), and Catalyst plans
-        // each from its own copy of the subtree — without the checkpoint
-        // the orders scan + groupBy ran four times per execution
-        // (measured: 4 × ~1s 32-task stages; one after). |custkeys| rows.
-        val rfm = t(s, dir, "orders").groupBy("o_custkey")
+        // pinned (graft.Pin): the per-customer RFM table feeds three
+        // quantile-fence subplans and the scored join (measured unpinned:
+        // 4 × ~1 s 32-task stages, one pinned). |custkeys| rows.
+        val rfm = graft.Pin(t(s, dir, "orders").groupBy("o_custkey")
           .agg(
             datediff(anchor, max(col("o_orderdate"))).cast("long").as("recency"),
             count(lit(1)).as("freq"),
             sum(Det.money(col("o_totalprice"))).as("monetary"))
-          .withColumn("g", lit(1))
-          .localCheckpoint(true)
+          .withColumn("g", lit(1))).df
         def fences(v: String, tag: String) = graft.operators.Robust
           .quantileSelect(rfm, "g", v, Seq(20, 40, 60, 80))
           .select(col("g"), col("q20").as(s"${tag}20"), col("q40").as(s"${tag}40"),

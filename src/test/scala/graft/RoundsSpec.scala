@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.operators._
 
@@ -8,6 +9,10 @@ class RoundsSpec extends SparkSpec {
   import spark.implicits._
 
   private def pins: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** The RDD holding the blocks of the pin `df` reads. */
+  private def pinRdd(df: DataFrame) =
+    df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd }.get
 
   /** Persistent RDDs `f` leaves behind at return; released afterwards so
     * later cases start clean. */
@@ -26,7 +31,7 @@ class RoundsSpec extends SparkSpec {
     val e = intercept[RuntimeException] {
       rows = Some(Rounds.iterate("Toy", spark.range(10).toDF("x"), rounds = 3) { (prev, i) =>
         // drop the previous round's blocks behind the driver's back
-        if (i == 2) Rounds.checkpointRdd(prev).unpersist(blocking = true)
+        if (i == 2) pinRdd(prev).unpersist(blocking = true)
         prev.select((col("x") + 1).as("x"))
       }.collect())
     }
@@ -44,7 +49,7 @@ class RoundsSpec extends SparkSpec {
     assert((pins -- before).size == 1)
     // x -> 2x + i for i = 1..5: 32x + 57
     assert(out.as[Long].collect().sorted.toSeq == (0L to 3L).map(x => 32 * x + 57))
-    Rounds.checkpointRdd(out).unpersist(blocking = true)
+    pinRdd(out).unpersist(blocking = true)
   }
 
   test("the graph operators leave at most one pin, the same at R and 2R rounds") {
