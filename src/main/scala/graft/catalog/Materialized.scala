@@ -3,10 +3,13 @@ package graft.catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Incrementally-maintained materialized transforms — the GENERIC
-  * primitive behind the maintained search index
-  * ([[graft.operators.InvertedIndex.reconcile]]) and inverted file
-  * ([[graft.operators.Ivf.maintainCorpus]]): any deterministic per-row
+/** Incrementally-maintained materialized transforms — the one engine
+  * that applies a change feed to a derived table and keeps its
+  * `_reflects` marker. Its users supply only a transform: the search
+  * index's pair table ([[graft.operators.InvertedIndex]], which
+  * [[graft.streaming.DocStreams.sinkIndexedCorpus]] keeps current), the
+  * IVF inverted file ([[graft.operators.Ivf.maintainCorpus]]) and the
+  * maintained aggregates ([[reconcileAgg]]). Any deterministic per-row
   * (map-only, 1→N) derivation of a versioned corpus can follow corpus
   * mutations by keyed delete + upsert of just the CHANGED rows' derived
   * output, at cost ∝ churn, never a re-derivation of the corpus.
@@ -44,9 +47,9 @@ object Materialized {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Materialize `transform` of the corpus' CURRENT version as a
-    * versioned table at `derivedDir`, stamped with the corpus version it
-    * reflects. */
+  /** Materialize `transform` of the corpus' CURRENT version (a per-row
+    * transform, or a [[reconcileAgg]] aggregate) as a versioned table at
+    * `derivedDir`, stamped with the corpus version it reflects. */
   def init(spark: SparkSession, corpusDir: String, derivedDir: String,
            partCol: String)(transform: DataFrame => DataFrame): Int = {
     val v = Snapshots.currentVersion(spark, corpusDir)
@@ -56,9 +59,37 @@ object Materialized {
     r
   }
 
-  /** Catch the derived table up to the corpus' current version: deleted
-    * corpus rows' derived rows are keyed-deleted, inserted rows' derived
-    * rows upserted (an update nets to its new derivation), marker
+  /** Apply one change feed (a [[Snapshots.diff]] frame: source rows plus
+    * `_change` = "delete" | "insert") to the derived table at
+    * `derivedDir`: the deleted rows' derivations are keyed-deleted
+    * (projected to `keyCols :+ partCol`), the inserted rows' derivations
+    * upserted, so an update nets to its new derivation. Work ∝ the changed
+    * rows, and re-applying the same feed converges (keyed delete of absent
+    * rows and keyed upsert of present rows are no-ops in content). Returns
+    * the committed version, or None when the feed derives nothing.
+    *
+    * The feed is persisted because both sides and the commit's
+    * partition-value job, anti-join build and pool write all read it; a
+    * diff's exceptAll subtree would otherwise re-execute per consumer.
+    * persist, not a [[graft.Pin]]: building the frame stays lazy, the
+    * blocks survive executor loss by recompute, and they are released
+    * here in `finally`, never leaked to the caller. Both sides land as ONE
+    * [[Snapshots.applyKeyed]] commit (one partition read, one pool write,
+    * one manifest), where delete-then-upsert paid two read-modify-write
+    * cycles; SnapshotsSpec gates the equivalence. */
+  def applyFeed(spark: SparkSession, derivedDir: String, feed: DataFrame,
+                partCol: String, keyCols: Seq[String])
+               (transform: DataFrame => DataFrame): Option[Int] = {
+    val cached = feed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def side(change: String) =
+      transform(cached.filter(col("_change") === change).drop("_change"))
+    try Snapshots.applyKeyed(spark, derivedDir,
+      side("delete").select((keyCols :+ partCol).map(col): _*), side("insert"), keyCols)
+    finally cached.unpersist(false)
+  }
+
+  /** Catch the derived table up to the corpus' current version:
+    * [[applyFeed]] over the diff from the reflected version, marker
     * advanced after. Returns (from, to) or None when current. */
   def reconcile(spark: SparkSession, corpusDir: String, derivedDir: String,
                 partCol: String, keyCols: Seq[String])
@@ -66,36 +97,20 @@ object Materialized {
     val cur = Snapshots.currentVersion(spark, corpusDir)
     val from = reflects(derivedDir)
     if (from >= cur) return None
-    // pinned feed + ONE combined commit (the maintainPairs pattern): the
-    // diff's exceptAll subtree would otherwise re-execute per consumer,
-    // and delete-then-upsert paid two read-modify-write cycles where
-    // Snapshots.applyKeyed pays one. persist, not a graft.Pin: lazy,
-    // recomputable on executor loss, released on completion.
-    val feed = Snapshots.diff(spark, corpusDir, from, cur)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val del = transform(feed.filter(col("_change") === "delete").drop("_change"))
-        .select((keyCols :+ partCol).map(col): _*)
-      val ins = transform(feed.filter(col("_change") === "insert").drop("_change"))
-      Snapshots.applyKeyed(spark, derivedDir, del, ins, keyCols)
-    } finally feed.unpersist(false)
+    applyFeed(spark, derivedDir, Snapshots.diff(spark, corpusDir, from, cur),
+      partCol, keyCols)(transform)
     writeMarker(derivedDir, cur)
     Some((from, cur))
   }
 
-  /** Materialize a partition-aligned AGGREGATE of the corpus' current
-    * version (incremental view maintenance for `GROUP BY` tables — the
-    * aggregate complement of [[init]]'s per-row transforms).
+  /** Catch a maintained aggregate up to the corpus' current version
+    * (incremental view maintenance for `GROUP BY` tables, initialized by
+    * [[init]] with the aggregate as its transform).
     *
     * Contract: `aggregate` must be partition-local — its grouping
     * includes the corpus' partition column, carried through as `partCol`
     * on the output — so a corpus mutation can only change the aggregate
-    * rows of the partitions it touched. */
-  def initAgg(spark: SparkSession, corpusDir: String, derivedDir: String,
-              partCol: String)(aggregate: DataFrame => DataFrame): Int =
-    init(spark, corpusDir, derivedDir, partCol)(aggregate)
-
-  /** Catch a maintained aggregate up to the corpus' current version.
+    * rows of the partitions it touched.
     *
     * Maintenance is a partition-scoped RECOMPUTE, not delta arithmetic:
     * the change feed only names which partitions were touched; their new

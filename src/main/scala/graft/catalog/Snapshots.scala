@@ -476,7 +476,7 @@ object Snapshots {
     * whole read-modify-write cycle — the touched partitions are read once,
     * both key sets are anti-joined in one pass, and one pool write + one
     * manifest replace the two of each the sequential calls pay. The CDC
-    * consumers ([[graft.operators.InvertedIndex.maintainPairs]]) apply a
+    * consumer ([[Materialized.applyFeed]]) applies a
     * change feed's deletes and inserts together, so at any scale this
     * halves the commit cost of following a mutating table. Either batch
     * may be empty (an empty side degrades to plain upsert/delete); when

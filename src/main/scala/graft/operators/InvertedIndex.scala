@@ -173,6 +173,8 @@ object InvertedIndex {
         pmod(graft.functions.Hashing.h60(col("term")), lit(buckets.toLong)).cast("string"))
       .select("term", "id", "bkt")
 
+  private val pairKey = Seq("term", "id")
+
   /** Materialize the index pair table as a VERSIONED snapshot table
     * (partitioned by term-hash bucket). One-time ingest cost, like
     * [[ensureIndex]] — but this form can then FOLLOW corpus mutations
@@ -184,34 +186,16 @@ object InvertedIndex {
       pairsOf(docs, idCol, textCol, buckets), Some("bkt"))
 
   /** Apply one [[graft.catalog.Snapshots.diff]] change feed to the pair
-    * table: deleted documents' pairs are removed (keyed delete), inserted
-    * documents' pairs upserted — an updated document (delete + insert in
-    * the feed) nets to its new term set. Work ∝ the changed documents'
-    * term pairs, never a corpus re-tokenize: this is how a search index
-    * follows a mutating 100 TB corpus. Retry-safe: re-applying the same
-    * feed converges to the same pair set (keyed delete of absent rows and
-    * keyed upsert of present rows are both no-ops in content). */
+    * table through [[graft.catalog.Materialized.applyFeed]]: deleted
+    * documents' pairs are removed, inserted documents' pairs upserted — an
+    * updated document nets to its new term set. Work ∝ the changed
+    * documents' term pairs, never a corpus re-tokenize: this is how a
+    * search index follows a mutating 100 TB corpus. */
   def maintainPairs(spark: org.apache.spark.sql.SparkSession, tableDir: String,
                     changes: DataFrame, idCol: String, textCol: String,
-                    buckets: Int = 16): Unit = {
-    // Pin the feed: a Snapshots.diff feed is an exceptAll subtree that
-    // would otherwise re-execute per consumer (partition-value job,
-    // anti-join build, pool write). persist + unpersist-on-completion,
-    // NOT an eager graft.Pin: building the frame stays lazy and the
-    // blocks survive executor loss by recompute — the library-facing
-    // pattern (operators must not leak pinned blocks to callers).
-    val feed = changes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val del = pairsOf(feed.filter(col("_change") === "delete"), idCol, textCol, buckets)
-      val ins = pairsOf(feed.filter(col("_change") === "insert"), idCol, textCol, buckets)
-      // deletes and upserts land as ONE snapshot commit (one partition
-      // read, one pool write, one manifest — half the commit cost of
-      // delete-then-upsert; Snapshots.applyKeyed proves equivalence in
-      // SnapshotsSpec). Net effect per updated doc is unchanged: old
-      // pairs removed, new term set upserted.
-      graft.catalog.Snapshots.applyKeyed(spark, tableDir, del, ins, Seq("term", "id"))
-    } finally feed.unpersist(false)
-  }
+                    buckets: Int = 16): Unit =
+    graft.catalog.Materialized.applyFeed(spark, tableDir, changes, "bkt", pairKey)(
+      pairsOf(_, idCol, textCol, buckets))
 
   /** Serve postings + df from the maintained pair table (current or a
     * time-traveled version) — same shape as [[build]] minus the cap tier. */
@@ -223,55 +207,25 @@ object InvertedIndex {
 
   // ---- reconciliation (crash-safe catch-up) -----------------------------
 
-  private def markerPath(indexDir: String) =
-    java.nio.file.Paths.get(indexDir, "_reflects")
-
-  /** The corpus version the index currently reflects (written by
-    * [[initPairsTableFor]] / [[reconcile]]). */
-  def reflectsVersion(indexDir: String): Int =
-    new String(java.nio.file.Files.readAllBytes(markerPath(indexDir)), "UTF-8").trim.toInt
-
-  /** [[initPairsTable]] from a VERSIONED corpus, stamping which corpus
-    * version the index reflects so [[reconcile]] knows where to resume. */
+  /** [[initPairsTable]] from a VERSIONED corpus, stamped with the corpus
+    * version the index reflects ([[graft.catalog.Materialized.reflects]])
+    * so [[reconcile]] knows where to resume. */
   def initPairsTableFor(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                         corpusDir: String, idCol: String, textCol: String,
-                        buckets: Int = 16): Int = {
-    val v = graft.catalog.Snapshots.currentVersion(spark, corpusDir)
-    val r = initPairsTable(spark, indexDir,
-      graft.catalog.Snapshots.read(spark, corpusDir), idCol, textCol, buckets)
-    writeMarker(indexDir, v)
-    r
-  }
+                        buckets: Int = 16): Int =
+    graft.catalog.Materialized.init(spark, corpusDir, indexDir, "bkt")(
+      pairsOf(_, idCol, textCol, buckets))
 
-  private def writeMarker(indexDir: String, v: Int): Unit = {
-    val tmp = java.nio.file.Paths.get(indexDir, s"._reflects.tmp")
-    java.nio.file.Files.write(tmp, v.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, markerPath(indexDir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Catch the index up to the corpus' CURRENT version: apply
-    * diff(reflected, current) via [[maintainPairs]], then advance the
-    * marker (atomic rename, AFTER maintenance). Crash-safe by keyed
-    * idempotence: a crash between maintenance and the marker re-applies
-    * the same feed on the next call and converges to the same pair set.
-    * Returns the (from, to) versions applied, or None when already
-    * current. This is the recovery primitive the streaming sink leans on,
-    * and the catch-up tool after index downtime: cost ∝ the corpus
-    * versions' changed files, never a rebuild. Operational constraint:
-    * corpus [[graft.catalog.Snapshots.vacuum]] retention must keep the
-    * reflected version until the index catches up (diff needs both
-    * manifests) — vacuum fails loudly otherwise, never silently skips. */
+  /** Catch the index up to the corpus' CURRENT version
+    * ([[graft.catalog.Materialized.reconcile]]: the diff from the
+    * reflected version, marker advanced after; crash-safe by keyed
+    * idempotence). Returns the (from, to) versions applied, or None when
+    * already current. This is the recovery primitive the streaming sink
+    * leans on, and the catch-up tool after index downtime: cost ∝ the
+    * corpus versions' changed files, never a rebuild. */
   def reconcile(spark: org.apache.spark.sql.SparkSession, corpusDir: String,
                 indexDir: String, idCol: String, textCol: String,
-                buckets: Int = 16): Option[(Int, Int)] = {
-    val cur = graft.catalog.Snapshots.currentVersion(spark, corpusDir)
-    val from = reflectsVersion(indexDir)
-    if (from >= cur) return None
-    val feed = graft.catalog.Snapshots.diff(spark, corpusDir, from, cur)
-    maintainPairs(spark, indexDir, feed, idCol, textCol, buckets)
-    writeMarker(indexDir, cur)
-    Some((from, cur))
-  }
+                buckets: Int = 16): Option[(Int, Int)] =
+    graft.catalog.Materialized.reconcile(spark, corpusDir, indexDir, "bkt", pairKey)(
+      pairsOf(_, idCol, textCol, buckets))
 }

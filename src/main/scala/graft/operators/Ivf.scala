@@ -123,33 +123,27 @@ object Ivf {
     * static corpus artifact. Rows: (id, v, nrm, bucket). */
   def initCorpusTable(spark: SparkSession, tableDir: String,
                       normedDf: DataFrame, cents: Centroids): Int =
-    graft.catalog.Snapshots.init(spark, tableDir,
-      assignTo(normedDf, cents).withColumn("bucket", col("bucket").cast("string")),
+    graft.catalog.Snapshots.init(spark, tableDir, invertedRows(normedDf, cents),
       Some("bucket"))
 
+  /** [[assignTo]] with `bucket` as a string: the table's partition column. */
+  private def invertedRows(normedDf: DataFrame, cents: Centroids): DataFrame =
+    assignTo(normedDf, cents).withColumn("bucket", col("bucket").cast("string"))
+
   /** Apply a [[graft.catalog.Snapshots.diff]] feed of the embeddings
-    * table to the inverted file: new vectors are assigned to their
-    * nearest EXISTING centroid (map-only, plan-time centroid literals)
-    * and upserted; removed vectors are keyed-deleted — both land only in
-    * the buckets the changed vectors map to. Centroids stay FIXED between
-    * refits (standard IVF practice: assignment drift under churn is a
-    * recall, not correctness, concern — schedule a refit when drift
+    * table to the inverted file through
+    * [[graft.catalog.Materialized.applyFeed]]: new vectors are assigned to
+    * their nearest EXISTING centroid (map-only, plan-time centroid
+    * literals) and upserted; removed vectors are keyed-deleted — both land
+    * only in the buckets the changed vectors map to. Centroids stay FIXED
+    * between refits (standard IVF practice: assignment drift under churn
+    * is a recall, not correctness, concern — schedule a refit when drift
     * accumulates; q34's recall gate is the measure). Work ∝ changed
     * vectors; the 100 TB corpus is never re-clustered per mutation. */
   def maintainCorpus(spark: SparkSession, tableDir: String,
-                     changes: DataFrame, cents: Centroids): Unit = {
-    // pinned feed + ONE combined commit (the maintainPairs pattern): the
-    // diff feed re-executes per consumer otherwise, and delete-then-upsert
-    // paid two read-modify-write cycles where applyKeyed pays one
-    val feed = changes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      def pairs(side: String) =
-        assignTo(feed.filter(col("_change") === side).select("id", "v", "nrm"), cents)
-          .withColumn("bucket", col("bucket").cast("string"))
-      graft.catalog.Snapshots.applyKeyed(spark, tableDir,
-        pairs("delete").select("id", "bucket"), pairs("insert"), Seq("id"))
-    } finally feed.unpersist(false)
-  }
+                     changes: DataFrame, cents: Centroids): Unit =
+    graft.catalog.Materialized.applyFeed(spark, tableDir, changes, "bucket", Seq("id"))(
+      df => invertedRows(df.select("id", "v", "nrm"), cents))
 
   /** Per-centroid nearness scores for `v`, as a map-only expression over
     * plan-time centroid literals. Uses |c|² − 2·v·c (the |v|² term is

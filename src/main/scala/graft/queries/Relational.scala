@@ -2144,7 +2144,7 @@ object Relational {
         val corpus = s"$work/orders"
         val derived = s"$work/agg"
         graft.catalog.Snapshots.init(s, corpus, base, Some("o_orderstatus"))
-        graft.catalog.Materialized.initAgg(s, corpus, derived, "o_orderstatus")(aggOf)
+        graft.catalog.Materialized.init(s, corpus, derived, "o_orderstatus")(aggOf)
         // one applyKeyed commit == delete-then-upsert (SnapshotsSpec-gated
         // equivalence): the touched partitions are read once and one pool
         // write + one manifest replace the two read-modify-write cycles

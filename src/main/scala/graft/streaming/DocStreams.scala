@@ -305,7 +305,8 @@ object DocStreams {
   /** Continuous ingest with an ALWAYS-FRESH search index: each micro-batch
     * commits to the versioned corpus ([[graft.catalog.Snapshots.commitEpoch]],
     * replay-skipped) and then reconciles the pair index to the corpus'
-    * current version ([[graft.operators.InvertedIndex.reconcile]] — the
+    * current version ([[graft.operators.InvertedIndex.reconcile]], i.e.
+    * [[graft.catalog.Materialized.reconcile]] with the pair transform: the
     * diff from whatever version the index last reflected, applied by
     * keyed idempotent mutation, marker advanced after). EVERY failure
     * mode converges: a replayed corpus epoch is skipped and reconcile

@@ -391,14 +391,14 @@ class DocStreamsSpec extends SparkSpec {
       && got("delta") == Seq(3L))
     // crash-sim: roll the marker back one corpus version (as if the last
     // reconcile never ran) — re-reconciling converges, no duplicates
-    val reflected = InvertedIndex.reflectsVersion(index)
+    val reflected = graft.catalog.Materialized.reflects(index)
     java.nio.file.Files.write(java.nio.file.Paths.get(index, "_reflects"),
       (reflected - 1).toString.getBytes("UTF-8"))
     assert(InvertedIndex.reconcile(spark, corpus, index, "doc_id", "text").isDefined)
     val healed = InvertedIndex.pairsPostings(spark, index)
       .collect().map(r => (r.getString(0), r.getSeq[Long](2))).toMap
     assert(healed == got, s"re-reconcile diverged: $healed vs $got")
-    assert(InvertedIndex.reflectsVersion(index) == reflected)
+    assert(graft.catalog.Materialized.reflects(index) == reflected)
   }
 
   test("streaming cdc dedup: later batch loses the run it shares with history") {

@@ -106,7 +106,7 @@ class MaterializedSpec extends SparkSpec {
     val root = freshRoot()
     val corpus = corpusOf(root)
     val derived = s"$root/agg"
-    Materialized.initAgg(spark, corpus, derived, "part")(aggOf)
+    Materialized.init(spark, corpus, derived, "part")(aggOf)
     mutate(corpus)
     assert(Materialized.reconcileAgg(spark, corpus, derived, "part")(aggOf)
       .contains((1, Snapshots.currentVersion(spark, corpus))))
@@ -125,7 +125,7 @@ class MaterializedSpec extends SparkSpec {
     val root = freshRoot()
     val corpus = corpusOf(root)
     val derived = s"$root/agg"
-    Materialized.initAgg(spark, corpus, derived, "part")(aggOf)
+    Materialized.init(spark, corpus, derived, "part")(aggOf)
     Snapshots.delete(spark, corpus,
       Seq((3L, "1")).toDF("doc_id", "part"), Seq("doc_id")) // partition 1 empties
     Materialized.reconcileAgg(spark, corpus, derived, "part")(aggOf)
@@ -138,7 +138,7 @@ class MaterializedSpec extends SparkSpec {
     val root = freshRoot()
     val corpus = corpusOf(root)
     val derived = s"$root/agg"
-    Materialized.initAgg(spark, corpus, derived, "part")(aggOf)
+    Materialized.init(spark, corpus, derived, "part")(aggOf)
     val before = Snapshots.read(spark, derived)
       .select("part", "ini", "n_docs", "sum_chars", "xor_id")
       .as[(String, String, Long, Long, Long)].collect().toSet
@@ -159,7 +159,7 @@ class MaterializedSpec extends SparkSpec {
     val root = freshRoot()
     val corpus = corpusOf(root)
     val derived = s"$root/agg"
-    Materialized.initAgg(spark, corpus, derived, "part")(aggOf)
+    Materialized.init(spark, corpus, derived, "part")(aggOf)
     mutate(corpus)
     Materialized.reconcileAgg(spark, corpus, derived, "part")(aggOf)
     val before = Snapshots.read(spark, derived)
@@ -188,5 +188,21 @@ class MaterializedSpec extends SparkSpec {
       .select("doc_id", "n_toks").as[(Long, Long)].collect().toSet
     assert(after == before, "re-applied feed diverged")
     assert(Materialized.reflects(derived) == Snapshots.currentVersion(spark, corpus))
+  }
+
+  test("the change-feed split, the keyed commit and the _reflects marker live only in Materialized.scala") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root))
+    def src(f: java.nio.file.Path) = new String(Files.readAllBytes(f), "UTF-8")
+    val feedOrMarker = Files.walk(root).iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") && !f.endsWith("catalog/Materialized.scala"))
+      .filter { f => val text = src(f); Seq("_reflects", "col(\"_change\")").exists(text.contains) }
+      .map(root.relativize).toSeq
+    val keyedCommit = Seq("operators/InvertedIndex.scala", "operators/Ivf.scala")
+      .filter(f => src(root.resolve(f)).contains("applyKeyed"))
+    val offenders = (feedOrMarker.map(_.toString) ++ keyedCommit).distinct.sorted
+    assert(offenders.isEmpty,
+      s"apply change feeds and keep the marker through catalog.Materialized: ${offenders.mkString(", ")}")
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, SetJoin}
+import graft.operators.{Advisor, Dedup, SetJoin}
 
 class PinSpec extends SparkSpec {
   import spark.implicits._
@@ -122,6 +122,21 @@ class PinSpec extends SparkSpec {
     val e = intercept[Exception] { rows = Some(res.collect()) }
     assert(rows.isEmpty)
     assert(e.getMessage.contains("Checkpoint block") && e.getMessage.contains(s"rdd_${elPin.id}_"),
+      e.getMessage)
+    release(left)
+  }
+
+  test("advisor: a lost key-profile block fails the FK score loudly and returns no rows") {
+    val childKeys = Advisor.keyCounts(Seq(1L, 2L, 2L, 3L).toDF("c"), col("c"))
+    val (res, left) = pinsLeft(Advisor.fkScoreShared("c->p", childKeys,
+      Advisor.keyCounts(Seq(1L, 2L, 3L, 4L).toDF("p"), col("p"))))
+    val lost = pinsRead(childKeys).values.head
+    assert(pinsRead(res).keySet == Set(lost.id) ++ left.keySet && left.size == 1)
+    lost.unpersist(blocking = true) // drop the blocks behind the score's back
+    var rows: Option[Array[org.apache.spark.sql.Row]] = None
+    val e = intercept[Exception] { rows = Some(res.collect()) }
+    assert(rows.isEmpty)
+    assert(e.getMessage.contains("Checkpoint block") && e.getMessage.contains(s"rdd_${lost.id}_"),
       e.getMessage)
     release(left)
   }

@@ -8,9 +8,11 @@ Usage: python3 tools/local_oracle.py <outDir> <sfDir>
 For every query: load <outDir>/<name> parquet (Spark result), run the
 oracle SQL from oracle_sql.json in DuckDB over the sf tables, sort
 columns by name, sort rows, compare values cell-by-cell (exact for
-ints/strings, bit-exact for floats), report match/mismatch.
+ints/strings, bit-exact for floats), report match/mismatch. Queries
+without oracle SQL print `ROWS <name>: <n> sha256=<hex>`, a hash of the
+result's cells (columns sorted by name, rows sorted) to compare runs by.
 """
-import json, sys, glob, math
+import hashlib, json, sys, glob, math
 import duckdb
 import pandas as pd
 
@@ -19,6 +21,31 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.sort_values(by=list(df.columns), kind="mergesort", ignore_index=True,
                         na_position="first")
     return df
+
+def cell_repr(v):
+    """Type-stable repr of one cell: numpy scalars and arrays (list and
+    struct columns) become plain Python values, every NaN/None one token."""
+    if isinstance(v, dict):
+        return "{" + ",".join(f"{k!r}:{cell_repr(x)}" for k, x in sorted(v.items())) + "}"
+    if hasattr(v, "tolist") and not isinstance(v, (str, bytes)):
+        v = v.tolist()
+    if isinstance(v, (list, tuple)):
+        return "[" + ",".join(cell_repr(x) for x in v) + "]"
+    try:
+        if pd.isna(v): return "null"
+    except (TypeError, ValueError):
+        pass
+    if isinstance(v, float):
+        return v.hex()
+    return repr(v)
+
+def content_sha(df: pd.DataFrame) -> str:
+    """sha-256 of a result's cells, columns sorted by name, rows sorted:
+    a content check for the queries that have no oracle SQL."""
+    cols = sorted(df.columns)
+    rows = sorted("\x1f".join(cell_repr(v) for v in r)
+                  for r in df[cols].itertuples(index=False, name=None))
+    return hashlib.sha256("\n".join([",".join(cols)] + rows).encode()).hexdigest()
 
 def cell_eq(a, b):
     if a is None and b is None: return True
@@ -69,13 +96,13 @@ def main():
                 print(f"PASS {name} ({len(got)} rows)"); n_pass += 1
         except Exception as e:
             print(f"FAIL {name}: {type(e).__name__}: {e}"); n_fail += 1
-    # rows-only queries (no oracle)
+    # rows-only queries (no oracle): row count + content hash
     for d in sorted(glob.glob(f"{out_dir}/*/")):
         nm = d.rstrip("/").split("/")[-1]
         if nm not in oracles:
-            files = glob.glob(f"{d}/*.parquet")
-            rows = sum(len(pd.read_parquet(f)) for f in files) if files else 0
-            print(f"ROWS {nm}: {rows}")
+            files = sorted(glob.glob(f"{d}/*.parquet"))
+            df = pd.concat([pd.read_parquet(f) for f in files]) if files else pd.DataFrame()
+            print(f"ROWS {nm}: {len(df)} sha256={content_sha(df)}")
     print(f"\n{n_pass} pass / {n_fail} fail")
     sys.exit(1 if n_fail else 0)
 
