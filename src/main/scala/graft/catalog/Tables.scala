@@ -77,19 +77,30 @@ object Tables {
       rawKey.replaceAll("[^A-Za-z0-9]", "_").dropWhile(_ == '_') + "_" + digest
   }
 
-  /** Is the derived artifact at `dir` complete AND built from the current
-    * source? Complete = `<dir>/<artifact>/_SUCCESS` exists (the committer
-    * writes it last); current = the fingerprint sidecar matches
-    * [[sourceFingerprint]] of `sourcePath`. */
-  def derivedIsFresh(dir: String, artifact: String, sourcePath: String): Boolean = {
+  /** Fingerprint-guarded build of the derived artifact `<dir>/<artifact>`.
+    * The artifact on disk is reused when it is complete (its `_SUCCESS`
+    * exists; the committer writes it last, so `build` must write
+    * `artifact` last) and current (the fingerprint sidecar matches
+    * [[sourceFingerprint]] of `sourcePath`). Otherwise `dir` is cleared,
+    * `build` runs and the fingerprint is stamped. Returns `build`'s
+    * result, or None when the artifact was reused. */
+  def ensureDerived[T](dir: String, artifact: String, sourcePath: String)(build: => T): Option[T] = {
     val fpPath = java.nio.file.Paths.get(dir, FpFile)
-    java.nio.file.Files.exists(java.nio.file.Paths.get(dir, artifact, "_SUCCESS")) &&
-      java.nio.file.Files.exists(fpPath) &&
-      new String(java.nio.file.Files.readAllBytes(fpPath), "UTF-8") ==
-        sourceFingerprint(sourcePath)
+    val fresh =
+      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, artifact, "_SUCCESS")) &&
+        java.nio.file.Files.exists(fpPath) &&
+        new String(java.nio.file.Files.readAllBytes(fpPath), "UTF-8") ==
+          sourceFingerprint(sourcePath)
+    if (fresh) None
+    else {
+      derivedClear(dir)
+      val out = build
+      java.nio.file.Files.write(fpPath, sourceFingerprint(sourcePath).getBytes("UTF-8"))
+      Some(out)
+    }
   }
 
-  /** Clear a derived-artifact dir (pre-rebuild) / stamp it (post-build). */
+  /** Clear a derived-artifact dir (before a rebuild). */
   def derivedClear(dir: String): Unit = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get(dir)
@@ -97,9 +108,6 @@ object Tables {
       java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
         .foreach(java.nio.file.Files.deleteIfExists(_))
   }
-  def derivedStamp(dir: String, sourcePath: String): Unit =
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, FpFile),
-      sourceFingerprint(sourcePath).getBytes("UTF-8"))
 
   /** One-time bucketed ingest of the fact tables for `dir` (idempotent
     * ACROSS JVMs). The in-memory catalog forgets tables on restart but the

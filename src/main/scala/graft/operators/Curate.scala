@@ -72,9 +72,8 @@ object Curate {
     val keepIds = Dedup.exactDedup(quality, idCol, textCol).select(idCol)
     val exact = quality.join(keepIds, Seq(idCol), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sk = Dedup.sketch(exact, idCol, textCol, tier = tier)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val drops = Dedup.batchDropPairs(sk, historySketch, theta = theta)
+    val drops = Dedup.batchDropPairs(Dedup.sketch(exact, idCol, textCol, tier = tier),
+        historySketch, theta = theta)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dropIds = drops.select(col("b").as(idCol)).distinct()
     val curated = exact.join(dropIds, Seq(idCol), "left_anti")

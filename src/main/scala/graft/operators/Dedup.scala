@@ -19,7 +19,9 @@ import graft.functions.{Hashing, TextAnalysis}
   *    expressions (no shuffle, no UDF); the only shuffles are the
   *    band-bucket join (tiny keys) and the final candidate verification
   *    join. Candidate volume is controlled by (bands, rows-per-band), and
-  *    [[candidatePairs]] can cap pathological bucket sizes.
+  *    the bucket cap bounds pathological buckets. Every MinHash pair set
+  *    (within-corpus, batch-vs-history, cross-corpus) comes from one
+  *    engine, [[lshPairs]].
   *  - SimHash pair generation is banded (pigeonhole): pairs within Hamming
   *    distance h are guaranteed to share one of h+1 bands, so no full n²
   *    self-join is ever materialized.
@@ -66,8 +68,8 @@ object Dedup {
   val XxTier = "xx"
 
   /** (id, shingles, sig) at the requested hash tier — the one map-only
-    * sketch pass everything downstream ([[nearDupsFromSketch]],
-    * [[crossCorpusFromSketches]], the persisted index) composes over. */
+    * sketch pass everything downstream ([[lshPairs]], the persisted
+    * index) composes over. */
   def sketch(docs: DataFrame, idCol: String, textCol: String,
              ngram: Int = 2, k: Int = 32, tier: String = Md5Tier): DataFrame = {
     val sh = shingled(docs, idCol, textCol, ngram)
@@ -82,42 +84,62 @@ object Dedup {
     }
   }
 
-  /** One row per (id, band) with the band's signature-slice as a join key. */
-  def bands(sigDf: DataFrame, b: Int, r: Int): DataFrame =
+  /** One row per (id, band): the band's signature slice as the join key
+    * `bkey`, plus the `keep` columns. The one banding function — the LSH
+    * pair engine ([[lshPairs]]) and both streaming paths
+    * ([[graft.streaming.DocStreams]]) band through it. `keep` columns are
+    * selected by reference, with no alias or cast, so a watermarked
+    * event-time column keeps its watermark tag. */
+  def bands(sigDf: DataFrame, b: Int, r: Int, keep: String*): DataFrame =
     sigDf
       .withColumn("band", explode(sequence(lit(0), lit(b - 1))))
-      .select(col("id"), col("band"),
+      .select(Seq(col("id"), col("band"),
         array_join(transform(slice(col("sig"), col("band") * r + 1, lit(r)),
-          x => x.cast("string")), ",").as("bkey"))
+          x => x.cast("string")), ",").as("bkey")) ++ keep.map(col): _*)
 
   /** Default LSH bucket cap: one degenerate all-alike bucket of n docs
     * yields n²/2 candidate pairs — at 100 TB that is THE failure mode, so
     * the guard is on unless a caller explicitly passes `None`. */
   val DefaultMaxBucket: Option[Int] = Some(1000)
 
-  /** Distinct candidate pairs (a < b) sharing at least one LSH bucket.
-    * `maxBucket`, when set, drops buckets larger than the cap — the
-    * standard guard against degenerate buckets exploding the join at
-    * scale (drops only pathological all-alike clusters). Dropped-bucket
-    * counts are surfaced as the observed metric `lsh_bucket_cap`
-    * (Dataset.observe — readable from a QueryExecutionListener or
-    * StreamingQueryListener at zero extra job cost). */
-  def candidatePairs(bandsDf: DataFrame, maxBucket: Option[Int] = DefaultMaxBucket): DataFrame = {
-    val buckets = maxBucket match {
+  /** Distinct candidate pairs (a < b) sharing at least one LSH bucket of
+    * a band table — the candidate stage of [[lshPairs]] on its own, with
+    * the same bucket cap. */
+  def candidatePairs(bandsDf: DataFrame, maxBucket: Option[Int] = DefaultMaxBucket): DataFrame =
+    candidates(bandsDf.withColumn("vs_hist", lit(false)), within = true, maxBucket)
+      .select("a", "b")
+
+  /** Distinct (a, b, vs_hist) candidates of a band table whose rows carry
+    * `vs_hist` (true for history docs): `b` is a batch doc sharing a
+    * bucket with `a`, and `a` is a history doc or, when `within`, a
+    * smaller-id batch doc. `maxBucket`, when set, drops every bucket
+    * holding more docs than the cap, history and batch docs counted
+    * together — the guard against degenerate all-alike buckets exploding
+    * the join. Dropped-bucket counts are surfaced as the observed metric
+    * `lsh_bucket_cap` (`dropped_buckets`, `max_bucket`; Dataset.observe,
+    * readable from a QueryExecutionListener at no extra job). */
+  private def candidates(banded: DataFrame, within: Boolean,
+                         maxBucket: Option[Int]): DataFrame = {
+    val kept = maxBucket match {
       case Some(cap) =>
-        val counts = bandsDf.groupBy("band", "bkey").count()
+        val ok = banded.groupBy("band", "bkey").count()
           .observe("lsh_bucket_cap",
             sum(when(col("count") > cap, lit(1L)).otherwise(lit(0L)))
               .as("dropped_buckets"),
             max(col("count")).as("max_bucket"))
-        val ok = counts.filter(col("count") <= cap).select("band", "bkey")
-        bandsDf.join(ok, Seq("band", "bkey"))
-      case None => bandsDf
+          .filter(col("count") <= cap).select("band", "bkey")
+        banded.join(ok, Seq("band", "bkey"))
+      case None => banded
     }
-    val l = buckets.select(col("band"), col("bkey"), col("id").as("a"))
-    val r = buckets.select(col("band"), col("bkey"), col("id").as("b"))
-    l.join(r, Seq("band", "bkey")).filter(col("a") < col("b"))
-      .select("a", "b").distinct()
+    val pairOk = if (within) col("vs_hist") || col("a") < col("b") else col("vs_hist")
+    // capping the left side alone suppresses a bucket: the join is inner,
+    // so a capped bucket's batch rows match nothing
+    kept.select(col("band"), col("bkey"), col("id").as("a"), col("vs_hist"))
+      .join(banded.filter(!col("vs_hist")).select(col("band"), col("bkey"), col("id").as("b")),
+        Seq("band", "bkey"))
+      .filter(pairOk)
+      // one row per pair, keyed on (a, b) alone: `vs_hist` follows from `a`
+      .groupBy("a", "b").agg(max(col("vs_hist")).as("vs_hist"))
   }
 
   /** Exact Jaccard over the shingle sets for given (a, b) pairs. */
@@ -150,110 +172,92 @@ object Dedup {
       .select((Seq("a", "b") ++ extra :+ "jac").map(col): _*)
   }
 
+  /** The one MinHash-LSH pair engine: [[nearDupsFromSketch]],
+    * [[batchDropPairs]] and [[crossCorpusFromSketches]] are each one call
+    * of it. The batch's bands join the bands of batch ∪ history, buckets
+    * over `maxBucket` (history and batch docs counted together) are
+    * dropped ([[candidates]]), and the surviving candidates are verified
+    * by exact Jaccard. `within` keeps within-batch pairs (a < b) besides
+    * the history × batch ones. Returns (a, b, vs_hist, jac) with jac >= θ,
+    * `b` always a batch id and `vs_hist` true when `a` is a history doc.
+    * Pair order is unspecified: most consumers aggregate or cluster the
+    * pairs, and an interior global sort is a wasted range exchange there;
+    * presentation queries sort at their root. `historySketch` must share
+    * the batch sketch's hash tier — signatures of different families never
+    * band-match, which silently finds nothing.
+    *
+    * Persistence: the batch sketch, and only it, is persisted
+    * (MEMORY_AND_DISK); it feeds the band explode and the b side of the
+    * verification, which would otherwise re-tokenize and re-hash the batch
+    * per branch. It backs the returned LAZY frame, so it outlives the call:
+    * a long-lived session clears it with `spark.catalog.clearCache()` (or
+    * [[graft.Pin.releaseAll]]) between corpora, as Bench and Verify do.
+    * The bands are recomputed from it per branch (a cheap projection). The
+    * history sketch is not persisted: it is read once for its bands and
+    * once for the shingles of actual candidates, which for the persisted
+    * index ([[ensureSketchIndex]]) are two scans of an on-disk table. */
+  private def lshPairs(batchSketch: DataFrame, historySketch: Option[DataFrame],
+                       within: Boolean, b: Int, r: Int, theta: Double,
+                       maxBucket: Option[Int]): DataFrame = {
+    val batch = batchSketch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val batchBands = bands(batch, b, r).withColumn("vs_hist", lit(false))
+    val banded = historySketch.fold(batchBands)(h =>
+      bands(h, b, r).withColumn("vs_hist", lit(true)).unionByName(batchBands))
+    val aSrc = historySketch match {
+      case Some(h) if within =>
+        batch.select("id", "shingles").unionByName(h.select("id", "shingles"))
+      case Some(h) => h
+      case None => batch
+    }
+    verifyJaccardSources(candidates(banded, within, maxBucket), aSrc, batch)
+      .filter(col("jac") >= theta)
+  }
+
   /** Full MinHash-LSH near-dup pipeline: pairs with shingle-Jaccard >= θ.
     * Defaults tuned for near-dup detection at θ≈0.5 with word bigrams:
     * k=32 hashes, 8 bands × 4 rows → recall ≈ 1-(1-θ^4)^8 (0.42 at θ=0.5,
     * ≈1.0 at θ=0.9); background pairs at jac≈0.05 are ~5e-5 likely to
-    * become candidates.
+    * become candidates. `tier` picks the sketch's hash family:
+    * [[Md5Tier]] is oracle-comparable, [[XxTier]] the production family
+    * (same duplicate sets on real data, spec-checked).
     *
-    * Caching contract: the shingle/signature/band intermediates stay
-    * persisted (MEMORY_AND_DISK) until the session caches are cleared —
-    * they back the returned LAZY frame, so the operator cannot unpersist
-    * them itself. Long-lived sessions issuing many dedup calls should
-    * `spark.catalog.clearCache()` between corpora (as Bench does). */
+    * Caching contract: the sketch stays persisted after the call, as
+    * [[lshPairs]] states — it backs the returned LAZY frame. Long-lived
+    * sessions issuing many dedup calls should `spark.catalog.clearCache()`
+    * between corpora (as Bench does). */
   def minhashNearDups(docs: DataFrame, idCol: String, textCol: String,
                       ngram: Int = 2, k: Int = 32, b: Int = 8, r: Int = 4,
                       theta: Double = 0.5,
-                      maxBucket: Option[Int] = DefaultMaxBucket): DataFrame = {
-    // The sketch table feeds three joins (band self-join left/right +
-    // verification); materialize it once instead of re-tokenizing and
-    // re-hashing the corpus per branch. MEMORY_AND_DISK: at cluster scale
-    // this spills rather than OOMs, and is strictly cheaper than N full
-    // recomputes of scan → tokenize → md5.
-    val sk = sketch(docs, idCol, textCol, ngram, k, Md5Tier)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    nearDupsFromSketch(sk, b, r, theta, maxBucket)
-  }
+                      maxBucket: Option[Int] = DefaultMaxBucket,
+                      tier: String = Md5Tier): DataFrame =
+    nearDupsFromSketch(sketch(docs, idCol, textCol, ngram, k, tier), b, r, theta, maxBucket)
 
-  /** Production-tier near-dup pipeline: identical structure to
-    * [[minhashNearDups]] but at [[XxTier]] — fully codegen'd hashing, no
-    * hex parsing. Different hash family ⇒ not oracle-comparable; same
-    * duplicate sets on real data (spec-checked). */
-  def minhashNearDupsFast(docs: DataFrame, idCol: String, textCol: String,
-                          ngram: Int = 2, k: Int = 32, b: Int = 8, r: Int = 4,
-                          theta: Double = 0.5,
-                          maxBucket: Option[Int] = DefaultMaxBucket): DataFrame = {
-    val sk = sketch(docs, idCol, textCol, ngram, k, XxTier)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    nearDupsFromSketch(sk, b, r, theta, maxBucket)
-  }
-
-  /** Within-corpus near-dup pairs from a PRE-COMPUTED (id, shingles, sig)
-    * sketch — the composable core of minhashNearDups*. Callers that
-    * already hold the sketch (ingest funnels, persisted indexes) pay one
-    * sketch pass per batch TOTAL, not one per dedup stage. The sketch
-    * frame should be persisted by the caller: it feeds the band explode
-    * and both verification sides. */
+  /** Within-corpus near-dup pairs (a < b, jac) from a PRE-COMPUTED
+    * (id, shingles, sig) sketch. Callers that already hold the sketch
+    * (ingest funnels, persisted indexes) pay one sketch pass per batch
+    * TOTAL, not one per dedup stage. */
   def nearDupsFromSketch(sk: DataFrame, b: Int = 8, r: Int = 4,
                          theta: Double = 0.5,
-                         maxBucket: Option[Int] = DefaultMaxBucket): DataFrame = {
-    // persist before banding: the band explode would otherwise recompute
-    // the signature chain once per (row, band)
-    val bnd = bands(sk, b, r)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = candidatePairs(bnd, maxBucket)
-    // pair order unspecified: most consumers aggregate or cluster the
-    // pairs, and an interior global sort is a wasted range exchange +
-    // bounds-sampling pass there; presentation queries sort at their root
-    // (where the small-result rewrite makes it one cheap local sort)
-    verifyJaccard(cand, sk).filter(col("jac") >= theta)
-  }
+                         maxBucket: Option[Int] = DefaultMaxBucket): DataFrame =
+    lshPairs(sk, None, within = true, b, r, theta, maxBucket).drop("vs_hist")
 
   /** ONE-PASS drop pairs for an ingest batch: batch docs near-duplicating
     * a smaller-id batch doc (the greedy within-batch rule) or ANY history
-    * doc. History bands ∪ batch bands form the join's left side, batch
-    * bands the right — so ONE bucket-cap count, ONE band join and ONE
-    * verification serve BOTH dedup stages (the sequential form pays each
-    * of those twice; measured ~2x stage count on ingest-batch inputs).
-    * Returns (a, b, vs_hist, jac) with `b` always a batch id.
+    * doc — one bucket-cap count, one band join and one verification serve
+    * both dedup stages (the sequential form pays each of those twice;
+    * measured ~2x stage count on ingest-batch inputs). Returns
+    * (a, b, vs_hist, jac) with `b` always a batch id.
     *
     * Survivor-set identity with the sequential two-stage form: comparing
     * ALL batch docs (not just within-batch survivors) against history can
     * only re-drop docs the within-batch rule already dropped —
     * {within-drops} ∪ {vs-history drops of everyone} equals
     * {within-drops} ∪ {vs-history drops of survivors}. Spec-gated in
-    * CurateSpec. `historySketch` must share the batch sketch's hash tier. */
+    * CurateSpec. */
   def batchDropPairs(batchSketch: DataFrame, historySketch: Option[DataFrame],
                      b: Int = 8, r: Int = 4, theta: Double = 0.5,
-                     maxBucket: Option[Int] = DefaultMaxBucket): DataFrame = {
-    val bb = bands(batchSketch, b, r).withColumn("vs_hist", lit(false))
-    val left = historySketch match {
-      case Some(h) => bands(h, b, r).withColumn("vs_hist", lit(true)).unionByName(bb)
-      case None => bb
-    }
-    val leftOk = maxBucket match {
-      case Some(cap) =>
-        val ok = left.groupBy("band", "bkey").count()
-          .observe("lsh_bucket_cap_batch",
-            sum(when(col("count") > cap, lit(1L)).otherwise(lit(0L)))
-              .as("dropped_buckets"))
-          .filter(col("count") <= cap).select("band", "bkey")
-        // capping the LEFT side alone suppresses the bucket: the band join
-        // is inner, so a capped bucket's right-side rows match nothing
-        left.join(ok, Seq("band", "bkey"))
-      case None => left
-    }
-    val cand = leftOk.select(col("band"), col("bkey"), col("id").as("a"), col("vs_hist"))
-      .join(bb.select(col("band"), col("bkey"), col("id").as("b")), Seq("band", "bkey"))
-      .filter(col("vs_hist") || col("a") < col("b"))
-      .select("a", "b", "vs_hist").distinct()
-    val aSrc = historySketch match {
-      case Some(h) => batchSketch.select("id", "shingles")
-        .unionByName(h.select("id", "shingles"))
-      case None => batchSketch
-    }
-    verifyJaccardSources(cand, aSrc, batchSketch).filter(col("jac") >= theta)
-  }
+                     maxBucket: Option[Int] = DefaultMaxBucket): DataFrame =
+    lshPairs(batchSketch, historySketch, within = true, b, r, theta, maxBucket)
 
   /** Incremental (cross-corpus) near-dup: which documents of a NEW batch
     * near-duplicate the HISTORICAL corpus. Returns (a: history id,
@@ -261,8 +265,7 @@ object Dedup {
     * the point: at 100 TB the history self-join is the cost you must NOT
     * pay per ingest batch. Signatures are per-row functions, so computing
     * history's sketch here or reading it from the persisted index
-    * ([[ensureSketchIndex]]) yields identical values; the bucket cap
-    * applies to COMBINED bucket sizes; only history×batch buckets join.
+    * ([[ensureSketchIndex]]) yields identical values.
     *
     * Assumes `idCol` is globally unique across both frames (true for any
     * keyed corpus; the declared query uses a doc_id split). */
@@ -288,52 +291,18 @@ object Dedup {
     crossCorpusFromSketches(historySketch,
       sketch(fresh, idCol, textCol, ngram, k, Md5Tier), b, r, theta, maxBucket)
 
-  /** [[crossCorpusNearDupsIndexed]] with BOTH sides pre-sketched. The two
-    * sketches must come from the same hash tier — signatures of different
-    * families never band-match, which silently finds nothing. */
+  /** [[crossCorpusNearDupsIndexed]] with BOTH sides pre-sketched, of the
+    * same hash tier. */
   def crossCorpusFromSketches(historySketch: DataFrame, freshSketch: DataFrame,
                               b: Int = 8, r: Int = 4,
                               theta: Double = 0.5,
-                              maxBucket: Option[Int] = DefaultMaxBucket): DataFrame = {
-    val hsk = historySketch
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val fsk = freshSketch
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hb = bands(hsk, b, r)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val fb = bands(fsk, b, r)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (hOk, fOk) = maxBucket match {
-      case Some(cap) =>
-        val ok = hb.select("band", "bkey").unionByName(fb.select("band", "bkey"))
-          .groupBy("band", "bkey").count()
-          .observe("lsh_bucket_cap_x",
-            sum(when(col("count") > cap, lit(1L)).otherwise(lit(0L)))
-              .as("dropped_buckets"))
-          .filter(col("count") <= cap).select("band", "bkey")
-        (hb.join(ok, Seq("band", "bkey")), fb.join(ok, Seq("band", "bkey")))
-      case None => (hb, fb)
-    }
-    val cand = hOk.select(col("band"), col("bkey"), col("id").as("a"))
-      .join(fOk.select(col("band"), col("bkey"), col("id").as("b")),
-        Seq("band", "bkey"))
-      .select("a", "b").distinct()
-    // sorted-merge intersection count (see verifyJaccardSources): sort
-    // once per doc row, zero-allocation merge per pair, jac bit-identical
-    val ga = hsk.select(col("id").as("a"), sort_array(col("shingles")).as("sa"))
-    val gb = fsk.select(col("id").as("b"), sort_array(col("shingles")).as("sb"))
-    cand.join(ga, "a").join(gb, "b")
-      .withColumn("n_inter",
-        graft.expressions.Sketches.sortedIntersectCount(col("sa"), col("sb")))
-      .withColumn("jac", col("n_inter").cast("double") /
-        (size(col("sa")) + size(col("sb")) - col("n_inter")).cast("double"))
-      .select("a", "b", "jac")
-      .filter(col("jac") >= theta) // pair order unspecified (see nearDupsFromSketch)
-  }
+                              maxBucket: Option[Int] = DefaultMaxBucket): DataFrame =
+    lshPairs(freshSketch, Some(historySketch), within = false, b, r, theta, maxBucket)
+      .drop("vs_hist")
 
   /** Ingest-time near-dup index for a corpus: the (id, shingles, sig)
-    * sketch table, persisted once per (indexKey, ngram, k) and validated
-    * against a fingerprint of `sourcePath` — the dedup twin of
+    * sketch table, persisted once per (indexKey, ngram, k, tier) and
+    * validated against a fingerprint of `sourcePath` — the dedup twin of
     * [[Ivf.ensureIndex]]. Every subsequent ingest batch dedups against it
     * via [[crossCorpusNearDupsIndexed]] without touching the corpus text.
     * Storage trade, stated: shingle arrays are corpus-sized; the
@@ -347,11 +316,9 @@ object Dedup {
     // same corpus are DIFFERENT artifacts (their signatures never match
     // across families), so they must never share a directory
     val dir = graft.catalog.Tables.derivedDir("graft_dedup", s"$indexKey|n=$ngram|k=$k|t=$tier")
-    if (!graft.catalog.Tables.derivedIsFresh(dir, "sketch", sourcePath)) {
-      graft.catalog.Tables.derivedClear(dir)
+    graft.catalog.Tables.ensureDerived(dir, "sketch", sourcePath) {
       sketch(corpus, idCol, textCol, ngram, k, tier)
         .write.mode("overwrite").parquet(s"$dir/sketch")
-      graft.catalog.Tables.derivedStamp(dir, sourcePath)
     }
     spark.read.parquet(s"$dir/sketch")
   }
@@ -473,7 +440,7 @@ object Dedup {
     // themselves
     e.df.select(col("u").as("id"), col("v").as("cluster"))
       .union(e.df.select(col("v").as("id"), col("v").as("cluster")).distinct())
-      .distinct() // label order unspecified (see nearDupsFromSketch)
+      .distinct() // label order unspecified (see lshPairs)
   }
 
   /** Near-dup pairs by SimHash: Hamming(a,b) <= maxHam, found via banded
@@ -497,7 +464,7 @@ object Dedup {
       .select(col("a"), col("b"),
         expr("bit_count(fa ^ fb)").cast("long").as("hamming"))
       .distinct()
-      .filter(col("hamming") <= maxHam) // pair order unspecified (see nearDupsFromSketch)
+      .filter(col("hamming") <= maxHam) // pair order unspecified (see lshPairs)
   }
 
   // ---- content-defined chunk dedup (exact-substring, shift-invariant) ----

@@ -130,8 +130,7 @@ object InvertedIndex {
                   cap: Int = 100): String = {
     val src = s"$dir/documents.parquet"
     val work = graft.catalog.Tables.derivedDir("graft_invidx", s"$dir|cap=$cap")
-    if (!graft.catalog.Tables.derivedIsFresh(work, "stats.parquet", src)) {
-      graft.catalog.Tables.derivedClear(work)
+    graft.catalog.Tables.ensureDerived(work, "stats.parquet", src) {
       val corpus = graft.catalog.Tables.widened(spark,
         graft.catalog.Tables.load(spark, dir, "documents"))
       build(corpus, "doc_id", "text", cap)
@@ -139,7 +138,6 @@ object InvertedIndex {
       corpus.select(size(TextAnalysis.tokens(col("text"))).cast("long").as("dl0"))
         .agg(count(lit(1)).as("n_docs"), sum(col("dl0")).as("sum_dl"))
         .coalesce(1).write.mode("overwrite").parquet(s"$work/stats.parquet")
-      graft.catalog.Tables.derivedStamp(work, src)
     }
     work
   }

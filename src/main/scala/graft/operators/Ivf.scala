@@ -77,12 +77,7 @@ object Ivf {
       s"$corpusKey|k=$k|it=$maxIter|s=$seed|fp=${graft.catalog.Tables.sourceFingerprint(src).hashCode}"
     indexMemo.getOrElseUpdate(memoKey, {
       val dir = indexDir(corpusKey, k, maxIter, seed)
-      if (graft.catalog.Tables.derivedIsFresh(dir, "centroids", src)) {
-        spark.read.parquet(s"$dir/centroids")
-          .orderBy("bucket").select("c")
-          .collect().map(_.getSeq[Double](0).toArray)
-      } else {
-        graft.catalog.Tables.derivedClear(dir)
+      graft.catalog.Tables.ensureDerived(dir, "centroids", src) {
         val cents = centroids(fit(normedDf, k, seed, maxIter))
         assignTo(normedDf, cents).write.mode("overwrite")
           .partitionBy("bucket").parquet(s"$dir/corpus")
@@ -90,9 +85,10 @@ object Ivf {
         cents.toIndexedSeq.zipWithIndex.map { case (c, i) => (i, c.toIndexedSeq) }
           .toDF("bucket", "c")
           .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-        graft.catalog.Tables.derivedStamp(dir, src)
         cents
-      }
+      }.getOrElse(spark.read.parquet(s"$dir/centroids")
+        .orderBy("bucket").select("c")
+        .collect().map(_.getSeq[Double](0).toArray))
     })
   }
 

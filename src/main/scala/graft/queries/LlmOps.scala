@@ -779,7 +779,7 @@ object LlmOps {
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy()
-        Dedup.minhashNearDupsFast(docs(s, dir), "doc_id", "text")
+        Dedup.minhashNearDups(docs(s, dir), "doc_id", "text", tier = Dedup.XxTier)
           .orderBy("a", "b")
           .withColumn("smry_pairs", count(lit(1)).over(w))
           .withColumn("smry_min_a", min(col("a")).over(w))

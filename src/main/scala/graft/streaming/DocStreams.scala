@@ -32,13 +32,14 @@ case class BucketDoc(id: Long, sig: Seq[Long])
   * and RocksDB state providers. */
 case class BucketState(docs: List[BucketDoc], maxEvtMs: Long = Long.MinValue)
 
-/** Streaming twin of [[graft.operators.Dedup.minhashNearDupsFast]]: detect
-  * near-duplicate documents ON ARRIVAL instead of in a batch self-join
-  * (SURVEY §2.2 streaming + the LLM-ops dedup family). An incoming
-  * document is sketched map-side (tokens → word n-grams → xxhash64 →
-  * k-MinHash via the custom Catalyst expression), banded into b LSH
-  * buckets, and compared only against the documents its buckets have seen
-  * — the streaming replacement of the batch band self-join.
+/** Streaming twin of [[graft.operators.Dedup.minhashNearDups]] at
+  * [[graft.operators.Dedup.XxTier]]: detect near-duplicate documents ON
+  * ARRIVAL instead of in a batch self-join (SURVEY §2.2 streaming + the
+  * LLM-ops dedup family). An incoming document is sketched map-side
+  * (tokens → word n-grams → xxhash64 → k-MinHash via the custom Catalyst
+  * expression), banded into b LSH buckets, and compared only against the
+  * documents its buckets have seen — the streaming replacement of the
+  * batch band self-join.
   *
   * Scale design (continuous 100 TB-class ingest):
   *  - All sketching is per-row projection — the only shuffle is the
@@ -91,7 +92,7 @@ object DocStreams {
         (docs.withWatermark(tsCol, horizon), col(tsCol), tsCol)
       case None => (docs, lit(null).cast("timestamp").as("evt"), "evt")
     }
-    val banded = watermarked
+    val sketched = watermarked
       .select(col(idCol).cast("long").as("id"), TextAnalysis.tokens(col(textCol)).as("toks"),
         evtCol)
       .filter(size(col("toks")) >= ngram)
@@ -99,11 +100,7 @@ object DocStreams {
         col(evtName))
       .withColumn("hs", transform(col("shingles"), t => FastHashing.h28Fast(t)))
       .withColumn("sig", graft.expressions.Sketches.minhashSig(col("hs"), k))
-      .withColumn("band", explode(sequence(lit(0), lit(b - 1))))
-      .select(col("id"), col("band"),
-        array_join(transform(slice(col("sig"), col("band") * r + 1, lit(r)),
-          x => x.cast("string")), ",").as("bkey"),
-        col("sig"), col(evtName))
+    val banded = graft.operators.Dedup.bands(sketched, b, r, "sig", evtName)
       .as[(Long, Int, String, Seq[Long], java.sql.Timestamp)]
     val effTimeout =
       if (eventTime.isDefined) GroupStateTimeout.EventTimeTimeout else timeout
@@ -172,23 +169,17 @@ object DocStreams {
                      theta: Double = 0.5,
                      tier: String = graft.operators.Dedup.Md5Tier): DataFrame = {
     require(b * r <= k, s"b*r (${b * r}) must be <= k ($k)")
-    def banded(df: DataFrame, sigCol: String): DataFrame = df
-      .withColumn("band", explode(sequence(lit(0), lit(b - 1))))
-      .withColumn("bkey",
-        array_join(transform(slice(col(sigCol), col("band") * r + 1, lit(r)),
-          x => x.cast("string")), ","))
     // `tier` must be the INDEX's hash family (ensureSketchIndex's tier) —
     // signatures of different families never band-match, which silently
     // finds nothing. Md5Tier is the oracle family; XxTier (codegen'd
     // xxhash64) is what a production stream runs.
-    val stream = banded(
-      graft.operators.Dedup.sketch(
+    val stream = graft.operators.Dedup.bands(
+        graft.operators.Dedup.sketch(
           docs.select(col(idCol).cast("long").as(idCol), col(textCol)),
-          idCol, textCol, ngram, k, tier)
-        .select(col("id").as("sid"), col("sig").as("ssig")), "ssig")
-    val hist = banded(
-      historySketch.select(col("id").as("hid"), col("sig").as("hsig")), "hsig")
-      .select("band", "bkey", "hid", "hsig")
+          idCol, textCol, ngram, k, tier), b, r, "sig")
+      .select(col("band"), col("bkey"), col("id").as("sid"), col("sig").as("ssig"))
+    val hist = graft.operators.Dedup.bands(historySketch, b, r, "sig")
+      .select(col("band"), col("bkey"), col("id").as("hid"), col("sig").as("hsig"))
     stream.join(hist, Seq("band", "bkey")) // stream-static inner join
       .withColumn("agree", aggregate(
         zip_with(col("ssig"), col("hsig"), (x, y) => when(x === y, 1).otherwise(0)),

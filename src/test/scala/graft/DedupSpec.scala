@@ -112,7 +112,8 @@ class DedupSpec extends SparkSpec {
   test("fast (xxhash64) near-dup pipeline finds the same duplicate pairs") {
     val md5Pairs = Dedup.minhashNearDups(corpus, "doc_id", "text", theta = 0.5)
       .select("a", "b").as[(Long, Long)].collect().toSet
-    val fastPairs = Dedup.minhashNearDupsFast(corpus, "doc_id", "text", theta = 0.5)
+    val fastPairs = Dedup.minhashNearDups(corpus, "doc_id", "text", theta = 0.5,
+      tier = Dedup.XxTier)
       .select("a", "b").as[(Long, Long)].collect().toSet
     assert(fastPairs == md5Pairs)
   }
@@ -142,6 +143,67 @@ class DedupSpec extends SparkSpec {
     val uncapped = Dedup.candidatePairs(bnd).count()
     val capped = Dedup.candidatePairs(bnd, maxBucket = Some(1)).count()
     assert(uncapped > 0 && capped == 0)
+  }
+
+  test("bucket cap counts history and batch docs together on every history path") {
+    // history holds `n` copies of one text and the batch one more copy:
+    // with n = cap every bucket of that text holds cap + 1 docs, but only
+    // when both sides are counted together, so every path must drop it;
+    // one history copy fewer keeps the buckets and finds the pairs
+    val text = "the quick brown fox jumps over the lazy dog and runs far away today " * 3
+    val novel = "a completely different well formed document about the spark optimizer " +
+      "and the shuffles it plans for large scale joins in the cluster today"
+    val batch = Seq((5000L, text), (5001L, novel)).toDF("doc_id", "text")
+    def history(n: Int, tier: String) = Dedup.sketch(
+      (0L until n.toLong).map(i => (i, text)).toDF("doc_id", "text"), "doc_id", "text", tier = tier)
+    val cap = 3
+    def cross(n: Int) = Dedup.crossCorpusNearDupsIndexed(history(n, Dedup.Md5Tier), batch,
+      "doc_id", "text", maxBucket = Some(cap)).select("a", "b").as[(Long, Long)].collect().toSet
+    def vsHist(n: Int) = Dedup.batchDropPairs(Dedup.sketch(batch, "doc_id", "text"),
+        Some(history(n, Dedup.Md5Tier)), maxBucket = Some(cap))
+      .filter(col("vs_hist")).select("a", "b").as[(Long, Long)].collect().toSet
+    assert(cross(cap).isEmpty && vsHist(cap).isEmpty)
+    val found = (0L until cap - 1L).map(a => (a, 5000L)).toSet
+    assert(cross(cap - 1) == found && vsHist(cap - 1) == found)
+    // the curation funnel runs at the default cap
+    val full = Dedup.DefaultMaxBucket.get
+    def kept(n: Int) = graft.operators.Curate.runFast(batch, "doc_id", "text", minQuality = 0.5,
+        historySketch = Some(history(n, Dedup.XxTier)))
+      .curated.select("doc_id").as[Long].collect().sorted.toSeq
+    assert(kept(full) == Seq(5000L, 5001L))
+    assert(kept(full - 1) == Seq(5001L))
+  }
+
+  test("one LSH pair engine: one bucket cap, one banding and one Jaccard merge in src/main") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root))
+    val sources = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(f => root.relativize(f).toString ->
+        new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
+      .toMap
+    def n(text: String, s: String) = text.split(java.util.regex.Pattern.quote(s), -1).length - 1
+    val dedupFile = "graft/operators/Dedup.scala"
+    def member(name: String) = {
+      val src = sources(dedupFile)
+      val i = src.indexOf(s"  def $name(")
+      if (i < 0) "" else src.substring(i, src.indexOf("\n\n", i))
+    }
+    val (cap, banding, merge) = (".observe(", "array_join(transform(slice(", "sortedIntersectCount(")
+    // occurrences outside the one place each may appear
+    val offenders = sources.toSeq.sortBy(_._1).flatMap { case (f, text) =>
+      val inDedup = f == dedupFile
+      Seq(
+        cap -> (n(text, cap) - (if (inDedup) 1 else 0)),
+        banding -> (n(text, banding) - (if (inDedup) n(member("bands"), banding) else 0)),
+        merge -> (if (inDedup) n(text, merge) - n(member("verifyJaccardSources"), merge) else 0))
+        .collect { case (p, stray) if stray > 0 => s"$f: $p x$stray" }
+    }
+    assert(offenders.isEmpty,
+      s"compute LSH pairs through Dedup.lshPairs and Dedup.bands: ${offenders.mkString(", ")}")
+    assert(n(sources(dedupFile), cap) == 1 && n(member("bands"), banding) == 1 &&
+      n(member("verifyJaccardSources"), merge) == 1)
   }
 
   test("fast custom expressions match the declarative formulations") {
