@@ -44,14 +44,15 @@ object Ingest {
     * `spark_partition_id()` and added to the intra-partition position
     * (the low 33 bits of `monotonically_increasing_id()`, which is
     * `pid << 33 | position` by construction). The zipWithIndex
-    * construction — but entirely in the DataFrame API, so bulk ingest
-    * stays inside Tungsten/whole-stage codegen instead of detouring
-    * through an RDD of deserialized Rows (the former
-    * `df.rdd.zipWithIndex` exits columnar execution for every row).
+    * construction without its detour through an RDD of deserialized Rows
+    * (the former `df.rdd.zipWithIndex` exits columnar execution for every
+    * row): the count pass only counts the internal rows of a column-free
+    * projection, and the keyed pass stays in the DataFrame API, inside
+    * Tungsten/whole-stage codegen.
     * Order = partition order (deterministic for sorted file scans).
     * This is the 100 TB path: two narrow passes, no data shuffle —
-    * the count job shuffles |partitions| rows, the offset join is a
-    * broadcast. */
+    * the count pass is one job with no shuffle (each task returns its
+    * partition's row count), the offset join is a broadcast. */
   def withScalableKey(df: DataFrame, keyName: String = "key"): DataFrame =
     withScalableKeyCounted(df, keyName)._1
 
@@ -61,9 +62,17 @@ object Ingest {
   private[graft] def withScalableKeyCounted(df: DataFrame,
                                             keyName: String = "key"): (DataFrame, Long) = {
     val spark = df.sparkSession
-    val counts = df.groupBy(spark_partition_id().as("_pid"))
-      .agg(count(lit(1)).as("_n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
+    // one job, no exchange: an aggregate on spark_partition_id() plans as
+    // a shuffle-map job, an adaptive re-plan and a result job. No column
+    // is projected and no internal row is deserialized; the count is a
+    // Long (Iterator.size counts in an Int).
+    val counts = df.select().queryExecution.toRdd
+      .mapPartitionsWithIndex { (p, rows) =>
+        var n = 0L
+        while (rows.hasNext) { rows.next(); n += 1 }
+        Iterator(p -> n)
+      }
+      .collect()
     var acc = 0L
     val offsets = counts.map { case (p, n) => val o = acc; acc += n; Row(p, o) }
     // LocalRelation (not parallelize): the broadcast side is driver-local
@@ -301,8 +310,8 @@ object Ingest {
     val counts = graft.Pin(df.select(col(keyCol), explode(toks).as("term"))
       .groupBy(keyCol, "term").count()).df
     // ids follow the global sort: explicit range partitioning + local
-    // sort (NOT orderBy — EliminateSorts drops a sort under the key
-    // pass's count aggregate), partition count pinned so AQE cannot
+    // sort (NOT orderBy — a sort the optimizer may drop or re-plan in
+    // either key pass), partition count pinned so AQE cannot
     // coalesce the two passes differently, layout pinned so
     // EVERY pass and every later caller action reads ONE boundary sample
     // (see the scaladoc for why a pin, not a cache)

@@ -28,8 +28,8 @@ object TrainPrep {
     * range exchange moves 16-byte pairs, not documents (callers re-join
     * payloads by id afterwards — at 100 TB that join is id-bucketed and
     * exchange-free). Positions come from range-partition + local sort +
-    * [[graft.ingest.Ingest.withScalableKey]] — a count-only job plus a
-    * broadcast offset join, all in the DataFrame API — never a
+    * [[graft.ingest.Ingest.withScalableKey]] — one count job with no
+    * shuffle plus a broadcast offset join — never a
     * one-partition `row_number()` window or an RDD detour.
     *
     * Cache contract: the result is built on an internal MEMORY_AND_DISK
@@ -53,8 +53,9 @@ object TrainPrep {
     // The global sort is expressed as explicit range partitioning + local
     // sort, NOT `orderBy`: the position pass below evaluates this frame
     // twice (per-partition counts, then the keyed pass), and an orderBy
-    // under the count pass's aggregate would be dropped by EliminateSorts
-    // — silently decoupling the two passes' partitionings. The partition
+    // is a sort the optimizer may drop or re-plan in either pass
+    // (EliminateSorts drops one under an aggregate) — silently
+    // decoupling the two passes' partitionings. The partition
     // COUNT is pinned for the same reason (AQE coalesces an unpinned
     // repartition per execution), and the frame is CACHED because range
     // boundaries are re-SAMPLED per execution with an rdd.id-derived

@@ -35,7 +35,9 @@ import graft.ingest.{Archive, BatchExport, Ingest}
   * deserialize streams one batch at a time ([[BatchExport.epoch]]).
   * Jobs run on one background thread: the reference service is
   * single-dataset by construction (module-level LMDB_DIR), and we keep
-  * that contract rather than invent a multi-tenant scheduler here.
+  * that contract rather than invent a multi-tenant scheduler here. An S5
+  * serialize fans its source passes out from that thread through
+  * [[graft.FanOut]] (the reference's one reader thread per stream).
   */
 final class ControlPlane(spark: SparkSession, workDir: String, port: Int = 0) {
   import ControlPlane._
@@ -68,9 +70,10 @@ final class ControlPlane(spark: SparkSession, workDir: String, port: Int = 0) {
   /** Loss curve of the last completed fit (M1). */
   def trainReport: Option[graft.ml.MimoTrainer.Report] = lastReport
 
-  /** True when a previous serialize's parquet sink is on disk. */
+  /** True when a previous serialize committed its parquet sink. A write
+    * job that failed leaves the directory without `_SUCCESS`. */
   private def sinkExists: Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(s"$sinkDir/$sinkName.parquet"))
+    java.nio.file.Files.exists(java.nio.file.Paths.get(s"$sinkDir/$sinkName.parquet", "_SUCCESS"))
 
   /** Start listening; returns the bound port (ephemeral when `port`=0). */
   def start(): Int = synchronized {
@@ -267,7 +270,7 @@ final class ControlPlane(spark: SparkSession, workDir: String, port: Int = 0) {
     }
     val dataKey = spec \ "data_key" match { case JString(k) => Some(k); case _ => None }
     val bindingPath = s"$dataDir/$file"
-    val binding =
+    val readBinding = () =>
       if (file.endsWith(".csv")) Ingest.readCsv(spark, bindingPath)
       else Ingest.readJson(spark, bindingPath, dataKey)
     def streamsOf(field: String): Seq[Either[Ingest.BindingStream, SideStream]] =
@@ -311,7 +314,7 @@ final class ControlPlane(spark: SparkSession, workDir: String, port: Int = 0) {
     if (!ins.exists(_.isLeft))
       throw new IllegalArgumentException("binding layout needs at least one image input")
     val sides = (ins ++ outs).collect { case Right(s) => s }
-    val widened = attachSideStreams(binding, sides)
+    val widened = if (sides.isEmpty) readBinding() else attachSideStreams(readBinding, sides)
     val images = (ins ++ outs).collect { case Left(b) => b }
     def contentNames(xs: Seq[Either[Ingest.BindingStream, SideStream]]) =
       xs.map { case Left(b) => s"${b.field}_content"; case Right(s) => s"${s.name}_content" }
@@ -323,35 +326,41 @@ final class ControlPlane(spark: SparkSession, workDir: String, port: Int = 0) {
     * row i, the reference's queue pairing). Both sides get a scalable
     * row id in file order; a row-count mismatch between a side file and
     * the binding table fails loudly instead of silently dropping the
-    * excess records. */
-  private def attachSideStreams(binding: org.apache.spark.sql.DataFrame,
+    * excess records. The binding and every side stream are read and
+    * counted as the tasks of one [[graft.FanOut.map]] call, so the
+    * serialize waits for the longest source, not for the sum of them. */
+  private def attachSideStreams(readBinding: () => org.apache.spark.sql.DataFrame,
                                 sides: Seq[SideStream]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    if (sides.isEmpty) return binding
+    val sources = readBinding +: sides.map(ss => () => readSide(ss))
     // the scalable-key pass already computes exact totals — no extra
     // count() scans for the row-parity check
-    val (keyedBinding, nBinding) = Ingest.withScalableKeyCounted(binding, "_row")
-    val widened = sides.foldLeft(keyedBinding) { (acc, ss) =>
-      val path = s"$dataDir/${ss.file}"
-      val cName = s"${ss.name}_content"
-      val content =
-        if (ss.numeric) {
-          // readNumeric: every csv row coerced to one float vector (P2)
-          val df = Ingest.readCsv(spark, path)
-          Ingest.toFeatureVector(df, df.columns.toSeq, cName).select(cName)
-        } else if (ss.file.endsWith(".csv") || ss.file.endsWith(".json")) {
-          val df = if (ss.file.endsWith(".csv")) Ingest.readCsv(spark, path)
-                   else Ingest.readJson(spark, path)
-          df.select(Ingest.selectTextColumn(df, ss.textCol).cast("string").as(cName))
-        } else spark.read.text(path).select(col("value").as(cName))
-      val (keyedSide, nSide) =
-        Ingest.withScalableKeyCounted(content.select(col(cName)), "_row")
+    val keyed = graft.FanOut.map(spark, sources)(read => Ingest.withScalableKeyCounted(read(), "_row"))
+    val (keyedBinding, nBinding) = keyed.head
+    // checked in declared order, so the message names the first
+    // mismatched stream whichever pass finished first
+    sides.zip(keyed.tail).foreach { case (ss, (_, nSide)) =>
       if (nSide != nBinding)
         throw new IllegalArgumentException(
           s"side stream '${ss.file}' has $nSide rows but the binding table has $nBinding")
-      acc.join(keyedSide, "_row")
     }
-    widened.drop("_row")
+    keyed.tail.foldLeft(keyedBinding) { case (acc, (keyedSide, _)) => acc.join(keyedSide, "_row") }
+      .drop("_row")
+  }
+
+  /** One side stream's rows as its single `<name>_content` column. */
+  private def readSide(ss: SideStream): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val path = s"$dataDir/${ss.file}"
+    val cName = s"${ss.name}_content"
+    if (ss.numeric) {
+      // readNumeric: every csv row coerced to one float vector (P2)
+      val df = Ingest.readCsv(spark, path)
+      Ingest.toFeatureVector(df, df.columns.toSeq, cName).select(cName)
+    } else if (ss.file.endsWith(".csv") || ss.file.endsWith(".json")) {
+      val df = if (ss.file.endsWith(".csv")) Ingest.readCsv(spark, path)
+               else Ingest.readJson(spark, path)
+      df.select(Ingest.selectTextColumn(df, ss.textCol).cast("string").as(cName))
+    } else spark.read.text(path).select(col("value").as(cName))
   }
 
   /** Tag each declared stream column with its role and declared position

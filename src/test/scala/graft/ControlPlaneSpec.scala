@@ -34,6 +34,19 @@ class ControlPlaneSpec extends SparkSpec {
     bos.toByteArray
   }
 
+  /** A zip of the given (entry name, bytes) pairs. */
+  private def zipOf(entries: (String, Array[Byte])*): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    val z = new ZipOutputStream(bos)
+    entries.foreach { case (name, bytes) =>
+      z.putNextEntry(new ZipEntry(name))
+      z.write(bytes)
+      z.closeEntry()
+    }
+    z.close()
+    bos.toByteArray
+  }
+
   private def withFixtureServer(bytes: Array[Byte])(f: String => Unit): Unit = {
     val srv = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
@@ -65,6 +78,27 @@ class ControlPlaneSpec extends SparkSpec {
       }
     }
     assert(cp.currentState == want, s"timed out waiting for $want, at ${cp.currentState}")
+  }
+
+  /** The reason `cp` failed with, waiting for it to fail. */
+  private def failureOf(cp: ControlPlane): String = {
+    val deadline = System.currentTimeMillis() + 60000
+    while (!cp.currentState.isInstanceOf[ControlPlane.Failed] &&
+           System.currentTimeMillis() < deadline) Thread.sleep(100)
+    cp.currentState match {
+      case ControlPlane.Failed(why) => why
+      case s => fail(s"expected Failed, at $s")
+    }
+  }
+
+  /** An S5 request with one image input over `imgs/` bound by `in0`,
+    * plus the given numeric side streams (`input` ones after the image). */
+  private def s5Request(zipUrl: String, numericIns: Seq[String], numericOuts: Seq[String]) = {
+    def numeric(fs: Seq[String]) = fs.map(f => s"""{"dataType":"numeric","file":"$f"}""")
+    val ins = """{"dataType":"image","directory":"imgs","binding_field":"in0","extension":".png"}""" +:
+      numeric(numericIns)
+    s"""{"command":"serialize","id":"s5","url":"$zipUrl","image_binding":{"file":"bindings.csv"},
+      "input":[${ins.mkString(",")}],"output":[${numeric(numericOuts).mkString(",")}]}"""
   }
 
   test("full session: poll → serialize → poll → re-serialize → deserialize → trained") {
@@ -307,13 +341,7 @@ class ControlPlaneSpec extends SparkSpec {
                     "binding_field":"in0","extension":".png"}],
           "output":[{"dataType":"tensor","file":"whatever.bin"}]}"""
         assert(post(ep, req) == "Dataset downloaded.")
-        val deadline = System.currentTimeMillis() + 60000
-        while (!cp.currentState.isInstanceOf[ControlPlane.Failed] &&
-               System.currentTimeMillis() < deadline) Thread.sleep(100)
-        cp.currentState match {
-          case ControlPlane.Failed(why) => assert(why.contains("invalid dataType"))
-          case s => fail(s"expected Failed, at $s")
-        }
+        assert(failureOf(cp).contains("invalid dataType"))
       } finally cp.stop()
     }
   }
@@ -500,6 +528,87 @@ class ControlPlaneSpec extends SparkSpec {
         assert(second.epochLosses == first.epochLosses,
           "same roles in the same order give the same seeded fit")
       } finally cp2.stop()
+    }
+  }
+
+  test("restart recovery: a sink whose write job failed is not trusted") {
+    // the dangling-stem assert fails the sink write after its output
+    // directory exists: without a _SUCCESS marker it is not a sink
+    val zip = zipOf("bindings.csv" -> "in0\nx1\nmissing\n".getBytes("UTF-8"),
+      "imgs/x1.png" -> pngBytes(0x202020))
+    withFixtureServer(zip) { zipUrl =>
+      val work = java.nio.file.Files.createTempDirectory("graft-cp-torn").toString
+      val deserialize = """{"command":"deserialize","batch_size":1}"""
+      val cp1 = new ControlPlane(spark, work)
+      val port1 = cp1.start()
+      try {
+        val ep = s"http://127.0.0.1:$port1/download"
+        assert(post(ep, s5Request(zipUrl, Nil, Nil)) == "Dataset downloaded.")
+        assert(failureOf(cp1).contains("binding stem has no file"))
+        assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(cp1.sinkDir, "datumdb.parquet")))
+        assert(post(ep, deserialize) == "Cannot deserialize before serialization.")
+      } finally cp1.stop()
+      val cp2 = new ControlPlane(spark, work)
+      val port2 = cp2.start()
+      try {
+        assert(cp2.currentState == ControlPlane.Idle)
+        assert(post(s"http://127.0.0.1:$port2/download", deserialize) ==
+          "Cannot deserialize before serialization.")
+      } finally cp2.stop()
+    }
+  }
+
+  test("S5 row parity: a side stream whose row count differs from the binding fails") {
+    def rows(n: Int) = ("v1,v2" +: Seq.fill(n)("0.5,1.5")).mkString("", "\n", "\n").getBytes("UTF-8")
+    val zip = zipOf("bindings.csv" -> "in0\nx1\nx2\n".getBytes("UTF-8"),
+      "imgs/x1.png" -> pngBytes(0x112233), "imgs/x2.png" -> pngBytes(0x445566),
+      "labels.csv" -> rows(3), "feats.csv" -> rows(2000))
+    withFixtureServer(zip) { zipUrl =>
+      def failure(ins: Seq[String], outs: Seq[String]): String = {
+        val work = java.nio.file.Files.createTempDirectory("graft-cp-parity").toString
+        val cp = new ControlPlane(spark, work)
+        val port = cp.start()
+        try {
+          assert(post(s"http://127.0.0.1:$port/download", s5Request(zipUrl, ins, outs)) ==
+            "Dataset downloaded.")
+          failureOf(cp)
+        } finally cp.stop()
+      }
+      assert(failure(Nil, Seq("labels.csv")) ==
+        "serialize: side stream 'labels.csv' has 3 rows but the binding table has 2")
+      // both mismatch: the first declared one is named, although the
+      // larger file's pass finishes last
+      assert(failure(Seq("feats.csv"), Seq("labels.csv")) ==
+        "serialize: side stream 'feats.csv' has 2000 rows but the binding table has 2")
+    }
+  }
+
+  test("S5 serialize reads and counts every source in one fan-out before the sink write") {
+    val zip = zipOf("bindings.csv" -> "in0\nx1\nx2\n".getBytes("UTF-8"),
+      "imgs/x1.png" -> pngBytes(0x102030), "imgs/x2.png" -> pngBytes(0x405060),
+      "feats.csv" -> "a,b\n1,2\n3,4\n".getBytes("UTF-8"),
+      "labels.csv" -> "v\n0.5\n1.5\n".getBytes("UTF-8"))
+    withFixtureServer(zip) { zipUrl =>
+      val work = java.nio.file.Files.createTempDirectory("graft-cp-fanout").toString
+      val cp = new ControlPlane(spark, work)
+      val port = cp.start()
+      val (_, starts) = try withJobStarts {
+        assert(post(s"http://127.0.0.1:$port/download",
+          s5Request(zipUrl, Seq("feats.csv"), Seq("labels.csv"))) == "Dataset downloaded.")
+        pollUntil(cp, ControlPlane.Serialized)
+      } finally cp.stop()
+      // the innermost engine frame of a job's call site names its file;
+      // the sink write's jobs are Tables.scala's
+      val frame = """\s*graft\.[\w.$]+\((\w+\.scala):\d+\)""".r
+      def fileOf(e: org.apache.spark.scheduler.SparkListenerJobStart) =
+        e.stageInfos.maxBy(_.stageId).details.linesIterator
+          .collectFirst { case frame(f) => f }.getOrElse("")
+      val sourceJobs = starts.filter(fileOf(_) == "Ingest.scala")
+      assert(sourceJobs.size >= 3, s"${sourceJobs.size} source jobs: one count per source at least")
+      val fanOutTags = sourceJobs.map(jobProperty(_, "spark.job.tags").split(',').toSeq
+        .filter(_.startsWith("graft-fanout-")))
+      assert(fanOutTags.forall(_.size == 1), s"source jobs outside the fan-out: $fanOutTags")
+      assert(fanOutTags.distinct.size == 1, "the sources ran in more than one fan-out call")
     }
   }
 

@@ -61,6 +61,18 @@ class IngestSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"), s"offset add must be a broadcast join:\n$plan")
   }
 
+  test("scalable key counts rows with one job and no shuffle") {
+    // an aggregate on spark_partition_id() would plan a shuffle-map job,
+    // an adaptive re-plan and a result job
+    val df = spark.range(0, 1000, 1, 7).toDF("v")
+    val ((keyed, n), starts) = withJobStarts(Ingest.withScalableKeyCounted(df))
+    assert(n == 1000)
+    assert(starts.size == 1, s"count pass ran ${starts.size} jobs")
+    // a job that reads a shuffle lists its map stage too
+    assert(starts.head.stageInfos.size == 1, "count pass has a shuffle-map stage")
+    assert(keyed.select("key").as[Long].collect().sorted.toSeq == (1L to 1000L))
+  }
+
   test("image dir scan: label from path, sorted key order (S3)") {
     val dir = tmpDir("imgs")
     for (label <- Seq("cat", "dog"); i <- 1 to 2) {
@@ -160,29 +172,14 @@ class IngestSpec extends SparkSpec {
     stems.foreach(st => writePng(Paths.get(s5, s"$st.png")))
     Files.writeString(Paths.get(s5, "bindings.csv"), ("in0\n" +: stems).mkString("\n") + "\n")
 
-    val sc = spark.sparkContext
-    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach(descriptions.add)
-    }
-    sc.addSparkListener(listener)
-    try {
+    val (_, starts) = withJobStarts {
       assert(Ingest.readImageDir(spark, s3).count() == 40)
       assert(Ingest.readImageStreams(spark, s4).count() == 20)
       val binding = Ingest.readCsv(spark, s"$s5/bindings.csv")
       assert(Ingest.readWithBinding(spark, binding, Seq("in0"), s5, ".png").count() == 40)
-      // listener delivery is asynchronous but ordered: once a marker job
-      // started after the readers is seen, every earlier job start is too
-      sc.setJobDescription("ingest-listing-guard-marker")
-      try spark.range(1).count() finally sc.setJobDescription(null)
-      val deadline = System.currentTimeMillis() + 10000
-      while (!descriptions.contains("ingest-listing-guard-marker") &&
-          System.currentTimeMillis() < deadline) Thread.sleep(20)
-      assert(descriptions.contains("ingest-listing-guard-marker"))
-    } finally sc.removeSparkListener(listener)
-    val listing = descriptions.toArray.map(_.toString).filter(_.startsWith("Listing leaf files"))
+    }
+    val listing = starts.map(jobProperty(_, "spark.job.description"))
+      .filter(_.startsWith("Listing leaf files"))
     assert(listing.isEmpty, s"listing jobs started: ${listing.mkString(" | ")}")
   }
 
