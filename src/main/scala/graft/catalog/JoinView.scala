@@ -66,8 +66,7 @@ object JoinView {
     // one batch_id per write: cluster first so the delta lands as ONE
     // file, not one per upstream task (q139 staging-write pattern — every
     // later view read opens one footer per batch instead of dozens)
-    df.withColumn("batch_id", lit(batchId))
-      .repartition(col("batch_id"))
+    Tables.clustered(df.withColumn("batch_id", lit(batchId)), "batch_id")
       .write.option("partitionOverwriteMode", "dynamic")
       .mode("overwrite").partitionBy("batch_id").parquet(dir)
 

@@ -68,12 +68,12 @@ object Materialized {
     * rows and keyed upsert of present rows are no-ops in content). Returns
     * the committed version, or None when the feed derives nothing.
     *
-    * The feed is persisted because both sides and the commit's
-    * partition-value job, anti-join build and pool write all read it; a
-    * diff's exceptAll subtree would otherwise re-execute per consumer.
-    * persist, not a [[graft.Pin]]: building the frame stays lazy, the
-    * blocks survive executor loss by recompute, and they are released
-    * here in `finally`, never leaked to the caller. Both sides land as ONE
+    * The feed is persisted because both sides read it: the commit pins
+    * each side once ([[Snapshots.applyKeyed]]), and without the persist
+    * each pin would re-execute the diff's aggregate subtree. persist, not
+    * a [[graft.Pin]]: building the frame stays lazy, the blocks survive
+    * executor loss by recompute, and they are released here in
+    * `finally`, never leaked to the caller. Both sides land as ONE
     * [[Snapshots.applyKeyed]] commit (one partition read, one pool write,
     * one manifest), where delete-then-upsert paid two read-modify-write
     * cycles; SnapshotsSpec gates the equivalence. */
@@ -127,8 +127,8 @@ object Materialized {
     * files, so the manifest set is a superset and restating a
     * touched-but-content-identical partition (corpus compaction) is a
     * no-op on values — one redundant derived commit, never divergence.
-    * The data diff this replaces read every changed file and paid two
-    * exceptAll shuffles just to learn the partition list. */
+    * The data diff this replaces read every changed file and paid a
+    * shuffle just to learn the partition list. */
   def reconcileAgg(spark: SparkSession, corpusDir: String, derivedDir: String,
                    partCol: String)(aggregate: DataFrame => DataFrame)
       : Option[(Int, Int)] = {

@@ -218,14 +218,15 @@ object Snapshots {
   }
 
   /** Cluster a partitioned commit's rows by the partition column before
-    * the hive-style tmp write: without this, partitionBy fans out to
+    * the hive-style tmp write ([[Tables.clustered]], which also says why
+    * its partition count is fixed): without this, partitionBy fans out to
     * (input tasks × partition values) files — a 32-task batch touching 16
     * partitions writes 512 tiny files, each paying a footer-stats read at
-    * commit and an open at query time. One shuffle keyed on the partition
-    * value makes it ~one file per touched partition. Callers that CRAFT
-    * their layout (compaction) bypass via the raw path. */
+    * commit and an open at query time. With it, one file per touched
+    * partition. Callers that CRAFT their layout (compaction) bypass via
+    * the raw path. */
   private def clustered(df: DataFrame, partCol: Option[String]): DataFrame =
-    partCol.fold(df)(c => df.repartition(col(c)))
+    partCol.fold(df)(Tables.clustered(df, _))
 
   // ---- data-file pool ---------------------------------------------------
 
@@ -497,7 +498,18 @@ object Snapshots {
     * the manifest. The read is PINNED to the current version: a commit
     * landing in between makes the manifest write raise
     * ConcurrentModificationException instead of silently building on
-    * files this commit never read. None when both sides are empty. */
+    * files this commit never read. None when both sides are empty.
+    *
+    * Each side is evaluated once. The updates are checked against the
+    * manifest schema before any job runs; then each side is pinned
+    * ([[graft.Pin]], one job each; the delete side projected to its keys
+    * and partition column), and the partition-value job, the anti-join
+    * build and the pool write all read the pins. Unpinned, a side whose
+    * lineage is a diff or a join re-ran once per consumer (the updates
+    * three times). The pins' counts answer the empty check, and the pins
+    * are released in `finally`, on success and on failure. A lost pin
+    * block fails the commit naming `Checkpoint block rdd_`, before any
+    * manifest is written. */
   private def keyedCommit(spark: SparkSession, dir: String,
                           deleteKeys: Option[DataFrame], updates: Option[DataFrame],
                           keyCols: Seq[String]): Option[Int] = {
@@ -507,22 +519,30 @@ object Snapshots {
       throw new IllegalArgumentException(s"snapshots: $dir is not partitioned"))
     deleteKeys.foreach(d => require(d.columns.contains(partCol),
       s"snapshots: deleteKeys must carry $partCol"))
-    val sides = deleteKeys.toSeq ++ updates
-    // ONE job surfaces both sides' touched partitions
-    val values = sides.map(_.select(col(partCol).cast("string"))).reduce(_ unionAll _)
-      .distinct().collect().map(_.getString(0)).toSeq
-    if (values.isEmpty) return None
-    require(!values.contains(null), s"snapshots: null $partCol in keyed batch")
-    val sorted = values.sorted
-    val base = readPartitions(spark, dir, sorted, Some(cur.version))
-    updates.foreach(u => require(base.columns.toSet == u.columns.toSet,
+    val tableCols = org.apache.spark.sql.types.StructType.fromDDL(cur.schemaDdl).fieldNames.toSeq
+    updates.foreach(u => require(tableCols.toSet == u.columns.toSet,
       s"snapshots: updates schema ${u.columns.sorted.mkString(",")} != " +
-        s"table schema ${base.columns.sorted.mkString(",")}"))
-    val rmKeys = sides.map(_.select(keyCols.map(col): _*)).reduce(_ unionAll _)
-    val keep = base.join(broadcast(rmKeys), keyCols, "left_anti")
-    val merged = updates.fold(keep)(u => keep.unionByName(u.select(base.columns.map(col): _*)))
-    Some(replacePartitionsRaw(spark, dir, clustered(merged, cur.partCol),
-      dropValues = sorted, base = Some(cur)))
+        s"table schema ${tableCols.sorted.mkString(",")}"))
+    val pins = ArrayBuffer.empty[graft.Pin]
+    def pinned(df: DataFrame): DataFrame = { val p = graft.Pin(df); pins += p; p.df }
+    try {
+      val dels = deleteKeys.map(d => pinned(d.select((keyCols :+ partCol).distinct.map(col): _*)))
+      val ups = updates.map(u => pinned(u.select(tableCols.map(col): _*)))
+      if (pins.forall(_.rows == 0)) None
+      else {
+        val sides = dels.toSeq ++ ups
+        val values = sides.map(_.select(col(partCol).cast("string"))).reduce(_ unionAll _)
+          .distinct().collect().map(_.getString(0)).toSeq
+        require(!values.contains(null), s"snapshots: null $partCol in keyed batch")
+        val sorted = values.sorted
+        val base = readPartitions(spark, dir, sorted, Some(cur.version))
+        val rmKeys = sides.map(_.select(keyCols.map(col): _*)).reduce(_ unionAll _)
+        val keep = base.join(broadcast(rmKeys), keyCols, "left_anti")
+        val merged = ups.fold(keep)(keep.unionByName(_))
+        Some(replacePartitionsRaw(spark, dir, clustered(merged, cur.partCol),
+          dropValues = sorted, base = Some(cur)))
+      }
+    } finally pins.foreach(_.release())
   }
 
   /** Small-file compaction as a normal snapshot commit (the OPTIMIZE
@@ -643,7 +663,7 @@ object Snapshots {
     * cancel to empty. Callers that RESTATE touched partitions from the
     * source ([[Materialized.reconcileAgg]]) converge either way, and at
     * 100 TB learning the touched set from manifests costs O(metadata)
-    * where a data diff pays (changed files read) + an exceptAll shuffle
+    * where a data diff pays (changed files read) + an aggregate shuffle
     * before the first useful byte of work. */
   def changedPartitions(spark: SparkSession, dir: String, fromV: Int, toV: Int): Seq[String] = {
     val m1 = manifest(spark, dir, Some(fromV))
@@ -655,13 +675,20 @@ object Snapshots {
 
   /** Change-data-feed between two versions: every row inserted or deleted
     * from `fromV` to `toV`, tagged `_change` ∈ {insert, delete} (an update
-    * surfaces as delete + insert, bag semantics via exceptAll). Because
-    * commits are copy-on-write at file granularity, files common to both
-    * manifests CANNOT contribute changes and are never read — the diff
-    * costs (changed files only) + one exceptAll shuffle over those rows,
-    * work ∝ the touched fraction, not the table. This is what lets a
-    * downstream consumer (index maintainer, replica, audit) follow a
-    * 100 TB table by reading deltas instead of re-scanning. */
+    * surfaces as delete + insert). Because commits are copy-on-write at
+    * file granularity, files common to both manifests CANNOT contribute
+    * changes and are never read — the diff costs (changed files only) +
+    * one aggregate shuffle over those rows, work ∝ the touched fraction,
+    * not the table. This is what lets a downstream consumer (index
+    * maintainer, replica, audit) follow a 100 TB table by reading deltas
+    * instead of re-scanning.
+    *
+    * Both directions come from that one aggregate: added rows count +1,
+    * removed rows −1, grouped by every column of the newer schema (nulls
+    * group as equal); a row whose net count n is non-zero is emitted |n|
+    * times, as insert for n > 0 and delete for n < 0: the bag difference
+    * `exceptAll` gives in each direction, from one shuffle instead of
+    * one per direction. */
   def diff(spark: SparkSession, dir: String, fromV: Int, toV: Int): DataFrame = {
     val m1 = manifest(spark, dir, Some(fromV))
     val m2 = manifest(spark, dir, Some(toV))
@@ -675,8 +702,13 @@ object Snapshots {
       if (removed0.columns.contains(f.name)) col(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }.toSeq: _*)
-    added.exceptAll(removed).withColumn("_change", lit("insert"))
-      .unionByName(removed.exceptAll(added).withColumn("_change", lit("delete")))
+    val cols = s2.fieldNames.toSeq.map(col)
+    added.withColumn("__n", lit(1L)).unionByName(removed.withColumn("__n", lit(-1L)))
+      .groupBy(cols: _*).agg(sum("__n").as("__n"))
+      .filter(col("__n") =!= 0)
+      .select(cols :+ explode(array_repeat(
+        when(col("__n") > 0, lit("insert")).otherwise(lit("delete")),
+        abs(col("__n")).cast("int"))).as("_change"): _*)
   }
 
   // ---- retention --------------------------------------------------------

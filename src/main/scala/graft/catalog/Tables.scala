@@ -1,7 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.LongType
 
 /** Named-table catalog over Parquet directories.
@@ -230,6 +230,19 @@ object Tables {
       case _ => df
     }
   }
+
+  /** Clusters `df` by `column` ahead of a `partitionBy(column)` write: one
+    * shuffle keyed on the value, so the write lands ~one file per value
+    * instead of one per (upstream task, value). The partition count is
+    * fixed at the session's shuffle-partition count because AQE never
+    * coalesces a repartition with an explicit count, while it folds a
+    * small by-column repartition (a commit touching three values) into
+    * one partition, and the whole write then runs as one task on one
+    * core. Each value still hashes to exactly one partition, so there is
+    * still one file per value; partitions no value hashes to write
+    * nothing. */
+  private[graft] def clustered(df: DataFrame, column: String): DataFrame =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, col(column))
 
   /** Scan task count estimated from the FILE LISTING — the same
     * size-plus-open-cost bin-packing arithmetic Spark's FilePartition

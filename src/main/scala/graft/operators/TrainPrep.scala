@@ -298,7 +298,7 @@ object TrainPrep {
       // clustered by shard: one file per shard instead of one per
       // (upstream task, shard) — the export contract is "a shard is a
       // unit a trainer maps", and confetti files break that economy
-      assigned.repartition(col("shard"))
+      graft.catalog.Tables.clustered(assigned, "shard")
         .write.mode("overwrite").partitionBy("shard").parquet(s"$dir/data")
       // |shards| rows: pin them so the returned frame and the json write
       // never re-derive from the (about to be unpersisted) plan

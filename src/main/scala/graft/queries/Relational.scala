@@ -1942,7 +1942,7 @@ object Relational {
     // ---- change-data-feed between snapshot versions ----------------------
     // Snapshots.diff: copy-on-write commits mean files common to both
     // manifests cannot contribute changes and are never read — the feed
-    // costs (changed files) + one exceptAll over those rows, ∝ the touched
+    // costs (changed files) + one aggregate over those rows, ∝ the touched
     // fraction (SnapshotsSpec proves untouched files stay closed). The
     // oracle states the change set DECLARATIVELY (what a logical diff of
     // the two states must contain), hash-gating the physical file-diff
@@ -2405,7 +2405,7 @@ object Relational {
         // week, not tasks x weeks small files (each appendBatch then
         // opens one footer; at cluster scale add more distribution keys
         // alongside wk to keep write parallelism)
-        wk.repartition(col("wk")).write.partitionBy("wk").parquet(staging)
+        Tables.clustered(wk, "wk").write.partitionBy("wk").parquet(staging)
         // list the written partitions through the SAME Hadoop FS layer
         // that wrote them (a java.io.File listing silently assumes a
         // CWD-relative local warehouse — NPE on any other defaultFS)

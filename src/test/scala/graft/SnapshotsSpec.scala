@@ -2,6 +2,10 @@ package graft
 
 import java.nio.file.Files
 import graft.catalog.Snapshots
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.util.LongAccumulator
 
 class SnapshotsSpec extends SparkSpec {
   import spark.implicits._
@@ -302,6 +306,41 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.diff(spark, dir, 3, 4).isEmpty)
   }
 
+  test("diff has bag semantics: multiplicities net out, nulls group as equal") {
+    val dir = freshDir()
+    // partition a holds id 7 three times; partition b holds a null-valued
+    // row twice
+    val nul: String = null
+    val v1 = Seq((7L, "seven", "a"), (7L, "seven", "a"), (7L, "seven", "a"),
+      (1L, "one", "a"), (8L, nul, "b"), (8L, nul, "b"), (3L, "three", "b"))
+    Snapshots.init(spark, dir, v1.toDF("id", "v", "p"), Some("p"))
+    Snapshots.replacePartitions(spark, dir, Seq((7L, "seven", "a"), (1L, "one", "a"),
+      (8L, nul, "b"), (3L, "three", "b")).toDF("id", "v", "p"))
+    def changes(from: Int, to: Int) = {
+      val d = Snapshots.diff(spark, dir, from, to)
+      assert(d.columns.toSeq == Seq("id", "v", "p", "_change"))
+      d.as[(Long, String, String, String)].collect().toSeq.sortBy(r => (r._1, r._4))
+    }
+    assert(changes(1, 2) == Seq.fill(2)((7L, "seven", "a", "delete")) ++
+      Seq((8L, nul, "b", "delete")))
+    // the reverse diff re-inserts the same copies
+    assert(changes(2, 1) == Seq.fill(2)((7L, "seven", "a", "insert")) ++
+      Seq((8L, nul, "b", "insert")))
+    // a content-neutral rewrite of duplicated rows cancels to nothing
+    Snapshots.compactPartitions(spark, dir, Seq("a", "b"), sortBy = Some("id"))
+    assert(changes(2, 3).isEmpty)
+    assert(changes(1, 3) == changes(1, 2))
+  }
+
+  test("diff shuffles the changed rows once, in one aggregate") {
+    val dir = freshDir()
+    Snapshots.init(spark, dir, base.toDF("id", "v", "p"), Some("p"))
+    Snapshots.upsert(spark, dir, Seq((1L, "ONE", "a")).toDF("id", "v", "p"), Seq("id"))
+    val plan = Snapshots.diff(spark, dir, 1, 2).queryExecution.executedPlan.toString
+    // two exceptAlls held one hash exchange each
+    assert("Exchange hashpartitioning".r.findAllMatchIn(plan).size == 1, plan)
+  }
+
   test("a torn manifest (no #end) is invisible; current falls back") {
     val dir = freshDir()
     Snapshots.init(spark, dir, base.toDF("id", "v", "p"), Some("p"))
@@ -467,6 +506,87 @@ class SnapshotsSpec extends SparkSpec {
     intercept[IllegalArgumentException](Snapshots.applyKeyed(spark, dir, unpartitionedKeys,
       Seq((1L, "ONE", "a")).toDF("id", "v", "p"), Seq("id")))
     assert(rows(dir) == base.toSet)
+  }
+
+  test("a partitioned commit writes one file per value with every shuffle partition as a task") {
+    val dir = freshDir()
+    val nParts = spark.sessionState.conf.numShufflePartitions
+    val (_, jobs) = withJobStarts(Snapshots.init(spark, dir, base.toDF("id", "v", "p"), Some("p")))
+    // the last job is the pool write; AQE folded a by-column repartition
+    // of three small values into one writer task
+    val write = jobs.maxBy(_.jobId).stageInfos.maxBy(_.stageId)
+    assert(nParts > 1 && write.numTasks == nParts, s"pool write ran ${write.numTasks} tasks")
+    val files = Snapshots.fileList(spark, dir, 1).groupBy(_._2).view.mapValues(_.size).toMap
+    assert(files == Map("a" -> 1, "b" -> 1, "c" -> 1))
+    assert(rows(dir) == base.toSet)
+  }
+
+  test("applyKeyed evaluates each batch side once and leaves no pin, committed or rejected") {
+    val dir = freshDir()
+    Snapshots.init(spark, dir, base.toDF("id", "v", "p"), Some("p"))
+    val sc = spark.sparkContext
+    // every read of a side runs its filter once per row
+    def counted(df: DataFrame): (DataFrame, LongAccumulator) = {
+      val reads = sc.longAccumulator
+      (df.filter(udf { (_: Long) => reads.add(1); true }.apply(col("id"))), reads)
+    }
+    val (dels, delReads) = counted(sc.parallelize(Seq((2L, "a"), (5L, "c")), 2).toDF("id", "p"))
+    val (ups, upReads) = counted(sc.parallelize(
+      Seq((1L, "ONE", "a"), (9L, "nine", "b"), (10L, "ten", "b")), 2).toDF("id", "v", "p"))
+    val before = sc.getPersistentRDDs.keySet
+    assert(Snapshots.applyKeyed(spark, dir, dels, ups, Seq("id")) == Some(2))
+    // one read per row of each side (2 deletes, 3 updates); unpinned, the
+    // delete side was read twice and the update side three times
+    assert(delReads.value == 2 && upReads.value == 3, s"${delReads.value}, ${upReads.value}")
+    assert(rows(dir) == Set((1L, "ONE", "a"), (3L, "three", "b"), (4L, "four", "b"),
+      (9L, "nine", "b"), (10L, "ten", "b")))
+    assert(sc.getPersistentRDDs.keySet == before)
+    val emptyKeys = spark.emptyDataset[(Long, String)].toDF("id", "p")
+    val e = intercept[IllegalArgumentException](Snapshots.applyKeyed(spark, dir, emptyKeys,
+      Seq((6L, "six", null.asInstanceOf[String])).toDF("id", "v", "p"), Seq("id")))
+    assert(e.getMessage.contains("null p in keyed batch"), e.getMessage)
+    assert(Snapshots.currentVersion(spark, dir) == 2)
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
+  test("a lost keyed-batch pin fails the commit loudly; the table and the session stay as they were") {
+    val dir = freshDir()
+    Snapshots.init(spark, dir, base.toDF("id", "v", "p"), Some("p"))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val dropped = new java.util.concurrent.atomic.AtomicReference(Set.empty[Int])
+    // drop the pins' blocks once the first job after the pin jobs starts
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val pins = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+        if (dropped.get.isEmpty && pins.nonEmpty && !e.stageInfos.exists(_.name.contains("Pin.scala"))) {
+          dropped.set(pins.keySet.toSet)
+          pins.values.foreach(_.unpersist(blocking = true))
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    val e = try intercept[Exception](Snapshots.applyKeyed(spark, dir,
+      Seq((2L, "a")).toDF("id", "p"), Seq((9L, "nine", "b")).toDF("id", "v", "p"), Seq("id")))
+    finally sc.removeSparkListener(listener)
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+    assert(dropped.get.size == 2, dropped.get)
+    assert(messages.contains("Checkpoint block rdd_"), messages)
+    assert(Snapshots.currentVersion(spark, dir) == 1)
+    assert(rows(dir) == base.toSet)
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
+  test("one way to cluster a partitioned write: no by-column repartition in main sources") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root))
+    val offenders = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(f => new String(java.nio.file.Files.readAllBytes(f), "UTF-8").contains("repartition(col("))
+      .toSeq
+    assert(offenders.isEmpty, s"cluster through catalog.Tables.clustered: ${offenders.mkString(", ")}")
   }
 
   test("non-filesystem-plain and null partition values are rejected at commit") {
